@@ -1,20 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // quirk Q9: pandas float semantics (x/0 -> inf, 0/0 -> NaN), not ANSI errors
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.cores)
     // warm the JVM paths (parquet reader, codegen compiler, shuffle) once so
     // startup cost isn't attributed to whichever query happens to run first
     try SparkEntry.queries.headOption.foreach(_._2(spark, sfDir).limit(1).count())

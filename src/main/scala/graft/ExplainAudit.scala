@@ -4,30 +4,23 @@ package graft
   * plan's exchanges, parquet scans, broadcast joins, and flags the two
   * 100-TB red flags (CartesianProduct, empty-partition Window). With no
   * args audits every query and writes PLANS.md; with query names, prints
-  * those audits to stdout. Counts come from the pre-AQE physical plan
-  * (upper bounds: AQE's runtime exchange reuse can only remove work). */
+  * each audit row followed by the query's formatted plan. Counts come
+  * from the pre-AQE physical plan (upper bounds: AQE's runtime exchange
+  * reuse can only remove work). */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // quirk Q9: pandas float semantics (x/0 -> inf, 0/0 -> NaN), not ANSI errors
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      // audit-only: with AQE on, the pre-execution plan is an unexpanded
-      // AdaptiveSparkPlan wrapper — codegen stages and final exchanges only
-      // appear per-stage at runtime. The static (AQE-off) plan is the
-      // conservative upper bound the audit wants.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores whatever the machine, so PLANS.md does not depend on it
+    val spark = Session(4)
+    // audit-only: with AQE on, the pre-execution plan is an unexpanded
+    // AdaptiveSparkPlan wrapper — codegen stages and final exchanges only
+    // appear per-stage at runtime. The static (AQE-off) plan is the
+    // conservative upper bound the audit wants.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val dir = "/root/testdata/sf0.01"
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    def audit(name: String): (String, String) = {
-      val qe = SparkEntry.queries(name)(spark, dir).queryExecution
+    def audit(name: String): String = {
+      val df = SparkEntry.queries(name)(spark, dir)
+      val qe = df.queryExecution
       val plan = qe.executedPlan.toString
       val lines = plan.linesIterator.toList
       def n(s: String) = lines.count(_.contains(s))
@@ -42,7 +35,8 @@ object ExplainAudit {
       val row = s"| $name | ${n("Exchange")} | ${n("Scan parquet")} | " +
         s"${n("BroadcastHashJoin")} | ${n("SortMergeJoin")} | $pushed | $codegenSpans | " +
         s"${if (flags.isEmpty) "" else flags.mkString(" ")} |"
-      (name, row)
+      if (args.nonEmpty) { println(row); df.explain("formatted") }
+      row
     }
     val rows = names.map(audit)
     if (args.isEmpty) {
@@ -69,11 +63,11 @@ object ExplainAudit {
           |
           || query | exchanges | parquet scans | broadcast joins | sort-merge joins | scans w/ pushed filters | codegen spans | flags |
           ||---|---|---|---|---|---|---|---|""".stripMargin
-      val body = rows.map(_._2).mkString("\n")
+      val body = rows.mkString("\n")
       java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
         (header + "\n" + body + "\n").getBytes("UTF-8"))
       println(s"wrote PLANS.md (${rows.size} queries)")
-    } else rows.foreach { case (_, r) => println(r) }
+    }
     spark.stop()
   }
 }

@@ -10,17 +10,8 @@ import scala.collection.mutable
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = sys.env.getOrElse("TQ_DIR", "/root/testdata/sf0.1")
+    val spark = Session(Session.cores)
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     case class StageRec(id: Int, name: String, tasks: Int, ms: Long,
       shufWrite: Long, shufRead: Long)

@@ -408,21 +408,11 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runStress = sys.env.get("SPARK_GRAFT_STRESS")
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     val scaledDir = "target/scaleprobe"
     val stressDir = "target/scaleprobe-stress"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.cores)
 
     scaledDocuments(spark, sfDir, Repl)
       .write.mode("overwrite").parquet(s"$scaledDir/documents.parquet")

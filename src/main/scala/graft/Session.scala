@@ -1,0 +1,32 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one place a graft SparkSession is configured. Every main and the
+  * test suite get their session here, so query semantics (time zone,
+  * float division, timestamp decoding, codegen kernels, state store) do
+  * not depend on how a query is launched. */
+object Session {
+  /** Local cores: `SPARK_GRAFT_CPUS`, else every processor of the JVM. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A `local[cores]` session with one shuffle partition per core. */
+  def apply(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // quirk Q9: pandas float semantics (x/0 -> inf, 0/0 -> NaN), not ANSI errors
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
+      // transformWithState requires RocksDB; the other stateful operators run on it too
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

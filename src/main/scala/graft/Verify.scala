@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,25 +8,9 @@ object Verify {
     // (builder-side iteration loop, same convention as Bench).
     val Array(sfDir, outDir) = args.take(2)
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // quirk Q9: pandas float semantics (x/0 -> inf, 0/0 -> NaN), not ANSI errors
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the correctness gate runs every declared query once: let the five
-    // dedup-family queries share their identical candidate pipeline (an
-    // eager localCheckpoint — bit-identical rows, gate-only; Bench never
-    // sets this, so measured per-query costs stay honest)
-    queries.SimilarityQueries.shareCtes = true
+    val spark = Session(Session.cores)
     new java.io.File(outDir).mkdirs()
-    try SparkEntry.queries
+    SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }
       .foreach { case (name, fn) =>
       System.err.println(s"[verify] running $name")
@@ -36,7 +19,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-    } finally queries.SimilarityQueries.resetShared()
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

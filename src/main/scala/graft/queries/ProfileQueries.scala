@@ -103,7 +103,7 @@ object ProfileQueries {
       def pick(tpe: String, on: String, mm: String) =
         (if (kind == on) col(mm) else lit(null)).cast(tpe)
       vc.agg(
-        sum(col("cnt")).as("n_rows"),
+        coalesce(sum(col("cnt")), lit(0L)).cast("long").as("n_rows"),
         coalesce(sum(when(col(c).isNull, col("cnt"))), lit(0L))
           .cast("long").as("n_nulls"),
         count(when(col(c).isNotNull, lit(1))).cast("long").as("n_distinct"),

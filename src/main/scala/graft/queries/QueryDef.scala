@@ -6,8 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * an equivalent ANSI SQL string the driver runs in DuckDB over the same
   * parquet tables (driver contract, SparkEntry.scala).
   *
-  * Every query must be deterministic: explicit ORDER BY on a unique key, and
-  * exact (decimal-backed) aggregation for doubles — see [[graft.engine.Det]].
+  * Every query must be deterministic: a unique row multiset (row order is
+  * not part of the contract; the driver and tools/parity.py sort rows
+  * themselves), and exact (decimal-backed) aggregation for doubles — see
+  * [[graft.engine.Det]].
   */
 final case class Q(
     name: String,

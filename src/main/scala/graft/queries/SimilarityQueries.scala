@@ -394,64 +394,31 @@ object SimilarityQueries {
 
   private def minhashPairCtes: String = minhashPairCtesWith(plantedCte)
 
-  /** Correctness-gate-scoped memo for the shared candidate pipeline: FIVE
-    * dedup-family queries (minhash_neardup, dedup_components,
-    * dedup_canonical, neardup_verify, incremental family) declare the
-    * same planted-twin MinHash candidate frame and recompute it per query
-    * in a Verify run (~3.4s each at sf0.1). [[graft.Verify]] flips
-    * [[shareCtes]] on, and the (planted, pairs) frames are then built
-    * ONCE per (session, dir) and pinned with an eager localCheckpoint —
-    * results are bit-identical (a checkpoint only cuts lineage; the rows
-    * are whatever the declared plan produced), and the DECLARED plans are
-    * untouched for every other caller: Bench and library users never set
-    * the flag, so they keep the honest per-query cost. Keyed by session
-    * too, so test sessions never leak frames across restarts. */
-  @volatile var shareCtes: Boolean = false
-  private val pipeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
   /** Spark pipeline [[minhashPairCtes]] mirrors: (planted docs, candidate
     * pairs). Per-row HOF signatures (shuffle-free; slot-equal to the
     * aggregation path by SimilaritySpec). */
   private def minhashPlantedAndPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    def build(): (DataFrame, DataFrame) = {
-      val planted = plantedDocs(s, dir)
-      // spread before the md5 signature kernel: the documents scan is 1-2
-      // partitions and the per-row shingle+digest work otherwise runs on
-      // that many cores (measured: the 2-task signature stage was the
-      // single largest slice of every dedup-family query at sf0.1)
-      val sig = Similarity.withMinhashSignature(
-          Tables.spread(planted, col("doc_id")), "text", k = MinhashK)
-        .drop("text")
-      // LAZY checkpoint: several consumers (ROUGE's two overlap joins +
-      // its readout, recall grading) reference the pair frame more than
-      // once per query, and each reference otherwise re-runs the band
-      // self-join + distinct; lazy, so single-consumer queries pay only
-      // the in-passing cache write. (An optimization round ALSO measured
-      // the eager form — one pinned execution, no concurrent-consumer
-      // race — and it regressed every single-consumer family member by
-      // 0.5-1.1s: the extra blocking materialization + cache round-trip
-      // costs more than the occasional duplicated stage saves.)
-      val pairs = Similarity.lshCandidatePairs(sig, "doc_id", k = MinhashK,
-        bands = MinhashBands, bandKey = cols => concat_ws(",", cols: _*))
-        .localCheckpoint(false)
-      (planted, pairs)
-    }
-    if (!shareCtes) build()
-    else pipeMemo.getOrElseUpdate((s, dir), {
-      val (planted, pairs) = build()
-      (planted.localCheckpoint(eager = true),
-        pairs.localCheckpoint(eager = true))
-    })
-  }
-
-  /** Undo [[shareCtes]] and drop every memoized frame. [[graft.Verify]]
-    * calls this in a `finally` so a Bench or library caller in the same
-    * JVM after a Verify run measures the honest declared plans, and the
-    * memo's session/DataFrame references don't outlive the gate. */
-  def resetShared(): Unit = {
-    shareCtes = false
-    pipeMemo.clear()
+    val planted = plantedDocs(s, dir)
+    // spread before the md5 signature kernel: the documents scan is 1-2
+    // partitions and the per-row shingle+digest work otherwise runs on
+    // that many cores (measured: the 2-task signature stage was the
+    // single largest slice of every dedup-family query at sf0.1)
+    val sig = Similarity.withMinhashSignature(
+        Tables.spread(planted, col("doc_id")), "text", k = MinhashK)
+      .drop("text")
+    // LAZY checkpoint: several consumers (ROUGE's two overlap joins +
+    // its readout, recall grading) reference the pair frame more than
+    // once per query, and each reference otherwise re-runs the band
+    // self-join + distinct; lazy, so single-consumer queries pay only
+    // the in-passing cache write. (An optimization round ALSO measured
+    // the eager form — one pinned execution, no concurrent-consumer
+    // race — and it regressed every single-consumer family member by
+    // 0.5-1.1s: the extra blocking materialization + cache round-trip
+    // costs more than the occasional duplicated stage saves.)
+    val pairs = Similarity.lshCandidatePairs(sig, "doc_id", k = MinhashK,
+      bands = MinhashBands, bandKey = cols => concat_ws(",", cols: _*))
+      .localCheckpoint(false)
+    (planted, pairs)
   }
 
   /** MinHash+LSH near-dup candidates over documents (8 bands x 2 rows on a

@@ -1229,7 +1229,7 @@ object Streams {
     * assignments stream out as docs arrive, with one Long of state per
     * bucket. Bucket/budget/namespace constants are single-sourced from
     * [[graft.functions.Text]] so batch and stream agree bit-for-bit.
-    * Requires the RocksDB state store provider (as [[sessionizeTws]]). */
+    * Requires the RocksDB state store provider ([[graft.Session]] sets it). */
   def packShards(docs: DataFrame): Dataset[ShardAssignment] = {
     import docs.sparkSession.implicits._
     import graft.functions.Text
@@ -1247,7 +1247,7 @@ object Streams {
   /** Streaming funnel (see [[FunnelProcessor]]): stage transitions stream
     * out as each user crosses view -> click -> purchase in strict
     * event-time order, with one (stage, anchor) pair of state per user.
-    * Requires the RocksDB state store provider (as [[sessionizeTws]]). */
+    * Requires the RocksDB state store provider ([[graft.Session]] sets it). */
   def funnelStages(events: Dataset[StreamEvent],
       steps: Seq[String] = Seq("view", "click", "purchase")): Dataset[FunnelTransition] = {
     import events.sparkSession.implicits._
@@ -1258,7 +1258,7 @@ object Streams {
 
   /** Streaming transition extraction (see [[TransitionProcessor]]): one
     * string of state per user. Requires the RocksDB state store provider
-    * (as [[sessionizeTws]]). */
+    * ([[graft.Session]] sets it). */
   def eventTransitions(events: Dataset[TransEvent]): Dataset[Transition] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
@@ -1269,7 +1269,7 @@ object Streams {
   /** Streaming user-lifetime maintenance (see [[LifetimeProcessor]]):
     * the incremental twin of q_survival_km's user-grain aggregation —
     * five fields of state per user, order-insensitive folds. Requires
-    * the RocksDB state store provider (as [[sessionizeTws]]). */
+    * the RocksDB state store provider ([[graft.Session]] sets it). */
   def userLifetimes(events: Dataset[TransEvent]): Dataset[UserLifetime] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
@@ -1280,8 +1280,8 @@ object Streams {
   /** Streaming anomaly detection (see [[AnomalyProcessor]]): 2-sigma
     * trailing-window flags stream out per user with a ring buffer of at
     * most 8 longs of state per key — the incremental twin of
-    * q_anomaly_zscore. Requires the RocksDB state store provider (as
-    * [[sessionizeTws]]). */
+    * q_anomaly_zscore. Requires the RocksDB state store provider
+    * ([[graft.Session]] sets it). */
   def anomalyFlags(events: Dataset[AnomEvent]): Dataset[AnomalyFlag] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
@@ -1291,8 +1291,8 @@ object Streams {
 
   /** Streaming activity-streak maintainer (see [[StreakProcessor]]): the
     * incremental form of q_streak_islands with five longs of state per
-    * user. Requires the RocksDB state store provider (as
-    * [[sessionizeTws]]). */
+    * user. Requires the RocksDB state store provider
+    * ([[graft.Session]] sets it). */
   def activityStreaks(events: Dataset[DayEvent]): Dataset[StreakUpdate] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
@@ -1308,7 +1308,7 @@ object Streams {
     * `update` output mode: each hour's count rises as sessions close into
     * it, and the last update per hour equals the batch answer once every
     * session is closed (flush rows, event_id < 0, close the stragglers).
-    * Requires the RocksDB state store provider (as [[sessionizeTws]]). */
+    * Requires the RocksDB state store provider ([[graft.Session]] sets it). */
   def sessionConcurrency(events: Dataset[ConcInput],
       gapMs: Long = 10L * 60 * 1000): DataFrame = {
     import events.sparkSession.implicits._
@@ -1322,7 +1322,7 @@ object Streams {
   /** Streaming SCD2 APPLY (see [[Scd2Processor]]): maintains
     * q_scd2_build's versioned dimension incrementally — closed version
     * rows are final; the open row per key is re-emitted as it changes.
-    * Requires the RocksDB state store provider (as [[sessionizeTws]]). */
+    * Requires the RocksDB state store provider ([[graft.Session]] sets it). */
   def scd2Apply(changes: Dataset[Scd2Input]): Dataset[Scd2Version] = {
     import changes.sparkSession.implicits._
     changes.groupByKey(_.user_id)
@@ -1332,7 +1332,7 @@ object Streams {
 
   /** Streaming point-in-time lookup (see [[PitProcessor]]): the online
     * serving form of q_pit_join with one PitState of state per user.
-    * Requires the RocksDB state store provider (as [[sessionizeTws]]). */
+    * Requires the RocksDB state store provider ([[graft.Session]] sets it). */
   def pitLookup(events: Dataset[PitInput]): Dataset[PitLookup] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
@@ -1343,8 +1343,8 @@ object Streams {
   /** Streaming per-source document cap (see [[CapProcessor]]): the
     * incremental form of q_source_cap for a continuously-arriving corpus —
     * admissions stream out while a source is under its cap, with one Long
-    * of state per source. Requires the RocksDB state store provider (as
-    * [[sessionizeTws]]). */
+    * of state per source. Requires the RocksDB state store provider
+    * ([[graft.Session]] sets it). */
   def sourceCap(docs: DataFrame, cap: Long): Dataset[CapAdmission] = {
     import docs.sparkSession.implicits._
     docs.select(col("doc_id"), col("source"))
@@ -1355,9 +1355,8 @@ object Streams {
   }
 
   /** [[sessionize]] on the Spark 4 `transformWithState` API (see
-    * [[SessionProcessor]]). Requires the RocksDB state store provider:
-    * `spark.sql.streaming.stateStore.providerClass =
-    * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`. */
+    * [[SessionProcessor]]). Requires the RocksDB state store provider,
+    * which [[graft.Session]] sets. */
   def sessionizeTws(events: Dataset[StreamEvent], gapMs: Long): Dataset[UserSession] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
@@ -1372,7 +1371,7 @@ object Streams {
     * through the blocking key, so the accepted-link graph is a disjoint
     * union of per-block graphs and transitive closure can never cross
     * blocks — per-block state is complete state. Requires the RocksDB
-    * state store provider (as [[sessionizeTws]]). */
+    * state store provider ([[graft.Session]] sets it). */
   def goldenRecords(customers: Dataset[CustArrival]): Dataset[GoldenRecord] = {
     import customers.sparkSession.implicits._
     customers.groupByKey(c => {

@@ -31,6 +31,17 @@ class ProfileSpec extends SparkSpec {
     assert(sd.getAs[Timestamp]("min_ts") != null)
   }
 
+  test("table profile of an empty lineitem counts zero rows, not NULL") {
+    val d = Files.createTempDirectory("graft-profile-empty").toString
+    spark.read.parquet(s"$sf/lineitem.parquet").limit(0)
+      .write.parquet(s"$d/lineitem.parquet")
+    val rows = ProfileQueries.tableProfile.build(spark, d).collect()
+    assert(rows.length == 7)
+    for (c <- Seq("n_rows", "n_nulls", "n_distinct"))
+      assert(rows.forall(r => !r.isNullAt(r.fieldIndex(c)) && r.getAs[Long](c) == 0L),
+        s"$c: ${rows.mkString(", ")}")
+  }
+
   test("z-order serves a multi-dim workload better than a 1-D sort") {
     // sf0.01: the suppkey domain at sf0.001 is too small (<= 10) for the
     // oracle's sx box to select anything.

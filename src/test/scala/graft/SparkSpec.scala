@@ -6,21 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared SparkSession for all suites (one JVM-wide session; suites run in a
   * forked JVM, Test / fork := true). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // quirk Q9: pandas float semantics (x/0 -> inf, 0/0 -> NaN), not ANSI errors
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // 4 cores whatever the machine, so the suite does not depend on it
+  lazy val spark: SparkSession = Session(4)
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -568,10 +568,6 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val root = java.nio.file.Files.createTempDirectory("graft-funnel-files")
     val inDir = root.resolve("in")
     val outDir = root.resolve("out").toString
@@ -594,35 +590,26 @@ class StreamingSpec extends SparkSpec {
         .start()
       q.awaitTermination()
     }
-    try {
-      writeBatch("b1.jsonl", Seq(
-        """{"user_id":1,"ts":"2026-01-01T10:00:00.000Z","event_type":"view","value":1.0}""",
-        """{"user_id":1,"ts":"2026-01-01T10:01:00.000Z","event_type":"click","value":1.0}"""))
-      runOnce()
-      // a NEW query over the SAME checkpoint: the (stage=2, anchor) state
-      // must survive the restart, so the purchase completes the funnel and
-      // the stale click (before the anchor) does nothing
-      writeBatch("b2.jsonl", Seq(
-        """{"user_id":1,"ts":"2026-01-01T09:59:00.000Z","event_type":"purchase","value":1.0}""",
-        """{"user_id":1,"ts":"2026-01-01T10:02:00.000Z","event_type":"purchase","value":1.0}"""))
-      runOnce()
-      val got = spark.read.parquet(outDir)
-        .select("user_id", "stage").as[(Long, Long)].collect().toSet
-      assert(got == Set((1L, 1L), (1L, 2L), (1L, 3L)),
-        s"restart lost funnel state: $got")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    writeBatch("b1.jsonl", Seq(
+      """{"user_id":1,"ts":"2026-01-01T10:00:00.000Z","event_type":"view","value":1.0}""",
+      """{"user_id":1,"ts":"2026-01-01T10:01:00.000Z","event_type":"click","value":1.0}"""))
+    runOnce()
+    // a NEW query over the SAME checkpoint: the (stage=2, anchor) state
+    // must survive the restart, so the purchase completes the funnel and
+    // the stale click (before the anchor) does nothing
+    writeBatch("b2.jsonl", Seq(
+      """{"user_id":1,"ts":"2026-01-01T09:59:00.000Z","event_type":"purchase","value":1.0}""",
+      """{"user_id":1,"ts":"2026-01-01T10:02:00.000Z","event_type":"purchase","value":1.0}"""))
+    runOnce()
+    val got = spark.read.parquet(outDir)
+      .select("user_id", "stage").as[(Long, Long)].collect().toSet
+    assert(got == Set((1L, 1L), (1L, 2L), (1L, 3L)),
+      s"restart lost funnel state: $got")
   }
 
   test("sourceCap: admission counter survives a checkpointed query RESTART") {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val root = java.nio.file.Files.createTempDirectory("graft-cap-files")
     val inDir = root.resolve("in")
     val outDir = root.resolve("out").toString
@@ -643,93 +630,68 @@ class StreamingSpec extends SparkSpec {
         .start()
       q.awaitTermination()
     }
-    try {
-      writeBatch("b1.jsonl", Seq(
-        """{"doc_id":1,"source":"a"}""", """{"doc_id":2,"source":"a"}"""))
-      runOnce()
-      // a NEW query over the SAME checkpoint: source a's counter is full,
-      // so both later docs must be dropped
-      writeBatch("b2.jsonl", Seq(
-        """{"doc_id":3,"source":"a"}""", """{"doc_id":4,"source":"b"}"""))
-      runOnce()
-      val got = spark.read.parquet(outDir)
-        .select("doc_id", "source", "rnk")
-        .as[(Long, String, Long)].collect().toSet
-      assert(got == Set((1L, "a", 1L), (2L, "a", 2L), (4L, "b", 1L)),
-        s"restart lost cap state: $got")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    writeBatch("b1.jsonl", Seq(
+      """{"doc_id":1,"source":"a"}""", """{"doc_id":2,"source":"a"}"""))
+    runOnce()
+    // a NEW query over the SAME checkpoint: source a's counter is full,
+    // so both later docs must be dropped
+    writeBatch("b2.jsonl", Seq(
+      """{"doc_id":3,"source":"a"}""", """{"doc_id":4,"source":"b"}"""))
+    runOnce()
+    val got = spark.read.parquet(outDir)
+      .select("doc_id", "source", "rnk")
+      .as[(Long, String, Long)].collect().toSet
+    assert(got == Set((1L, "a", 1L), (2L, "a", 2L), (4L, "b", 1L)),
+      s"restart lost cap state: $got")
   }
 
   test("sessionizeTws: transformWithState matches the flatMapGroups semantics") {
     implicit val ctx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider — scope
-    // the setting to this query and restore the default afterwards
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val in = MemoryStream[StreamEvent]
+    val gapMs = 10 * 60 * 1000L
+    val q = Streams.sessionizeTws(in.toDS(), gapMs)
+      .writeStream.format("memory").queryName("sess_tws")
+      .outputMode("append").start()
     try {
-      val in = MemoryStream[StreamEvent]
-      val gapMs = 10 * 60 * 1000L
-      val q = Streams.sessionizeTws(in.toDS(), gapMs)
-        .writeStream.format("memory").queryName("sess_tws")
-        .outputMode("append").start()
-      try {
-        in.addData(ev(7, 0, v = 1.0), ev(7, 5, v = 2.0))
-        q.processAllAvailable()
-        assert(spark.table("sess_tws").count() == 0, "open session must not emit")
-        in.addData(ev(7, 30, v = 4.0)) // 25-min gap closes the first session
-        q.processAllAvailable()
-        val rows = spark.table("sess_tws")
-          .as[(Long, Long, Long, Long, Double)].collect().toSeq
-        val start = Timestamp.valueOf("2024-01-01 10:00:00").getTime
-        val lastT = Timestamp.valueOf("2024-01-01 10:05:00").getTime
-        assert(rows == Seq((7L, start, lastT + gapMs, 2L, 3.0)), s"$rows")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      in.addData(ev(7, 0, v = 1.0), ev(7, 5, v = 2.0))
+      q.processAllAvailable()
+      assert(spark.table("sess_tws").count() == 0, "open session must not emit")
+      in.addData(ev(7, 30, v = 4.0)) // 25-min gap closes the first session
+      q.processAllAvailable()
+      val rows = spark.table("sess_tws")
+        .as[(Long, Long, Long, Long, Double)].collect().toSeq
+      val start = Timestamp.valueOf("2024-01-01 10:00:00").getTime
+      val lastT = Timestamp.valueOf("2024-01-01 10:05:00").getTime
+      assert(rows == Seq((7L, start, lastT + gapMs, 2L, 3.0)), s"$rows")
+    } finally q.stop()
   }
 
   test("packShards: streaming assignments match the batch packer bit-for-bit") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.col
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // the batch truth: the declared query over the sf0.001 corpus
+    val batch = graft.queries.TextQueries.packShards.build(spark, sf)
+      .select("doc_id", "bucket", "shard", "toks", "cum_tokens")
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    // stream the same docs in doc_id order, split across two micro-batches
+    // (per-bucket running state must survive the boundary)
+    val docs = graft.engine.Tables.t(spark, sf, "documents")
+      .select(col("doc_id"), col("text")).filter(col("text").isNotNull)
+      .orderBy("doc_id").as[(Long, String)].collect()
+    val (b1, b2) = docs.splitAt(docs.length / 2)
+    val in = MemoryStream[(Long, String)]
+    val q = Streams.packShards(in.toDF().toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("pack").outputMode("append").start()
     try {
-      // the batch truth: the declared query over the sf0.001 corpus
-      val batch = graft.queries.TextQueries.packShards.build(spark, sf)
-        .select("doc_id", "bucket", "shard", "toks", "cum_tokens")
+      in.addData(b1.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData(b2.toIndexedSeq)
+      q.processAllAvailable()
+      val streamed = spark.table("pack")
         .as[(Long, Long, Long, Long, Long)].collect().toSet
-      // stream the same docs in doc_id order, split across two micro-batches
-      // (per-bucket running state must survive the boundary)
-      val docs = graft.engine.Tables.t(spark, sf, "documents")
-        .select(col("doc_id"), col("text")).filter(col("text").isNotNull)
-        .orderBy("doc_id").as[(Long, String)].collect()
-      val (b1, b2) = docs.splitAt(docs.length / 2)
-      val in = MemoryStream[(Long, String)]
-      val q = Streams.packShards(in.toDF().toDF("doc_id", "text"))
-        .writeStream.format("memory").queryName("pack").outputMode("append").start()
-      try {
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        val streamed = spark.table("pack")
-          .as[(Long, Long, Long, Long, Long)].collect().toSet
-        assert(streamed == batch,
-          s"stream/batch divergence: ${(streamed diff batch).take(3)} vs ${(batch diff streamed).take(3)}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      assert(streamed == batch,
+        s"stream/batch divergence: ${(streamed diff batch).take(3)} vs ${(batch diff streamed).take(3)}")
+    } finally q.stop()
   }
 
   test("chunkDocs: streaming chunks match the batch chunker bit-for-bit") {
@@ -790,68 +752,50 @@ class StreamingSpec extends SparkSpec {
 
   test("sourceCap: per-source admission counter survives micro-batch boundaries") {
     implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val in = MemoryStream[(Long, String)]
+    val q = Streams.sourceCap(in.toDF().toDF("doc_id", "source"), cap = 2)
+      .writeStream.format("memory").queryName("srccap").outputMode("append").start()
     try {
-      val in = MemoryStream[(Long, String)]
-      val q = Streams.sourceCap(in.toDF().toDF("doc_id", "source"), cap = 2)
-        .writeStream.format("memory").queryName("srccap").outputMode("append").start()
-      try {
-        in.addData((1L, "a"), (2L, "a"), (3L, "b"))
-        q.processAllAvailable()
-        // source a is already full: 4 and 5 must be dropped, b admits one more
-        in.addData((4L, "a"), (5L, "a"), (6L, "b"), (7L, "b"))
-        q.processAllAvailable()
-        val got = spark.table("srccap")
-          .as[(Long, String, Long)].collect().toSet
-        assert(got == Set((1L, "a", 1L), (2L, "a", 2L), (3L, "b", 1L),
-          (6L, "b", 2L)), s"got $got")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      in.addData((1L, "a"), (2L, "a"), (3L, "b"))
+      q.processAllAvailable()
+      // source a is already full: 4 and 5 must be dropped, b admits one more
+      in.addData((4L, "a"), (5L, "a"), (6L, "b"), (7L, "b"))
+      q.processAllAvailable()
+      val got = spark.table("srccap")
+        .as[(Long, String, Long)].collect().toSet
+      assert(got == Set((1L, "a", 1L), (2L, "a", 2L), (3L, "b", 1L),
+        (6L, "b", 2L)), s"got $got")
+    } finally q.stop()
   }
 
   test("funnelStages: stream transitions reproduce the batch funnel stages") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.col
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // batch truth: final stage per user from the declared query
+    val batch = graft.queries.EventQueries.eventFunnel.build(spark, sf)
+      .select("user_id", "stage").as[(Long, Long)].collect().toMap
+    // stream the same events in event-time order, split mid-stream
+    val events = graft.engine.Tables.t(spark, sf, "events")
+      .select(col("user_id"), col("ts"), col("event_type"),
+        col("value")).orderBy("ts")
+      .as[StreamEvent].collect()
+    val (b1, b2) = events.splitAt(events.length / 2)
+    val in = MemoryStream[StreamEvent]
+    val q = Streams.funnelStages(in.toDS())
+      .writeStream.format("memory").queryName("funnel").outputMode("append").start()
     try {
-      // batch truth: final stage per user from the declared query
-      val batch = graft.queries.EventQueries.eventFunnel.build(spark, sf)
-        .select("user_id", "stage").as[(Long, Long)].collect().toMap
-      // stream the same events in event-time order, split mid-stream
-      val events = graft.engine.Tables.t(spark, sf, "events")
-        .select(col("user_id"), col("ts"), col("event_type"),
-          col("value")).orderBy("ts")
-        .as[StreamEvent].collect()
-      val (b1, b2) = events.splitAt(events.length / 2)
-      val in = MemoryStream[StreamEvent]
-      val q = Streams.funnelStages(in.toDS())
-        .writeStream.format("memory").queryName("funnel").outputMode("append").start()
-      try {
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        val streamed = spark.table("funnel")
-          .select("user_id", "stage").as[(Long, Long)].collect()
-          .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
-        val batchReached = batch.filter(_._2 > 0)
-        assert(streamed == batchReached,
-          s"diff: ${(streamed.toSet diff batchReached.toSet).take(3)} vs " +
-            s"${(batchReached.toSet diff streamed.toSet).take(3)}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      in.addData(b1.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData(b2.toIndexedSeq)
+      q.processAllAvailable()
+      val streamed = spark.table("funnel")
+        .select("user_id", "stage").as[(Long, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
+      val batchReached = batch.filter(_._2 > 0)
+      assert(streamed == batchReached,
+        s"diff: ${(streamed.toSet diff batchReached.toSet).take(3)} vs " +
+          s"${(batchReached.toSet diff streamed.toSet).take(3)}")
+    } finally q.stop()
   }
 
   test("funnelStages: same-millisecond events fold in microsecond order") {
@@ -861,204 +805,159 @@ class StreamingSpec extends SparkSpec {
     // view, and stall the user's funnel state permanently — the ADVICE r6
     // scenario, pinned here against the micros-precision sort.
     implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val baseMs = Timestamp.valueOf("2026-01-01 10:00:00").getTime
-      def at(us: Int): Timestamp = {
-        val t = new Timestamp(baseMs); t.setNanos(us * 1000); t
-      }
-      val in = MemoryStream[StreamEvent]
-      val q = Streams.funnelStages(in.toDS())
-        .writeStream.format("memory").queryName("funnel_us")
-        .outputMode("append").start()
-      try {
-        in.addData(Seq(
-          StreamEvent(1L, at(100), "view", 1.0),
-          StreamEvent(1L, at(300), "click", 1.0),
-          StreamEvent(1L, at(500), "purchase", 1.0)))
-        q.processAllAvailable()
-        val stages = spark.table("funnel_us")
-          .select("stage").as[Long].collect().toSet
-        assert(stages == Set(1L, 2L, 3L), s"got stages $stages")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val baseMs = Timestamp.valueOf("2026-01-01 10:00:00").getTime
+    def at(us: Int): Timestamp = {
+      val t = new Timestamp(baseMs); t.setNanos(us * 1000); t
     }
+    val in = MemoryStream[StreamEvent]
+    val q = Streams.funnelStages(in.toDS())
+      .writeStream.format("memory").queryName("funnel_us")
+      .outputMode("append").start()
+    try {
+      in.addData(Seq(
+        StreamEvent(1L, at(100), "view", 1.0),
+        StreamEvent(1L, at(300), "click", 1.0),
+        StreamEvent(1L, at(500), "purchase", 1.0)))
+      q.processAllAvailable()
+      val stages = spark.table("funnel_us")
+        .select("stage").as[Long].collect().toSet
+      assert(stages == Set(1L, 2L, 3L), s"got stages $stages")
+    } finally q.stop()
   }
 
   test("anomalyFlags: streamed flags bit-match q_anomaly_zscore across a split") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.col
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val batch = graft.queries.ProfileQueries.anomalyZscore.build(spark, sf)
+      .select("event_id", "n_prev", "dev2_scaled", "thresh_scaled")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    val events = graft.engine.Tables.t(spark, sf, "events")
+      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
+      .orderBy("ts", "event_id")
+      .as[graft.streaming.AnomEvent].collect()
+    val (b1, b2) = events.splitAt(events.length / 2)
+    val in = MemoryStream[graft.streaming.AnomEvent]
+    val q = Streams.anomalyFlags(in.toDS())
+      .writeStream.format("memory").queryName("anom")
+      .outputMode("append").start()
     try {
-      val batch = graft.queries.ProfileQueries.anomalyZscore.build(spark, sf)
+      in.addData(b1.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData(b2.toIndexedSeq)
+      q.processAllAvailable()
+      val streamed = spark.table("anom")
         .select("event_id", "n_prev", "dev2_scaled", "thresh_scaled")
         .as[(Long, Long, Long, Long)].collect().toSet
-      val events = graft.engine.Tables.t(spark, sf, "events")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .orderBy("ts", "event_id")
-        .as[graft.streaming.AnomEvent].collect()
-      val (b1, b2) = events.splitAt(events.length / 2)
-      val in = MemoryStream[graft.streaming.AnomEvent]
-      val q = Streams.anomalyFlags(in.toDS())
-        .writeStream.format("memory").queryName("anom")
-        .outputMode("append").start()
-      try {
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        val streamed = spark.table("anom")
-          .select("event_id", "n_prev", "dev2_scaled", "thresh_scaled")
-          .as[(Long, Long, Long, Long)].collect().toSet
-        assert(streamed == batch,
-          s"stream-only: ${(streamed diff batch).take(3)}, " +
-            s"batch-only: ${(batch diff streamed).take(3)}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      assert(streamed == batch,
+        s"stream-only: ${(streamed diff batch).take(3)}, " +
+          s"batch-only: ${(batch diff streamed).take(3)}")
+    } finally q.stop()
   }
 
   test("pitLookup: streamed PIT rows bit-match q_pit_join across a split") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.{col, expr}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val batch = graft.queries.LakehouseQueries.pitJoin.build(spark, sf)
+      .select("probe_event_id", "version_ts", "state_op", "state_value",
+        "has_state")
+      .as[(Long, Option[java.sql.Timestamp], Option[String], Option[Double],
+        Boolean)].collect().toSet
+    // feed in the batch window's exact total order: (ts, change-first,
+    // event_id) — the order the PIT state rule is defined over
+    val events = graft.engine.Tables.t(spark, sf, "events")
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
+        col("value"))
+      .orderBy(col("ts"),
+        expr("CASE WHEN event_type IN ('signup','purchase','error') THEN 0 ELSE 1 END"),
+        col("event_id"))
+      .as[graft.streaming.PitInput].collect()
+    val (b1, b2) = events.splitAt(events.length / 2)
+    val in = MemoryStream[graft.streaming.PitInput]
+    val q = Streams.pitLookup(in.toDS())
+      .writeStream.format("memory").queryName("pit")
+      .outputMode("append").start()
     try {
-      val batch = graft.queries.LakehouseQueries.pitJoin.build(spark, sf)
+      in.addData(b1.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData(b2.toIndexedSeq)
+      q.processAllAvailable()
+      val streamed = spark.table("pit")
         .select("probe_event_id", "version_ts", "state_op", "state_value",
           "has_state")
         .as[(Long, Option[java.sql.Timestamp], Option[String], Option[Double],
           Boolean)].collect().toSet
-      // feed in the batch window's exact total order: (ts, change-first,
-      // event_id) — the order the PIT state rule is defined over
-      val events = graft.engine.Tables.t(spark, sf, "events")
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-          col("value"))
-        .orderBy(col("ts"),
-          expr("CASE WHEN event_type IN ('signup','purchase','error') THEN 0 ELSE 1 END"),
-          col("event_id"))
-        .as[graft.streaming.PitInput].collect()
-      val (b1, b2) = events.splitAt(events.length / 2)
-      val in = MemoryStream[graft.streaming.PitInput]
-      val q = Streams.pitLookup(in.toDS())
-        .writeStream.format("memory").queryName("pit")
-        .outputMode("append").start()
-      try {
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        val streamed = spark.table("pit")
-          .select("probe_event_id", "version_ts", "state_op", "state_value",
-            "has_state")
-          .as[(Long, Option[java.sql.Timestamp], Option[String], Option[Double],
-            Boolean)].collect().toSet
-        assert(streamed == batch,
-          s"stream-only: ${(streamed diff batch).take(3)}, " +
-            s"batch-only: ${(batch diff streamed).take(3)}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      assert(streamed == batch,
+        s"stream-only: ${(streamed diff batch).take(3)}, " +
+          s"batch-only: ${(batch diff streamed).take(3)}")
+    } finally q.stop()
   }
 
   test("activityStreaks: final streamed summaries bit-match q_streak_islands") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.col
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val batch = graft.queries.SequenceQueries.streakIslands.build(spark, sf)
+      .as[(Long, Long, Long, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
+    val events = graft.engine.Tables.t(spark, sf, "events")
+      .select(col("user_id"), col("ts"))
+      .orderBy("ts")
+      .as[graft.streaming.DayEvent].collect()
+    // split INSIDE the day range so streaks straddle the batch boundary
+    val (b1, b2) = events.splitAt(events.length / 3)
+    val in = MemoryStream[graft.streaming.DayEvent]
+    val q = Streams.activityStreaks(in.toDS())
+      .writeStream.format("memory").queryName("streaks")
+      .outputMode("append").start()
     try {
-      val batch = graft.queries.SequenceQueries.streakIslands.build(spark, sf)
-        .as[(Long, Long, Long, Long)].collect()
-        .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-      val events = graft.engine.Tables.t(spark, sf, "events")
-        .select(col("user_id"), col("ts"))
-        .orderBy("ts")
-        .as[graft.streaming.DayEvent].collect()
-      // split INSIDE the day range so streaks straddle the batch boundary
-      val (b1, b2) = events.splitAt(events.length / 3)
-      val in = MemoryStream[graft.streaming.DayEvent]
-      val q = Streams.activityStreaks(in.toDS())
-        .writeStream.format("memory").queryName("streaks")
-        .outputMode("append").start()
-      try {
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        // active_days strictly increases between a user's emissions: the
-        // max row per user is the final summary
-        val streamed = spark.table("streaks")
-          .as[(Long, Long, Long, Long, Long)].collect()
-          .groupBy(_._1)
-          .map { case (u, rows) =>
-            val last = rows.maxBy(_._4)
-            u -> (last._2, last._3, last._4)
-          }
-        assert(streamed == batch,
-          s"mismatched users: ${
-            (streamed.toSet diff batch.toSet).take(3)} vs ${
-            (batch.toSet diff streamed.toSet).take(3)}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      in.addData(b1.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData(b2.toIndexedSeq)
+      q.processAllAvailable()
+      // active_days strictly increases between a user's emissions: the
+      // max row per user is the final summary
+      val streamed = spark.table("streaks")
+        .as[(Long, Long, Long, Long, Long)].collect()
+        .groupBy(_._1)
+        .map { case (u, rows) =>
+          val last = rows.maxBy(_._4)
+          u -> (last._2, last._3, last._4)
+        }
+      assert(streamed == batch,
+        s"mismatched users: ${
+          (streamed.toSet diff batch.toSet).take(3)} vs ${
+          (batch.toSet diff streamed.toSet).take(3)}")
+    } finally q.stop()
   }
 
   test("eventTransitions: streamed pairs aggregate to the batch counts") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.col
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val batch = graft.queries.SequenceQueries.eventTransitions
+      .build(spark, sf)
+      .select("prev", "next", "n").as[(String, String, Long)]
+      .collect().map(t => (t._1, t._2) -> t._3).toMap
+    val events = graft.engine.Tables.t(spark, sf, "events")
+      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
+      .orderBy("ts", "event_id")
+      .as[graft.streaming.TransEvent].collect()
+    val (b1, b2) = events.splitAt(events.length / 2)
+    val in = MemoryStream[graft.streaming.TransEvent]
+    val q = Streams.eventTransitions(in.toDS())
+      .writeStream.format("memory").queryName("trans")
+      .outputMode("append").start()
     try {
-      val batch = graft.queries.SequenceQueries.eventTransitions
-        .build(spark, sf)
-        .select("prev", "next", "n").as[(String, String, Long)]
-        .collect().map(t => (t._1, t._2) -> t._3).toMap
-      val events = graft.engine.Tables.t(spark, sf, "events")
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-        .orderBy("ts", "event_id")
-        .as[graft.streaming.TransEvent].collect()
-      val (b1, b2) = events.splitAt(events.length / 2)
-      val in = MemoryStream[graft.streaming.TransEvent]
-      val q = Streams.eventTransitions(in.toDS())
-        .writeStream.format("memory").queryName("trans")
-        .outputMode("append").start()
-      try {
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        val streamed = spark.table("trans")
-          .groupBy("prev", "next").count()
-          .as[(String, String, Long)].collect()
-          .map(t => (t._1, t._2) -> t._3).toMap
-        assert(streamed == batch,
-          s"stream-only: ${(streamed.toSet diff batch.toSet).take(3)}, " +
-            s"batch-only: ${(batch.toSet diff streamed.toSet).take(3)}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      in.addData(b1.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData(b2.toIndexedSeq)
+      q.processAllAvailable()
+      val streamed = spark.table("trans")
+        .groupBy("prev", "next").count()
+        .as[(String, String, Long)].collect()
+        .map(t => (t._1, t._2) -> t._3).toMap
+      assert(streamed == batch,
+        s"stream-only: ${(streamed.toSet diff batch.toSet).take(3)}, " +
+          s"batch-only: ${(batch.toSet diff streamed.toSet).take(3)}")
+    } finally q.stop()
   }
 
   test("ohlcBars: a closed window's bar matches the batch fields exactly") {
@@ -1090,99 +989,81 @@ class StreamingSpec extends SparkSpec {
   test("sessionConcurrency: chained session->tumble counts bit-match q_session_concurrency") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.{col, expr, max => fmax}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val batch = graft.queries.EventQueries.sessionConcurrency.build(spark, sf)
+      .select(expr("unix_micros(wstart)"), col("n_concurrent"))
+      .as[(Long, Long)].collect().toMap
+    val events = graft.engine.Tables.t(spark, sf, "events")
+      .select(col("user_id"), col("ts"), col("event_id"))
+      .orderBy("ts", "event_id")
+      .as[graft.streaming.ConcInput].collect()
+    // split INSIDE the time range so open sessions straddle the boundary
+    val (b1, b2) = events.splitAt(events.length / 2)
+    // flush rows close every user's final open session — the batch
+    // query sees the whole log, so its last sessions are "closed" too
+    val flushTs = new Timestamp(events.map(_.ts.getTime).max + 3600 * 1000L)
+    val flush = events.map(_.user_id).distinct
+      .map(u => graft.streaming.ConcInput(u, flushTs, -1L))
+    val in = MemoryStream[graft.streaming.ConcInput]
+    val q = Streams.sessionConcurrency(in.toDS())
+      .writeStream.format("memory").queryName("conc")
+      .outputMode("update").start()
     try {
-      val batch = graft.queries.EventQueries.sessionConcurrency.build(spark, sf)
-        .select(expr("unix_micros(wstart)"), col("n_concurrent"))
+      in.addData(b1.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData(b2.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData(flush.toIndexedSeq)
+      q.processAllAvailable()
+      // update mode re-emits an hour's count each time it grows: the
+      // final (max) update per hour is the closed-log answer
+      val streamed = spark.table("conc")
+        .groupBy("wstart_us").agg(fmax("n_concurrent"))
         .as[(Long, Long)].collect().toMap
-      val events = graft.engine.Tables.t(spark, sf, "events")
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .orderBy("ts", "event_id")
-        .as[graft.streaming.ConcInput].collect()
-      // split INSIDE the time range so open sessions straddle the boundary
-      val (b1, b2) = events.splitAt(events.length / 2)
-      // flush rows close every user's final open session — the batch
-      // query sees the whole log, so its last sessions are "closed" too
-      val flushTs = new Timestamp(events.map(_.ts.getTime).max + 3600 * 1000L)
-      val flush = events.map(_.user_id).distinct
-        .map(u => graft.streaming.ConcInput(u, flushTs, -1L))
-      val in = MemoryStream[graft.streaming.ConcInput]
-      val q = Streams.sessionConcurrency(in.toDS())
-        .writeStream.format("memory").queryName("conc")
-        .outputMode("update").start()
-      try {
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(flush.toIndexedSeq)
-        q.processAllAvailable()
-        // update mode re-emits an hour's count each time it grows: the
-        // final (max) update per hour is the closed-log answer
-        val streamed = spark.table("conc")
-          .groupBy("wstart_us").agg(fmax("n_concurrent"))
-          .as[(Long, Long)].collect().toMap
-        assert(streamed == batch,
-          s"stream-only: ${(streamed.toSet diff batch.toSet).take(3)}, " +
-            s"batch-only: ${(batch.toSet diff streamed.toSet).take(3)}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      assert(streamed == batch,
+        s"stream-only: ${(streamed.toSet diff batch.toSet).take(3)}, " +
+          s"batch-only: ${(batch.toSet diff streamed.toSet).take(3)}")
+    } finally q.stop()
   }
 
   test("scd2Apply: streamed version table bit-matches q_scd2_build across a split") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.{col, expr, when}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val batch = graft.queries.LakehouseQueries.scd2Build.build(spark, sf)
+      .select(col("user_id"), col("version"), col("op"), col("value"),
+        expr("unix_micros(valid_from)"), expr("unix_micros(valid_to)"),
+        col("is_current"))
+      .as[(Long, Long, String, Double, Long, Option[Long], Boolean)]
+      .collect().toSet
+    // the same change stream q_scd2_build versions, in its window order
+    val changes = graft.engine.Tables.t(spark, sf, "events")
+      .filter(col("event_type").isin("signup", "purchase", "error"))
+      .select(col("user_id"), col("event_id"), col("ts"), col("value"),
+        when(col("event_type") === "error", "delete")
+          .otherwise("upsert").as("op"))
+      .orderBy("ts", "event_id")
+      .as[graft.streaming.Scd2Input].collect()
+    val (b1, b2) = changes.splitAt(changes.length / 2)
+    val in = MemoryStream[graft.streaming.Scd2Input]
+    val q = Streams.scd2Apply(in.toDS())
+      .writeStream.format("memory").queryName("scd2")
+      .outputMode("append").start()
     try {
-      val batch = graft.queries.LakehouseQueries.scd2Build.build(spark, sf)
-        .select(col("user_id"), col("version"), col("op"), col("value"),
-          expr("unix_micros(valid_from)"), expr("unix_micros(valid_to)"),
-          col("is_current"))
+      in.addData(b1.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData(b2.toIndexedSeq)
+      q.processAllAvailable()
+      // a version is emitted open and (if superseded) once more closed;
+      // the closed emission is final — per (user, version) prefer it
+      val streamed = spark.table("scd2")
         .as[(Long, Long, String, Double, Long, Option[Long], Boolean)]
-        .collect().toSet
-      // the same change stream q_scd2_build versions, in its window order
-      val changes = graft.engine.Tables.t(spark, sf, "events")
-        .filter(col("event_type").isin("signup", "purchase", "error"))
-        .select(col("user_id"), col("event_id"), col("ts"), col("value"),
-          when(col("event_type") === "error", "delete")
-            .otherwise("upsert").as("op"))
-        .orderBy("ts", "event_id")
-        .as[graft.streaming.Scd2Input].collect()
-      val (b1, b2) = changes.splitAt(changes.length / 2)
-      val in = MemoryStream[graft.streaming.Scd2Input]
-      val q = Streams.scd2Apply(in.toDS())
-        .writeStream.format("memory").queryName("scd2")
-        .outputMode("append").start()
-      try {
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        // a version is emitted open and (if superseded) once more closed;
-        // the closed emission is final — per (user, version) prefer it
-        val streamed = spark.table("scd2")
-          .as[(Long, Long, String, Double, Long, Option[Long], Boolean)]
-          .collect()
-          .groupBy(r => (r._1, r._2))
-          .map { case (_, rows) => rows.find(_._6.isDefined).getOrElse(rows.head) }
-          .toSet
-        assert(streamed == batch,
-          s"stream-only: ${(streamed diff batch).take(3)}, " +
-            s"batch-only: ${(batch diff streamed).take(3)}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+        .collect()
+        .groupBy(r => (r._1, r._2))
+        .map { case (_, rows) => rows.find(_._6.isDefined).getOrElse(rows.head) }
+        .toSet
+      assert(streamed == batch,
+        s"stream-only: ${(streamed diff batch).take(3)}, " +
+          s"batch-only: ${(batch diff streamed).take(3)}")
+    } finally q.stop()
   }
 
   test("the same transform runs in batch mode (unified API)") {
@@ -1241,129 +1122,111 @@ class StreamingSpec extends SparkSpec {
   test("goldenRecords: streamed entity resolution bit-matches q_entity_resolve across a split") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.col
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    import graft.streaming.CustArrival
+    // one block (nation 10 / BUILDING / band 0) holding a 3-record
+    // entity whose third member arrives in the SECOND micro-batch (the
+    // cross-split merge), one clean 2-record entity in another block,
+    // and singletons that must not surface
+    val custs = Seq(
+      CustArrival(1L, "Alpha One", 10L, "BUILDING", 100.00),
+      CustArrival(2L, "Alpha One!", 10L, "BUILDING", 1500.00),
+      CustArrival(3L, "Alpha Onee", 10L, "BUILDING", 1509.00),
+      CustArrival(4L, "Beta Two", 20L, "AUTOMOBILE", 10.00),
+      CustArrival(5L, "Beta Twoo", 20L, "AUTOMOBILE", 12.00),
+      CustArrival(6L, "Zeta Solo", 10L, "BUILDING", 50.00),
+      CustArrival(7L, "Alpha One", 30L, "BUILDING", 100.00))
+    val (b1, b2) = (custs.filter(_.c_custkey <= 2) :+ custs(3) :+ custs(6),
+      Seq(custs(2), custs(4), custs(5)))
+    val in = MemoryStream[CustArrival]
+    val q = Streams.goldenRecords(in.toDS())
+      .writeStream.format("memory").queryName("golden")
+      .outputMode("append").start()
     try {
-      import graft.streaming.CustArrival
-      // one block (nation 10 / BUILDING / band 0) holding a 3-record
-      // entity whose third member arrives in the SECOND micro-batch (the
-      // cross-split merge), one clean 2-record entity in another block,
-      // and singletons that must not surface
-      val custs = Seq(
-        CustArrival(1L, "Alpha One", 10L, "BUILDING", 100.00),
-        CustArrival(2L, "Alpha One!", 10L, "BUILDING", 1500.00),
-        CustArrival(3L, "Alpha Onee", 10L, "BUILDING", 1509.00),
-        CustArrival(4L, "Beta Two", 20L, "AUTOMOBILE", 10.00),
-        CustArrival(5L, "Beta Twoo", 20L, "AUTOMOBILE", 12.00),
-        CustArrival(6L, "Zeta Solo", 10L, "BUILDING", 50.00),
-        CustArrival(7L, "Alpha One", 30L, "BUILDING", 100.00))
-      val (b1, b2) = (custs.filter(_.c_custkey <= 2) :+ custs(3) :+ custs(6),
-        Seq(custs(2), custs(4), custs(5)))
-      val in = MemoryStream[CustArrival]
-      val q = Streams.goldenRecords(in.toDS())
-        .writeStream.format("memory").queryName("golden")
-        .outputMode("append").start()
-      try {
-        in.addData(b1)
-        q.processAllAvailable()
-        in.addData(b2)
-        q.processAllAvailable()
-        val all = spark.table("golden")
-          .as[graft.streaming.GoldenRecord].collect().toSeq
-        // interim revision: the {1,2} cluster existed before member 3 merged in
-        assert(all.exists(g => g.entity_id == 1L && g.n_records == 2L),
-          "first batch must emit the pre-merge 2-record entity")
-        // final state: latest revision per block, tombstones excluded
-        val latest = all.groupBy(g => (g.blk_nation, g.blk_segment, g.blk_band))
-          .flatMap { case (_, gs) =>
-            val mx = gs.map(_.rev).max
-            gs.filter(g => g.rev == mx && g.entity_id >= 0)
-          }
-          .map(g => (g.entity_id, g.n_records, g.custkey_kept, g.name_kept,
-            g.nation_kept, g.cents_kept, g.needs_review))
-          .toSet
-        // the batch query over the same records, through the parquet contract
-        val dir = java.nio.file.Files.createTempDirectory("stream-er").toString
-        custs.toDF().write.mode("overwrite").parquet(s"$dir/customer.parquet")
-        val batch = graft.queries.AdvancedJoinQueries.entityResolve
-          .build(spark, dir)
-          .select(col("entity_id"), col("n_records"), col("custkey_kept"),
-            col("name_kept"), col("nation_kept"), col("cents_kept"),
-            col("needs_review"))
-          .as[(Long, Long, Long, String, Long, Long, Boolean)]
-          .collect().toSet
-        assert(batch.nonEmpty, "fixture must produce batch entities")
-        assert(latest == batch,
-          s"stream-only: ${latest diff batch}, batch-only: ${batch diff latest}")
-        // the cross-split merge happened: entity 1 is a 3-record cluster
-        // flagged for review (its weakest link is 'possible'-strength)
-        assert(latest.exists(r => r._1 == 1L && r._2 == 3L && r._7),
-          s"expected the merged 3-record entity flagged for review: $latest")
-        assert(latest.exists(r => r._1 == 4L && r._2 == 2L && !r._7),
-          s"expected the clean 2-record entity: $latest")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      in.addData(b1)
+      q.processAllAvailable()
+      in.addData(b2)
+      q.processAllAvailable()
+      val all = spark.table("golden")
+        .as[graft.streaming.GoldenRecord].collect().toSeq
+      // interim revision: the {1,2} cluster existed before member 3 merged in
+      assert(all.exists(g => g.entity_id == 1L && g.n_records == 2L),
+        "first batch must emit the pre-merge 2-record entity")
+      // final state: latest revision per block, tombstones excluded
+      val latest = all.groupBy(g => (g.blk_nation, g.blk_segment, g.blk_band))
+        .flatMap { case (_, gs) =>
+          val mx = gs.map(_.rev).max
+          gs.filter(g => g.rev == mx && g.entity_id >= 0)
+        }
+        .map(g => (g.entity_id, g.n_records, g.custkey_kept, g.name_kept,
+          g.nation_kept, g.cents_kept, g.needs_review))
+        .toSet
+      // the batch query over the same records, through the parquet contract
+      val dir = java.nio.file.Files.createTempDirectory("stream-er").toString
+      custs.toDF().write.mode("overwrite").parquet(s"$dir/customer.parquet")
+      val batch = graft.queries.AdvancedJoinQueries.entityResolve
+        .build(spark, dir)
+        .select(col("entity_id"), col("n_records"), col("custkey_kept"),
+          col("name_kept"), col("nation_kept"), col("cents_kept"),
+          col("needs_review"))
+        .as[(Long, Long, Long, String, Long, Long, Boolean)]
+        .collect().toSet
+      assert(batch.nonEmpty, "fixture must produce batch entities")
+      assert(latest == batch,
+        s"stream-only: ${latest diff batch}, batch-only: ${batch diff latest}")
+      // the cross-split merge happened: entity 1 is a 3-record cluster
+      // flagged for review (its weakest link is 'possible'-strength)
+      assert(latest.exists(r => r._1 == 1L && r._2 == 3L && r._7),
+        s"expected the merged 3-record entity flagged for review: $latest")
+      assert(latest.exists(r => r._1 == 4L && r._2 == 2L && !r._7),
+        s"expected the clean 2-record entity: $latest")
+    } finally q.stop()
   }
 
   test("userLifetimes: state bit-matches the batch user aggregation under out-of-order cross-batch arrival") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // batch truth: q_survival_km's user-grain aggregation (first/last
+    // activity day + first-event cohort by the (ts, event_id) tiebreak)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("user_id").orderBy("ts", "event_id")
+    val batch = graft.engine.Tables.t(spark, sf, "events")
+      .withColumn("rn", row_number().over(w))
+      .groupBy("user_id")
+      .agg(min(to_date(col("ts"))).as("first_d"),
+        max(to_date(col("ts"))).as("last_d"),
+        min(when(col("rn") === 1, col("event_type"))).as("cohort"))
+      .collect()
+      .map(r => r.getAs[Long]("user_id") ->
+        (r.getAs[String]("cohort"), r.getAs[java.sql.Date]("first_d").toString,
+          r.getAs[java.sql.Date]("last_d").toString)).toMap
+    // stream the SAME events with the LATE half first: every user's
+    // first event arrives in batch 2, so the cohort pick must correct
+    // already-written state, not just extend it
+    val events = graft.engine.Tables.t(spark, sf, "events")
+      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
+      .orderBy("ts", "event_id")
+      .as[graft.streaming.TransEvent].collect()
+    val (early, late) = events.splitAt(events.length / 2)
+    val in = MemoryStream[graft.streaming.TransEvent]
+    val q = graft.streaming.Streams.userLifetimes(in.toDS())
+      .writeStream.format("memory").queryName("lifetimes")
+      .outputMode("append").start()
     try {
-      // batch truth: q_survival_km's user-grain aggregation (first/last
-      // activity day + first-event cohort by the (ts, event_id) tiebreak)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("ts", "event_id")
-      val batch = graft.engine.Tables.t(spark, sf, "events")
-        .withColumn("rn", row_number().over(w))
-        .groupBy("user_id")
-        .agg(min(to_date(col("ts"))).as("first_d"),
-          max(to_date(col("ts"))).as("last_d"),
-          min(when(col("rn") === 1, col("event_type"))).as("cohort"))
+      in.addData(late.toIndexedSeq) // later events FIRST
+      q.processAllAvailable()
+      in.addData(early.toIndexedSeq)
+      q.processAllAvailable()
+      val streamed = spark.table("lifetimes")
+        .orderBy(col("revision").desc)
         .collect()
         .map(r => r.getAs[Long]("user_id") ->
-          (r.getAs[String]("cohort"), r.getAs[java.sql.Date]("first_d").toString,
-            r.getAs[java.sql.Date]("last_d").toString)).toMap
-      // stream the SAME events with the LATE half first: every user's
-      // first event arrives in batch 2, so the cohort pick must correct
-      // already-written state, not just extend it
-      val events = graft.engine.Tables.t(spark, sf, "events")
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-        .orderBy("ts", "event_id")
-        .as[graft.streaming.TransEvent].collect()
-      val (early, late) = events.splitAt(events.length / 2)
-      val in = MemoryStream[graft.streaming.TransEvent]
-      val q = graft.streaming.Streams.userLifetimes(in.toDS())
-        .writeStream.format("memory").queryName("lifetimes")
-        .outputMode("append").start()
-      try {
-        in.addData(late.toIndexedSeq) // later events FIRST
-        q.processAllAvailable()
-        in.addData(early.toIndexedSeq)
-        q.processAllAvailable()
-        val streamed = spark.table("lifetimes")
-          .orderBy(col("revision").desc)
-          .collect()
-          .map(r => r.getAs[Long]("user_id") ->
-            (r.getAs[String]("cohort"),
-              r.getAs[java.sql.Date]("first_day").toString,
-              r.getAs[java.sql.Date]("last_day").toString))
-          .groupBy(_._1).view.mapValues(_.head._2).toMap
-        assert(streamed == batch,
-          s"diff: ${(streamed.toSet diff batch.toSet).take(3)} vs " +
-            s"${(batch.toSet diff streamed.toSet).take(3)}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+          (r.getAs[String]("cohort"),
+            r.getAs[java.sql.Date]("first_day").toString,
+            r.getAs[java.sql.Date]("last_day").toString))
+        .groupBy(_._1).view.mapValues(_.head._2).toMap
+      assert(streamed == batch,
+        s"diff: ${(streamed.toSet diff batch.toSet).take(3)} vs " +
+          s"${(batch.toSet diff streamed.toSet).take(3)}")
+    } finally q.stop()
   }
 }
