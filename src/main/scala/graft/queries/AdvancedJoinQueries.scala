@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Det.dsum
 import graft.engine.Tables
 import graft.engine.Tables.t
+import graft.queries.SubPlans.closureCtes
 
 /** Operators Spark's join menu lacks natively, re-expressed Spark-first
   * (brief: "compose existing ops if semantics allow" — both compose, no
@@ -307,11 +308,7 @@ object AdvancedJoinQueries {
       |  SELECT a, b2 AS b FROM m
       |  UNION
       |  SELECT b2 AS a, a AS b FROM m),
-      |reach AS (
-      |  SELECT a AS id, b AS r FROM sym
-      |  UNION
-      |  SELECT reach.id, sym.b FROM reach JOIN sym ON reach.r = sym.a),
-      |comp AS (SELECT id, LEAST(id, MIN(r)) AS cluster FROM reach GROUP BY id),
+      |$closureCtes,
       |mem AS (
       |  SELECT comp.id, comp.cluster, bb.c_name, bb.c_nationkey, bb.cents
       |  FROM comp JOIN bb ON bb.c_custkey = comp.id),

@@ -466,8 +466,8 @@ object AuditQueries {
     val l = stackRules(
       t(s, dir, "lineitem").agg(
         count(lit(1)).as("n"),
-        (sum(when(col("l_orderkey").isNotNull && col("l_linenumber").isNotNull,
-          1L).otherwise(0L)) -
+        (count(when(col("l_orderkey").isNotNull && col("l_linenumber").isNotNull,
+          1L)) -
           countDistinct(col("l_orderkey"), col("l_linenumber"))).as("v_uq"),
         sum(when(col("l_quantity").isNull || col("l_quantity") < 1 ||
           col("l_quantity") > 50, 1L).otherwise(0L)).as("v_q"),

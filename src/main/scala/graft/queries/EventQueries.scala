@@ -823,8 +823,10 @@ object EventQueries {
         .join(b.as("b"), col("a.user_id") === col("b.user_id"))
         .agg(coalesce(sum(col("a.cnt") * col("b.cnt")), lit(0L))
           .cast("long").as("true_size"))
-      ip.agg(min(col("dot")).cast("long").as("cms_estimate"))
-        .crossJoin(exact) // 1-row x 1-row
+      // grouped by the 1-row exact side, as the oracle does: with no
+      // banked cell on one side there is no ip row, so no output row
+      ip.crossJoin(exact) // <= 4 rows x 1 row
+        .groupBy("true_size").agg(min(col("dot")).cast("long").as("cms_estimate"))
         .select(col("true_size"), col("cms_estimate"),
           (col("cms_estimate") - col("true_size")).as("overestimate"))
     }

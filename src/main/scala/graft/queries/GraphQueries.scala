@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Pairs, Tables}
 import graft.engine.Tables.t
+import graft.queries.SubPlans.closureCtes
 
 /** Graph analytics over the co-purchase graph (parts linked by appearing in
   * the same order) — the capability area a training-data platform needs for
@@ -56,28 +57,28 @@ object GraphQueries {
       .groupBy(col("ok")).agg(sort_array(collect_set(col("pk"))).as("ps"))
       .localCheckpoint(eager = true)
 
-  /** The bounded in-row C(k,2) pair expansion over per-order basket
-    * arrays + pair support count. Respread on xxhash64(ok) first: the
-    * grouped table is small but fans out compute-dense work, and after a
-    * checkpoint its width is whatever AQE coalesced the aggregation to
-    * (measured 6 of 32 tasks; keyed off ok itself the planner would
-    * elide the spread as statically redundant). */
+  /** [[pairSupport]] over the checkpointed basket arrays. Respread on
+    * xxhash64(ok) first: the grouped table is small but fans out
+    * compute-dense work, and after a checkpoint its width is whatever AQE
+    * coalesced the aggregation to (measured 6 of 32 tasks; keyed off ok
+    * itself the planner would elide the spread as statically redundant). */
   private def pairsFromGrouped(g: DataFrame): DataFrame =
-    Tables.spread(g, xxhash64(col("ok")))
-      .select(explode(expr(
-        """flatten(transform(ps, (x, i) ->
-          |  transform(slice(ps, i + 2, size(ps)), y -> struct(x AS p1, y AS p2))))"""
-          .stripMargin)).as("e"))
-      .select(col("e.p1").as("p1"), col("e.p2").as("p2"))
-      .groupBy("p1", "p2").agg(count(lit(1)).as("nij"))
+    pairSupport(Tables.spread(g, xxhash64(col("ok"))))
+
+  /** The bounded in-row C(k,2) pair expansion over per-order sorted
+    * basket arrays (ok, ps) + pair support count. */
+  private def pairSupport(g: DataFrame): DataFrame =
+    Pairs.upperTriangle(g, "ps", diagonal = false)
+      .groupBy(col("x").as("p1"), col("y").as("p2")).agg(count(lit(1)).as("nij"))
 
   /** Co-purchase pair support counts, p1 < p2 (see object scaladoc).
     *
     * Enumeration is ONE groupBy(order) collecting the <= 7 distinct parts
-    * into a sorted array, then a per-row C(k,2) expansion via nested
-    * `transform` — not the textbook basket self-join. Same rows (the sorted
-    * array IS the distinct basket; slice from i+2 yields exactly the
-    * p1 < p2 pairs once each), one fewer shuffle and no join build side:
+    * into a sorted array, then the per-row C(k,2) expansion of
+    * [[Pairs.upperTriangle]] — not the textbook basket self-join. Same
+    * rows (the sorted array IS the distinct basket, so the expansion yields
+    * exactly the p1 < p2 pairs once each), one fewer shuffle and no join
+    * build side:
     * measured ~0.5s off EVERY graph query at sf0.1, and at 100 TB the
     * single shuffle carries one row per order instead of one per line. The
     * per-order bound (TPC-H caps lines at 7) is what makes the collected
@@ -92,14 +93,8 @@ object GraphQueries {
     // ~1.9s of every graph query ran on <4 of 32 cores; guide
     // §2.4/§2.5). The whole agg + expansion stage is explicit-width
     // because the spread IS the aggregation's exchange.
-    Tables.spread(b, col("ok"))
-      .groupBy(col("ok")).agg(sort_array(collect_set(col("pk"))).as("ps"))
-      .select(explode(expr(
-        """flatten(transform(ps, (x, i) ->
-          |  transform(slice(ps, i + 2, size(ps)), y -> struct(x AS p1, y AS p2))))"""
-          .stripMargin)).as("e"))
-      .select(col("e.p1").as("p1"), col("e.p2").as("p2"))
-      .groupBy("p1", "p2").agg(count(lit(1)).as("nij"))
+    pairSupport(Tables.spread(b, col("ok"))
+      .groupBy(col("ok")).agg(sort_array(collect_set(col("pk"))).as("ps")))
 
   private def edges(s: SparkSession, dir: String): DataFrame =
     pairCounts(rawBaskets(s, dir))
@@ -408,11 +403,7 @@ object GraphQueries {
       |$edgeCte,
       |sym AS (SELECT p1 AS a, p2 AS b FROM edge
       |        UNION SELECT p2, p1 FROM edge),
-      |reach AS (
-      |  SELECT a AS id, b AS r FROM sym
-      |  UNION
-      |  SELECT reach.id, sym.b FROM reach JOIN sym ON reach.r = sym.a),
-      |comp AS (SELECT id, LEAST(id, MIN(r)) AS cluster FROM reach GROUP BY id),
+      |$closureCtes,
       |sizes AS (SELECT cluster, COUNT(*) AS sz FROM comp GROUP BY cluster)
       |SELECT sz AS component_size, COUNT(*) AS n_components,
       |       CAST(SUM(sz) AS BIGINT) AS n_nodes

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables.t
+import graft.queries.SubPlans.{typeGrid, typeGridCtes}
 
 /** Fold input for the Kendall pair counter: one aligned day of two series. */
 final case class KtIn(type_a: String, type_b: String, rn: Long, xa: Long,
@@ -44,30 +44,13 @@ final case class TsOut(event_type: String, n_days: Long, n_pairs: Long,
   */
 object RankQueries {
 
-  /** Shared DuckDB CTE chain: events → per-(type, day) counts → zero-filled
-    * calendar grid (q_autocorr's convention, single-sourced across the four
-    * rank queries). */
-  private val gridCtes =
-    """daily AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |span AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-      |cal AS (SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS d
-      |        FROM span),
-      |grid AS (
-      |  SELECT ty.event_type, cal.d, COALESCE(daily.cnt, 0) AS x
-      |  FROM (SELECT DISTINCT event_type FROM daily) ty
-      |  CROSS JOIN cal
-      |  LEFT JOIN daily ON daily.event_type = ty.event_type AND daily.d = cal.d)"""
-      .stripMargin
-
-  /** [[gridCtes]] + the centered doubled-rank transform: per type,
+  /** [[SubPlans.typeGridCtes]] + the centered doubled-rank transform: per type,
     * c = 2·rank_avg(x) − (n+1) where 2·rank_avg = 2·RANK() + ties − 1 is
     * the integer doubled mid-rank (fractional .5 average ranks ×2). The
     * rank-sum identity Σ rank_avg = n(n+1)/2 holds UNDER TIES, so Σc = 0
     * exactly and the Pearson-on-ranks numerators need no mean-clearing at
     * full-grid alignment. rn is the 1-based day index for lag alignment. */
-  private val rankedCtes = gridCtes +
+  private val rankedCtes = typeGridCtes +
     """,
       |ranked AS (
       |  SELECT event_type, d,
@@ -78,22 +61,6 @@ object RankQueries {
       |              AS BIGINT) AS c
       |  FROM grid)""".stripMargin
 
-  /** Spark twin of [[gridCtes]]: (event_type, d, x) over the zero-filled
-    * calendar grid. */
-  private def gridFrame(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val cal = span.select(
-      explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    daily.select("event_type").distinct()
-      .crossJoin(broadcast(cal)) // types x calendar: broadcast-sized
-      .join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-        coalesce(col("cnt"), lit(0L)).as("x"))
-  }
-
   /** Spark twin of [[rankedCtes]]: adds rn (day index) and c (centered
     * doubled rank). Both windows are keyed by event_type — never a global
     * sort; the per-key frame is calendar-bounded. */
@@ -102,7 +69,7 @@ object RankQueries {
     val byX = Window.partitionBy("event_type").orderBy("x")
     val ties = Window.partitionBy("event_type", "x")
     val all = Window.partitionBy("event_type")
-    gridFrame(s, dir).select(col("event_type"), col("d"),
+    typeGrid(s, dir).select(col("event_type"), col("d"),
       row_number().over(byDay).cast("long").as("rn"),
       (lit(2L) * rank().over(byX) + count(lit(1)).over(ties) - 1
         - (lit(1L) + count(lit(1)).over(all))).cast("long").as("c"))
@@ -203,7 +170,7 @@ object RankQueries {
     * zero). */
   val kendallTau: Q = Q(
     "q_kendall_tau",
-    s"""WITH $gridCtes,
+    s"""WITH $typeGridCtes,
       |g2 AS (
       |  SELECT event_type, d, x,
       |         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d) AS rn
@@ -235,7 +202,7 @@ object RankQueries {
       |FROM st JOIN nd ON nd.type_a = st.type_a AND nd.type_b = st.type_b
       |ORDER BY st.type_a, st.type_b""".stripMargin) { (s, dir) =>
     import s.implicits._
-    val g = gridFrame(s, dir)
+    val g = typeGrid(s, dir)
     val byDay = Window.partitionBy("event_type").orderBy("d")
     val g2 = g.withColumn("rn", row_number().over(byDay).cast("long"))
     val al = g2.select(col("event_type").as("type_a"), col("d"), col("rn"),
@@ -292,7 +259,7 @@ object RankQueries {
     * Math.floorDiv — identical floor semantics. */
   val theilSenSlope: Q = Q(
     "q_theilsen_slope",
-    s"""WITH $gridCtes,
+    s"""WITH $typeGridCtes,
       |g2 AS (
       |  SELECT event_type, x,
       |         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d) - 1 AS i
@@ -330,7 +297,7 @@ object RankQueries {
       |ORDER BY event_type""".stripMargin) { (s, dir) =>
     import s.implicits._
     val byDay = Window.partitionBy("event_type").orderBy("d")
-    val g2 = gridFrame(s, dir).select(col("event_type"),
+    val g2 = typeGrid(s, dir).select(col("event_type"),
       (row_number().over(byDay).cast("long") - 1).as("i"), col("x"))
       .as[TsIn]
     g2.groupByKey(_.event_type).mapGroups { (ty, it) =>
@@ -472,7 +439,7 @@ object RankQueries {
     * one aggregation per (pair, side) ends it. */
   val mannWhitney: Q = Q(
     "q_mann_whitney",
-    s"""WITH $gridCtes,
+    s"""WITH $typeGridCtes,
       |tp AS (
       |  SELECT a.event_type AS ta, b.event_type AS tb
       |  FROM (SELECT DISTINCT event_type FROM grid) a
@@ -502,7 +469,7 @@ object RankQueries {
       |       CAST(u2_a AS BIGINT) AS u2_a, CAST(u2_b AS BIGINT) AS u2_b,
       |       CAST(u2_a * 1000000 // (2 * n_a * n_b) AS BIGINT) AS cles_ppm
       |FROM u ORDER BY type_a, type_b""".stripMargin) { (s, dir) =>
-    val g = gridFrame(s, dir)
+    val g = typeGrid(s, dir)
     val ty = g.select("event_type").distinct()
     val tp = ty.select(col("event_type").as("ta"))
       .join(broadcast(ty.select(col("event_type").as("tb"))),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Det.dsum
 import graft.engine.Tables.t
+import graft.queries.SubPlans.{typeGrid, typeGridCtes, typeGridRnCtes}
 
 /** Event-SEQUENCE analytics over `events` — the order-sensitive operators a
   * behavioral/training-sequence pipeline needs beyond per-window aggregates:
@@ -508,17 +509,7 @@ object SequenceQueries {
     * frames; the final aggregate is 7 rows per type. */
   val autocorr: Q = Q(
     "q_autocorr",
-    """WITH daily AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |span AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-      |cal AS (SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS d
-      |        FROM span),
-      |grid AS (
-      |  SELECT ty.event_type, cal.d, COALESCE(daily.cnt, 0) AS x
-      |  FROM (SELECT DISTINCT event_type FROM daily) ty
-      |  CROSS JOIN cal
-      |  LEFT JOIN daily ON daily.event_type = ty.event_type AND daily.d = cal.d),
+    s"""WITH $typeGridCtes,
       |lagged AS (
       |  SELECT event_type, x,
       |         LAG(x, 1) OVER w AS l1, LAG(x, 2) OVER w AS l2,
@@ -569,17 +560,7 @@ object SequenceQueries {
       |            ELSE CAST((a * 1000000 + 10000000 * den) // den - 10000000
       |                      AS BIGINT) END AS acf_ppm
       |FROM f ORDER BY event_type, lag""".stripMargin) { (s, dir) =>
-    val daily = t(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val cal = span.select(
-      explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val grid = daily.select("event_type").distinct()
-      .crossJoin(broadcast(cal)) // types x calendar: broadcast-sized
-      .join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-        coalesce(col("cnt"), lit(0L)).as("x"))
+    val grid = typeGrid(s, dir)
     val w = Window.partitionBy("event_type").orderBy("d")
     val lagged = grid.select(
       (col("event_type") +: col("x") +:
@@ -655,17 +636,7 @@ object SequenceQueries {
     * and the seasonal anomaly gate, so the residuals gated ARE the
     * residuals reported. */
   private val stlCtes =
-    """daily AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |span AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-      |cal AS (SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS d
-      |        FROM span),
-      |grid AS (
-      |  SELECT ty.event_type, cal.d, COALESCE(daily.cnt, 0) AS x
-      |  FROM (SELECT DISTINCT event_type FROM daily) ty
-      |  CROSS JOIN cal
-      |  LEFT JOIN daily ON daily.event_type = ty.event_type AND daily.d = cal.d),
+    s"""$typeGridCtes,
       |tr AS (
       |  SELECT event_type, d, x, isodow(d) AS dow,
       |         CASE WHEN COUNT(*) OVER w = 7
@@ -715,17 +686,7 @@ object SequenceQueries {
   /** Spark twin of the [[stlCtes]] chain, through the remainder. */
   private def stlFrame(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val daily = t(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val cal = span.select(
-      explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val grid = daily.select("event_type").distinct()
-      .crossJoin(broadcast(cal)) // types x calendar: broadcast-sized
-      .join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-        coalesce(col("cnt"), lit(0L)).as("x"))
+    val grid = typeGrid(s, dir)
     val w = Window.partitionBy("event_type").orderBy("d").rowsBetween(-3, 3)
     val det = grid
       .withColumn("dow", weekday(col("d")) + 1) // ISO Monday = 1
@@ -774,19 +735,7 @@ object SequenceQueries {
     * single-sourced between the forecast readout and the backtest, so the
     * model evaluated IS the model shipped. */
   private val holtCtes =
-    """daily AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |span AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-      |cal AS (SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS d
-      |        FROM span),
-      |grid AS (
-      |  SELECT ty.event_type, cal.d, COALESCE(daily.cnt, 0) AS x,
-      |         ROW_NUMBER() OVER (PARTITION BY ty.event_type
-      |                            ORDER BY cal.d) AS rn
-      |  FROM (SELECT DISTINCT event_type FROM daily) ty
-      |  CROSS JOIN cal
-      |  LEFT JOIN daily ON daily.event_type = ty.event_type AND daily.d = cal.d),
+    s"""$typeGridRnCtes,
       |hw AS (
       |  SELECT event_type, rn, d, x,
       |         1000000 * x AS l, CAST(0 AS BIGINT) AS b
@@ -818,17 +767,7 @@ object SequenceQueries {
   private def holtFrame(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val daily = t(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val cal = span.select(
-      explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val grid = daily.select("event_type").distinct()
-      .crossJoin(broadcast(cal)) // types x calendar: broadcast-sized
-      .join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-        coalesce(col("cnt"), lit(0L)).as("x"))
+    val grid = typeGrid(s, dir)
       .as[HwIn]
     grid.groupByKey(_.event_type).flatMapGroups { (_, it) =>
       val series = it.toArray.sortBy(_.d.getTime) // calendar-bounded
@@ -865,19 +804,7 @@ object SequenceQueries {
     * calendar-bounded grid, one task per type. */
   val hwSeasonal: Q = Q(
     "q_hw_seasonal",
-    s"""WITH RECURSIVE daily AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |span AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-      |cal AS (SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS d
-      |        FROM span),
-      |grid AS (
-      |  SELECT ty.event_type, cal.d, COALESCE(daily.cnt, 0) AS x,
-      |         ROW_NUMBER() OVER (PARTITION BY ty.event_type
-      |                            ORDER BY cal.d) AS rn
-      |  FROM (SELECT DISTINCT event_type FROM daily) ty
-      |  CROSS JOIN cal
-      |  LEFT JOIN daily ON daily.event_type = ty.event_type AND daily.d = cal.d),
+    s"""WITH RECURSIVE $typeGridRnCtes,
       |hw AS (
       |  SELECT event_type, rn, d, x,
       |         1000000 * x AS l, CAST(0 AS BIGINT) AS b,
@@ -902,17 +829,7 @@ object SequenceQueries {
       |       CAST(l + b + s1 AS BIGINT) AS forecast_next_micro
       |FROM hw ORDER BY event_type, d""".stripMargin) { (s, dir) =>
     import s.implicits._
-    val daily = t(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val cal = span.select(
-      explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val grid = daily.select("event_type").distinct()
-      .crossJoin(broadcast(cal)) // types x calendar: broadcast-sized
-      .join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-        coalesce(col("cnt"), lit(0L)).as("x"))
+    val grid = typeGrid(s, dir)
       .as[HwIn]
     grid.groupByKey(_.event_type).flatMapGroups {
       (ty: String, it: Iterator[HwIn]) =>
@@ -1183,17 +1100,7 @@ object SequenceQueries {
     * aggregation, like every daily-grid query in this file. */
   val saxMotifs: Q = Q(
     "q_sax_motifs",
-    """WITH daily AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |span AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-      |cal AS (SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS d
-      |        FROM span),
-      |grid AS (
-      |  SELECT ty.event_type, cal.d, COALESCE(daily.cnt, 0) AS x
-      |  FROM (SELECT DISTINCT event_type FROM daily) ty
-      |  CROSS JOIN cal
-      |  LEFT JOIN daily ON daily.event_type = ty.event_type AND daily.d = cal.d),
+    s"""WITH $typeGridCtes,
       |g2 AS (
       |  SELECT event_type, x,
       |         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d) - 1 AS i
@@ -1234,17 +1141,7 @@ object SequenceQueries {
       |      FROM wc)
       |WHERE rn <= 3
       |ORDER BY event_type, rank""".stripMargin) { (s, dir) =>
-    val daily = t(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val cal = span.select(
-      explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val grid = daily.select("event_type").distinct()
-      .crossJoin(broadcast(cal)) // types x calendar: broadcast-sized
-      .join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-        coalesce(col("cnt"), lit(0L)).as("x"))
+    val grid = typeGrid(s, dir)
     val byDay = Window.partitionBy("event_type").orderBy("d")
     val paa = grid
       .withColumn("i", row_number().over(byDay).cast("long") - 1)

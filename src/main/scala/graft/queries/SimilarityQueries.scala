@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{Dedup, Ivf, Similarity, Tables}
+import graft.engine.{Dedup, Ivf, Pairs, Similarity, Tables}
 import graft.engine.Tables.t
+import graft.queries.SubPlans.closureCtes
 import graft.functions.Vectors
 
 /** LLM-data-pipeline batch 2: similarity search over the `embeddings` table.
@@ -394,6 +395,15 @@ object SimilarityQueries {
 
   private def minhashPairCtes: String = minhashPairCtesWith(plantedCte)
 
+  /** The candidate `pairs` of [[minhashPairCtes]] symmetrized into `sym`
+    * and closed into `comp` (id -> cluster) by [[SubPlans.closureCtes]]. */
+  private val pairsClosureCtes: String =
+    s"""sym AS (
+      |  SELECT d1 AS a, d2 AS b FROM pairs
+      |  UNION
+      |  SELECT d2 AS a, d1 AS b FROM pairs),
+      |$closureCtes""".stripMargin
+
   /** Spark pipeline [[minhashPairCtes]] mirrors: (planted docs, candidate
     * pairs). Per-row HOF signatures (shuffle-free; slot-equal to the
     * aggregation path by SimilaritySpec). */
@@ -446,16 +456,8 @@ object SimilarityQueries {
     * closure (the q_sir_simulate technique applied to a graph operator). */
   val dedupComponents: Q = Q(
     "q_dedup_components",
-    "WITH RECURSIVE " + minhashPairCtes + """,
-      |sym AS (
-      |  SELECT d1 AS a, d2 AS b FROM pairs
-      |  UNION
-      |  SELECT d2 AS a, d1 AS b FROM pairs),
-      |reach AS (
-      |  SELECT a AS id, b AS r FROM sym
-      |  UNION
-      |  SELECT reach.id, sym.b FROM reach JOIN sym ON reach.r = sym.a),
-      |comp AS (SELECT id, LEAST(id, MIN(r)) AS cluster FROM reach GROUP BY id)
+    "WITH RECURSIVE " + minhashPairCtes + s""",
+      |$pairsClosureCtes
       |SELECT p.doc_id,
       |       COALESCE(c.cluster, p.doc_id) AS cluster,
       |       COALESCE(c.cluster, p.doc_id) = p.doc_id AS is_canonical
@@ -483,16 +485,8 @@ object SimilarityQueries {
     * canonical via a rank window, so policy AND clustering hash-match. */
   val dedupCanonical: Q = Q(
     "q_dedup_canonical",
-    "WITH RECURSIVE " + minhashPairCtes + """,
-      |sym AS (
-      |  SELECT d1 AS a, d2 AS b FROM pairs
-      |  UNION
-      |  SELECT d2 AS a, d1 AS b FROM pairs),
-      |reach AS (
-      |  SELECT a AS id, b AS r FROM sym
-      |  UNION
-      |  SELECT reach.id, sym.b FROM reach JOIN sym ON reach.r = sym.a),
-      |comp AS (SELECT id, LEAST(id, MIN(r)) AS cluster FROM reach GROUP BY id),
+    "WITH RECURSIVE " + minhashPairCtes + s""",
+      |$pairsClosureCtes,
       |asg AS (
       |  SELECT p.doc_id, COALESCE(c.cluster, p.doc_id) AS cluster,
       |         COALESCE(length(p.text), -1) AS quality
@@ -540,16 +534,8 @@ object SimilarityQueries {
     * any corpus scale). No windows, no joins against the corpus. */
   val dedupStats: Q = Q(
     "q_dedup_stats",
-    "WITH RECURSIVE " + minhashPairCtes + """,
-      |sym AS (
-      |  SELECT d1 AS a, d2 AS b FROM pairs
-      |  UNION
-      |  SELECT d2 AS a, d1 AS b FROM pairs),
-      |reach AS (
-      |  SELECT a AS id, b AS r FROM sym
-      |  UNION
-      |  SELECT reach.id, sym.b FROM reach JOIN sym ON reach.r = sym.a),
-      |comp AS (SELECT id, LEAST(id, MIN(r)) AS cluster FROM reach GROUP BY id),
+    "WITH RECURSIVE " + minhashPairCtes + s""",
+      |$pairsClosureCtes,
       |asg AS (
       |  SELECT p.doc_id, COALESCE(c.cluster, p.doc_id) AS cluster
       |  FROM planted p LEFT JOIN comp c ON c.id = p.doc_id),
@@ -1619,7 +1605,7 @@ object SimilarityQueries {
     * is touched exactly twice (min/max, cell counts), both map-side. */
   val gridCluster: Q = Q(
     "q_grid_cluster",
-    """WITH RECURSIVE pt AS (
+    s"""WITH RECURSIVE pt AS (
       |  SELECT vec_id, embedding[1]::DOUBLE AS x, embedding[2]::DOUBLE AS y
       |  FROM embeddings),
       |mm AS (SELECT MIN(x) AS mnx, MAX(x) AS mxx,
@@ -1634,17 +1620,12 @@ object SimilarityQueries {
       |core AS (SELECT cell, cell // 8 AS cx, cell % 8 AS cy, n
       |         FROM cnt WHERE n >= 8),
       |sym AS (
-      |  SELECT a.cell AS s, b.cell AS d FROM core a JOIN core b
+      |  SELECT a.cell AS a, b.cell AS b FROM core a JOIN core b
       |  ON ABS(a.cx - b.cx) <= 1 AND ABS(a.cy - b.cy) <= 1),
-      |reach AS (
-      |  SELECT s AS id, d AS r FROM sym
-      |  UNION
-      |  SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s),
-      |comp AS (SELECT id AS cell, LEAST(id, MIN(r)) AS cluster
-      |         FROM reach GROUP BY id),
+      |$closureCtes,
       |clustered AS (
       |  SELECT c.cluster, COUNT(*) AS n_cells, CAST(SUM(core.n) AS BIGINT) AS n_points
-      |  FROM comp c JOIN core ON core.cell = c.cell GROUP BY c.cluster),
+      |  FROM comp c JOIN core ON core.cell = c.id GROUP BY c.cluster),
       |noise AS (
       |  SELECT CAST(-1 AS BIGINT) AS cluster, COUNT(*) AS n_cells,
       |         CAST(COALESCE(SUM(n), 0) AS BIGINT) AS n_points
@@ -1689,7 +1670,8 @@ object SimilarityQueries {
     // evaluated state, immune to projection-collapse re-evaluation.
     val one = edges.agg(collect_list(struct(col("a"), col("b"))).as("es"))
       .select(col("es"), expr(
-        "array_sort(array_distinct(flatten(transform(es, e -> array(e.a, e.b)))))")
+        """array_sort(array_distinct(
+          |  concat(transform(es, e -> e.a), transform(es, e -> e.b))))""".stripMargin)
         .as("ds"))
       .repartition(1) // es/ds as attributes for the lambda bodies below
       // empty-edge-set guard: with ds empty, sequence(0, size(ds)-1) is
@@ -1749,16 +1731,8 @@ object SimilarityQueries {
     * broadcast back, and a 5-row aggregation. No windows, no corpus sort. */
   val clusterFolds: Q = Q(
     "q_cluster_folds",
-    "WITH RECURSIVE " + minhashPairCtes + """,
-      |sym AS (
-      |  SELECT d1 AS a, d2 AS b FROM pairs
-      |  UNION
-      |  SELECT d2 AS a, d1 AS b FROM pairs),
-      |reach AS (
-      |  SELECT a AS id, b AS r FROM sym
-      |  UNION
-      |  SELECT reach.id, sym.b FROM reach JOIN sym ON reach.r = sym.a),
-      |comp AS (SELECT id, LEAST(id, MIN(r)) AS cluster FROM reach GROUP BY id),
+    "WITH RECURSIVE " + minhashPairCtes + s""",
+      |$pairsClosureCtes,
       |asg AS (
       |  SELECT p.doc_id, COALESCE(c.cluster, p.doc_id) AS cluster
       |  FROM planted p LEFT JOIN comp c ON c.id = p.doc_id),
@@ -1907,8 +1881,8 @@ object SimilarityQueries {
     * 10¹² rows is ~10³⁰ — past BIGINT, inside 38 digits).
     *
     * Shape at 100 TB: ONE corpus scan; each row expands to its C(65,2) =
-    * 2080 upper-triangle cells via the same in-row nested-`transform`
-    * idiom as the graph pair enumeration (constant 2080× fan-out — a
+    * 2080 upper-triangle cells via the same in-row expansion as the graph
+    * pair enumeration, [[Pairs.upperTriangle]] (constant 2080× fan-out — a
     * plan constant, not data-dependent) feeding a map-side-combined
     * 2080-group aggregation; the 64 per-dim sums aggregate in the same
     * pass from the diagonal cells and join back by BROADCAST. */
@@ -1943,12 +1917,9 @@ object SimilarityQueries {
     * 1-based (i, j, qᵢ·qⱼ) product cells (constant C(d+1,2) fan-out). */
   private[queries] def gramTriCells(
       q: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    q.select(explode(expr(
-      """flatten(transform(qv, (x, i) ->
-        |  transform(slice(qv, i + 1, size(qv)), (y, j) ->
-        |    struct(i + 1 AS i, i + j + 1 AS j, x * y AS p))))""".stripMargin))
-      .as("c"))
-      .select(col("c.i").as("i"), col("c.j").as("j"), col("c.p").as("p"))
+    Pairs.upperTriangle(q, "qv", diagonal = true)
+      .select((col("i") + 1).as("i"), (col("j") + 1).as("j"),
+        (col("x") * col("y")).as("p"))
 
   /** EMBEDDING GRAM / COVARIANCE MATRIX readout (see the family doc
     * above [[gramCellCtes]]): the 64×64 upper-triangle second-moment
@@ -1971,7 +1942,7 @@ object SimilarityQueries {
       |FROM g JOIN marg mi ON mi.i = g.i JOIN marg mj ON mj.i = g.j
       |ORDER BY i, j""".stripMargin) { (s, dir) =>
     val q = quantizedVecs(s, dir)
-    // in-row upper-triangle expansion: 1-based (i, j, q_i * q_j) structs.
+    // in-row upper-triangle expansion: 1-based (i, j, q_i * q_j) cells.
     // The corpus is spread to full parallelism first — the single-row-group
     // scan otherwise runs the 2080× expansion on 1-2 cores (guide §2.5)
     val cells = gramTriCells(Tables.spread(q, col("vec_id")))
@@ -2064,7 +2035,7 @@ object SimilarityQueries {
       .localCheckpoint(eager = true) // read by sizes AND the pair count
     val sz = keptsh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     // pair enumeration per kept shingle via the bounded in-row C(k,2)
-    // expansion (the GraphQueries.pairCounts idiom): group each shingle's
+    // expansion ([[Pairs.upperTriangle]]): group each shingle's
     // distinct docs into one sorted array — BOUNDED <= 200 by the df-cut
     // that already happened, so the collect is safe — and expand the
     // i<j pairs in-row. Replaces the keptsh self-join: one aggregation
@@ -2072,21 +2043,17 @@ object SimilarityQueries {
     // exchange + probe, and each pair is emitted ONCE (d1 < d2 by the
     // sort) instead of filtered out of the full d1 x d2 product.
     // the (tok, ds) table is tiny (couple MB) but fans out into the
-    // C(k,2) struct expansion — AQE byte-coalesced the post-aggregation
+    // C(k,2) expansion — AQE byte-coalesced the post-aggregation
     // stage to 2 tasks (bytes do not track compute); the explicit-width
     // spread is exempt from coalescing and keeps the expansion wide.
     // Keyed on xxhash64(tok), NOT tok: a spread on the aggregation's own
     // key is statically identical to the aggregation's exchange and the
     // planner elides it (and AQE then coalesces the remaining exchange).
-    val shared = Tables.spread(keptsh.groupBy(col("tok"))
+    val grouped = Tables.spread(keptsh.groupBy(col("tok"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ds")),
         xxhash64(col("tok")))
-      .select(explode(expr(
-        """flatten(transform(ds, (x, i) ->
-          |  transform(slice(ds, i + 2, size(ds)), y -> struct(x AS d1, y AS d2))))"""
-          .stripMargin)).as("e"))
-      .select(col("e.d1").as("d1"), col("e.d2").as("d2"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
+    val shared = Pairs.upperTriangle(grouped, "ds", diagonal = false)
+      .groupBy(col("x").as("d1"), col("y").as("d2")).agg(count(lit(1)).as("inter"))
     val truth = shared
       .join(sz.select(col("doc_id").as("d1"), col("n_sh").as("n1")), "d1")
       .join(sz.select(col("doc_id").as("d2"), col("n_sh").as("n2")), "d2")

@@ -114,8 +114,9 @@ object SpectralQueries {
         .as("cells"))
       .select(
         expr("transform(cells, c -> c.g)").as("tri"),
-        expr("array_sort(array_distinct(flatten(transform(cells, c -> array(c.i, c.j)))))")
-          .as("ds"))
+        expr("""array_sort(array_distinct(
+               |  concat(transform(cells, c -> c.i), transform(cells, c -> c.j))))"""
+          .stripMargin).as("ds"))
       // one-row exchange barrier: tri/ds must be ATTRIBUTES before the
       // fold below references them inside lambda bodies (an inlined
       // expression would re-evaluate per element)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Det.{davg, dsum}
 import graft.engine.Tables.t
+import graft.queries.SubPlans.{calendarCtes, typeGrid, typeGridCtes, zeroFilled}
 
 /** Estimator-family queries (SURVEY §2.4 A5-A8, §2.11 K3/K4/K7/K8/K9) over
   * driver testdata. The covid-CSV golden parity lives in EstimatorsSpec; here
@@ -177,15 +178,13 @@ object StatQueries {
     * the solve all run over grid-bounded rows — a single scalar row out. */
   val ols2Daily: Q = Q(
     "q_ols2_daily",
-    """WITH daily AS (
+    s"""WITH daily AS (
       |  SELECT CAST(ts AS DATE) AS d,
       |         SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS y,
       |         SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS x1,
       |         SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x2
       |  FROM events GROUP BY 1),
-      |span AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-      |cal AS (SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS d
-      |        FROM span),
+      |$calendarCtes,
       |grid AS (
       |  SELECT cal.d, COALESCE(daily.y, 0) AS y,
       |         COALESCE(daily.x1, 0) AS x1, COALESCE(daily.x2, 0) AS x2
@@ -234,13 +233,10 @@ object StatQueries {
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"),
         sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("x1"),
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x2"))
-    val span = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val cal = span.select(
-      explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val grid = cal.join(daily, Seq("d"), "left")
-      .select(coalesce(col("y"), lit(0L)).cast("decimal(38,0)").as("y"),
-        coalesce(col("x1"), lit(0L)).cast("decimal(38,0)").as("x1"),
-        coalesce(col("x2"), lit(0L)).cast("decimal(38,0)").as("x2"))
+    val grid = zeroFilled(daily, Nil, Seq("y", "x1", "x2"))
+      .select(col("y").cast("decimal(38,0)").as("y"),
+        col("x1").cast("decimal(38,0)").as("x1"),
+        col("x2").cast("decimal(38,0)").as("x2"))
     grid.agg(
       count(lit(1)).cast("decimal(38,0)").as("n"),
       sum(col("x1")).cast("decimal(38,0)").as("s1"),
@@ -302,17 +298,7 @@ object StatQueries {
     * it — a single scalar row out. */
   val anovaDaily: Q = Q(
     "q_anova_daily",
-    """WITH daily AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |span AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-      |cal AS (SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS d
-      |        FROM span),
-      |grid AS (
-      |  SELECT ty.event_type, cal.d, COALESCE(daily.cnt, 0) AS x
-      |  FROM (SELECT DISTINCT event_type FROM daily) ty
-      |  CROSS JOIN cal
-      |  LEFT JOIN daily ON daily.event_type = ty.event_type AND daily.d = cal.d),
+    s"""WITH $typeGridCtes,
       |pg AS (
       |  SELECT event_type, COUNT(*) AS t,
       |         SUM(CAST(x AS HUGEINT)) AS sg,
@@ -336,17 +322,8 @@ object StatQueries {
       |            ELSE CAST((a * 1000000) // (a + k * b) AS BIGINT)
       |       END AS eta2_ppm
       |FROM f""".stripMargin) { (s, dir) =>
-    val daily = t(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val cal = span.select(
-      explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val grid = daily.select("event_type").distinct()
-      .crossJoin(broadcast(cal)) // types x calendar: broadcast-sized
-      .join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"),
-        coalesce(col("cnt"), lit(0L)).cast("decimal(38,0)").as("x"))
+    val grid = typeGrid(s, dir)
+      .select(col("event_type"), col("x").cast("decimal(38,0)").as("x"))
     grid.groupBy("event_type")
       .agg(count(lit(1)).cast("decimal(38,0)").as("t"),
         sum(col("x")).cast("decimal(38,0)").as("sg"),

@@ -218,6 +218,18 @@ class AuditSpec extends SparkSpec {
     assert(got(("events.event_type", "accepted_values")) == ((0L, true)))
   }
 
+  test("expectations on empty tables: the composite-key rule counts 0 and passes") {
+    val d = Files.createTempDirectory("graft-exp-empty").toString
+    for (n <- Seq("orders", "customer", "lineitem", "events"))
+      spark.read.parquet(s"$sf/$n.parquet").limit(0).write.parquet(s"$d/$n.parquet")
+    val got = AuditQueries.expectations.build(spark, d).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
+    assert(got.size == 10)
+    val uq = got(("lineitem.(l_orderkey,l_linenumber)", "unique"))
+    assert(!uq.isNullAt(3) && uq.getLong(3) == 0L, uq)
+    assert(!uq.isNullAt(4) && uq.getBoolean(4), uq)
+  }
+
   test("k-anonymity: risk shrinks up the generalization ladder") {
     val d = Files.createTempDirectory("graft-kanon").toString
     writeTable(d, "customer", StructType(Seq(

@@ -191,6 +191,14 @@ class SketchSpec extends SparkSpec {
     assert(est < 2 * exact, s"estimate $est implausibly far from $exact")
   }
 
+  test("cms join-size over an empty events table emits no row, as its oracle") {
+    val d = java.nio.file.Files.createTempDirectory("graft-cms-empty").toString
+    spark.read.parquet(s"$sf/events.parquet").limit(0)
+      .write.parquet(s"$d/events.parquet")
+    val rows = graft.queries.EventQueries.cmsJoinSize.build(spark, d).collect()
+    assert(rows.isEmpty, rows.mkString(", "))
+  }
+
   test("per-group HLL: registers MERGE to the global sketch (max of maxes)") {
     import graft.functions.Sketch
     import org.apache.spark.sql.functions._
