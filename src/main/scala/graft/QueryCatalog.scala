@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 /** Generates QUERIES.md — the navigable index of the declared query
   * surface: one row per [[graft.queries.Registry]] entry with a one-line
   * summary (first sentence of the query's scaladoc), its definition site
-  * (file:line of the `val ... : Q =` declaration), and its correctness
+  * (file and name of the `val ... : Q =` declaration — no line number, so
+  * editing code above a query does not rewrite its row), and its correctness
   * evidence (`oracle` = DuckDB hash-match via the driver gate, `rows-only`
   * = declared without SQL oracle). Needs no SparkSession: names and oracle
   * presence come from the registry object, sites and summaries from
@@ -23,7 +24,7 @@ object QueryCatalog {
   /** Definition site + first-sentence summary for one query, parsed from
     * source: the registration literal `"<name>"` is located, then the
     * enclosing `val ...: Q =` line, then the scaladoc block above it. */
-  private final case class Site(file: String, line: Int, summary: String)
+  private final case class Site(file: String, valName: String, summary: String)
 
   private def firstSentence(doc: String): String = {
     // scaladoc -> plain text: strip markers, collapse whitespace, unwrap
@@ -47,7 +48,7 @@ object QueryCatalog {
       // argument — the `Q(` / `Q.noOracle(` call is on the same line or
       // the line directly above; queries are all named q_*
       val reg = "\"(q_[a-z0-9_]+)\"".r
-      val valDecl = "^\\s*(?:private\\s+)?val \\w+: Q =".r
+      val valDecl = "^\\s*(?:private\\s+)?val (\\w+): Q =".r
       lines.zipWithIndex.flatMap { case (l, i) =>
         reg.findFirstMatchIn(l).flatMap { m =>
           val isReg = l.contains("Q(") || l.contains("noOracle(") ||
@@ -68,7 +69,8 @@ object QueryCatalog {
                   .find(j => lines(j).trim.startsWith("/**")).getOrElse(docEnd)
                 firstSentence(lines.slice(docStart, docEnd + 1).mkString("\n"))
               } else ""
-            m.group(1) -> Site(s"$QueriesDir/${p.getFileName}", vi + 1, summary)
+            val valName = valDecl.findFirstMatchIn(lines(vi)).get.group(1)
+            m.group(1) -> Site(s"$QueriesDir/${p.getFileName}", valName, summary)
           }
         }
       }
@@ -87,7 +89,7 @@ object QueryCatalog {
     val rows = all.map { q =>
       val s = sites(q.name)
       val ev = if (q.oracle.isDefined) "oracle" else "rows-only"
-      s"| `${q.name}` | ${s.summary} | ${s.file}:${s.line} | $ev |"
+      s"| `${q.name}` | ${s.summary} | ${s.file} `${s.valName}` | $ev |"
     }
     val nOracle = all.count(_.oracle.isDefined)
     // rows are appended OUTSIDE the stripMargin literal: their leading
