@@ -327,18 +327,12 @@ object ScaleProbe {
   private def fixedBatchCosine(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Vectors
     val emb = engine.Tables.t(spark, dir, "embeddings")
-    val q = emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < Stride)
-      .select(col("vec_id").as("qid"), Vectors.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", Vectors.normNative(col("qv")))
-    val e = emb.select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v"))
-      .withColumn("vn", Vectors.normNative(col("v")))
-    val scored = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
+    val q = engine.CosineTopK.withQueryNorm(
+      emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < Stride)
+        .select(col("vec_id").as("qid"), Vectors.asDouble(col("embedding")).as("qv")))
+    val e = engine.CosineTopK.withNorm(
+      emb.select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v")))
+    engine.CosineTopK(e.crossJoin(broadcast(q)), 5)
   }
 
   /** The learned-IVF search (seeded KMeans cells, nProbe-pruned candidate

@@ -24,6 +24,10 @@ object Session {
       // transformWithState requires RocksDB; the other stateful operators run on it too
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // room for every generated class of all 217 queries (3375 in one
+      // sf0.01 Verify pass) so a query run again compiles nothing; the
+      // default 100 entries are evicted within one dashboard pass
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -92,22 +92,14 @@ object Ivf {
       .select(col(idCol).as("qid"), Vectors.asDouble(col(vecCol)).as("qv"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val probe = queries.flatMap { case (qid, qv) =>
+    // query norm once per (query, cell) probe row on the broadcast side,
+    // not once per candidate pair after the join
+    val probe = CosineTopK.withQueryNorm(queries.flatMap { case (qid, qv) =>
       nearestCells(qv).map(c => (qid, c, qv.toSeq))
-    }.toSeq.toDF("qid", "cell", "qv")
-      // query norm once per (query, cell) probe row on the broadcast side,
-      // not once per candidate pair after the join
-      .withColumn("qn", Vectors.normNative(col("qv")))
-    val e = index.assigned.select(col(idCol), col("cell"),
-      Vectors.asDouble(col(vecCol)).as("v"))
-      .withColumn("vn", Vectors.normNative(col("v")))
-    val scored = e.join(broadcast(probe), "cell")
-      .filter(col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol),
-        Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn")).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col(idCol))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    }.toSeq.toDF("qid", "cell", "qv"))
+    val e = CosineTopK.withNorm(index.assigned.select(col(idCol), col("cell"),
+      Vectors.asDouble(col(vecCol)).as("v")))
+    CosineTopK(e.join(broadcast(probe), "cell"), k, idCol)
   }
 
   /** Oracle-able learned-IVF fit + assignment: hyperplane-LSH init cells

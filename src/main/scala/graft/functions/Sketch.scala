@@ -44,6 +44,17 @@ object Sketch {
     }
   }
 
+  /** SQL twin of [[hllRank]] over the payload column `w`: the same
+    * integer CASE ladder, largest threshold first. */
+  val HllRankSql: String = (23 to 0 by -1)
+    .map(b => s"WHEN w >= ${1L << b} THEN ${24 - b}")
+    .mkString("CASE ", " ", s" ELSE $HllRankMax END")
+
+  /** DuckDB list literal of [[HllInvStrings]]: each element ::DOUBLE
+    * because a bare decimal list literal types as DECIMAL in DuckDB and
+    * rounds the deep dyadic terms. */
+  val HllInvSql: String = HllInvStrings.map(_ + "::DOUBLE").mkString("[", ", ", "]")
+
   /** 2^-m lookup (m in 1..25) against the exact-dyadic literal table. */
   def hllInv(m: Column): Column =
     element_at(array(HllInvStrings.map(d => lit(d.toDouble)): _*),
@@ -72,6 +83,10 @@ object Sketch {
     new java.math.BigDecimal(
       HllBuckets * math.log(HllBuckets.toDouble / v)).toPlainString
   }
+
+  /** DuckDB list literal of [[HllLinearStrings]], as [[HllInvSql]]. */
+  val HllLinearSql: String =
+    HllLinearStrings.map(_ + "::DOUBLE").mkString("[", ", ", "]")
 
   /** Linear-counting estimate m * ln(m/V) via the literal table
     * (V = zero-register count, 1-indexed like the SQL list mirror). */

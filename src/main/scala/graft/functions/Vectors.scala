@@ -62,6 +62,16 @@ object Vectors {
       }
     }
 
+  /** DuckDB twin of [[lshBucket]] over the list column `vec`: one exact
+    * CASE term per plane of [[planeSigns]], summed into the bucket id. */
+  def planeBucketSql(vec: String, nPlanes: Int, dim: Int, table: Int = 0): String =
+    planeSigns(nPlanes, dim, table).zipWithIndex.map { case (s, i) =>
+      val arr = s.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")
+      s"""(CASE WHEN list_reduce(list_transform(list_zip($vec, [$arr]),
+         |        p -> p[1] * p[2]), (x, y) -> x + y) > 0
+         |      THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)""".stripMargin
+    }.mkString(" +\n      ")
+
   /** The int8 quantization scale, s = max|x|/127 — a full fold over the
     * vector. Hot paths must PROJECT this into a column once per row and
     * pass it to [[quantizeInt8(vec:Column,scale:Column)*]]: an expression

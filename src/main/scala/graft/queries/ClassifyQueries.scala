@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.CosineTopK
 import graft.engine.Tables.t
 import graft.functions.Vectors
 
@@ -38,13 +39,7 @@ object ClassifyQueries {
       |  SELECT vec_id AS qid, label AS true_label, embedding::DOUBLE[] AS qv
       |  FROM embeddings WHERE vec_id % 50 = 0),
       |e AS (SELECT vec_id, label AS nlabel, embedding::DOUBLE[] AS v FROM embeddings),
-      |scored AS (
-      |  SELECT q.qid, q.true_label, e.vec_id, e.nlabel,
-      |    ${SimilarityQueries.CosineSql} AS cos
-      |  FROM q, e WHERE e.vec_id <> q.qid),
-      |ranked AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rk
-      |  FROM scored),
+      |${SubPlans.rankedCtes("q, e WHERE", "q.qid, q.true_label, e.vec_id, e.nlabel")},
       |votes AS (
       |  SELECT qid, true_label, nlabel, COUNT(*) AS nv
       |  FROM ranked WHERE rk <= 5 GROUP BY qid, true_label, nlabel),
@@ -56,20 +51,13 @@ object ClassifyQueries {
       |       CAST(CASE WHEN nlabel = true_label THEN 1 ELSE 0 END AS BIGINT) AS correct
       |FROM pred WHERE vr = 1 ORDER BY qid""".stripMargin) { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    val q = emb.filter(col("vec_id") % 50 === 0)
+    val q = CosineTopK.withQueryNorm(emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("label").as("true_label"),
-        Vectors.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", Vectors.normNative(col("qv")))
-    val e = emb.select(col("vec_id"), col("label").as("nlabel"),
-      Vectors.asDouble(col("embedding")).as("v"))
-      .withColumn("vn", Vectors.normNative(col("v")))
-    val scored = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("true_label"), col("vec_id"), col("nlabel"),
-        Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn")).as("cos"))
-    val rkW = Window.partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
-    val votes = scored.withColumn("rk", row_number().over(rkW))
-      .filter(col("rk") <= 5)
+        Vectors.asDouble(col("embedding")).as("qv")))
+    val e = CosineTopK.withNorm(emb.select(col("vec_id"), col("label").as("nlabel"),
+      Vectors.asDouble(col("embedding")).as("v")))
+    val votes = CosineTopK(e.crossJoin(broadcast(q)), 5,
+        cols = Seq("qid", "true_label", "vec_id", "nlabel"))
       .groupBy("qid", "true_label", "nlabel")
       .agg(count(lit(1)).as("nv"))
     val vrW = Window.partitionBy("qid").orderBy(desc("nv"), asc("nlabel"))

@@ -143,7 +143,7 @@ object CorpusQueries {
       |    list_transform(qv, x -> x * 2.0) AS v FROM q),
       |scored AS (
       |  SELECT e.vec_id, q.bid,
-      |    ${SimilarityQueries.CosineSql} AS cos
+      |    ${SubPlans.CosineSql} AS cos
       |  FROM q, e),
       |best AS (
       |  SELECT vec_id, bid, cos,
@@ -1143,7 +1143,7 @@ object CorpusQueries {
         |      WHERE vec_id <> 0),
         |dense AS (
         |  SELECT e.vec_id AS doc_id,
-        |    ${SimilarityQueries.CosineSql} AS cos
+        |    ${SubPlans.CosineSql} AS cos
         |  FROM e, q ORDER BY cos DESC, e.vec_id LIMIT 50),
         |drk AS (
         |  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY cos DESC, doc_id) AS sem_rk

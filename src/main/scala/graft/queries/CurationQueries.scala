@@ -654,17 +654,7 @@ object CurationQueries {
     val train = ded.filter(
       Text.md5Hash32(concat(lit("split:"), col("doc_id").cast("string"))) % 100 < 90)
     // stage 4: pack into token-budget shards (the q_pack_shards recipe)
-    val d = train.select(col("doc_id"),
-      Text.packBucket(col("doc_id")).as("bucket"),
-      Text.tokenCount(col("text")).cast("long").as("toks"))
-    val w = Window.partitionBy("bucket").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    d.withColumn("cum_tokens", sum(col("toks")).over(w))
-      .withColumn("shard",
-        col("bucket") * Text.PackShardStride +
-          expr(s"(cum_tokens - toks) div ${Text.PackBudget}"))
-      .select(col("doc_id"), col("bucket"), col("shard"), col("toks"),
-        col("cum_tokens"))
+    SubPlans.packShards(train)
   }
 
   /** SHARD MANIFEST: the dataloader's index — one row per packed shard
@@ -793,6 +783,34 @@ object CurationQueries {
       .select(col("lang"), col("doc_id"), col("h"), col("rk"))
   }
 
+  /** DuckDB `tk` → `f`: per-document token count and the type/token,
+    * mean-token-length and stopword ppm features of the quality scorer.
+    * Twin of [[qualityFeatures]]. */
+  private val qualityFeatureCtes =
+    """tk AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+      |f AS (
+      |  SELECT doc_id,
+      |         CAST(len(tk) AS BIGINT) AS n_tokens,
+      |         CAST(len(list_distinct(tk)) * 1000000 // len(tk) AS BIGINT) AS distinct_ppm,
+      |         CAST(list_sum(list_transform(tk, t -> len(t))) * 1000000 // len(tk) AS BIGINT) AS wlen_ppm,
+      |         CAST(len(list_filter(tk, t -> t IN ('a', 'the'))) * 1000000 // len(tk) AS BIGINT) AS stop_ppm
+      |  FROM tk)""".stripMargin
+
+  /** (doc_id, n_tokens, distinct_ppm, wlen_ppm, stop_ppm) per document:
+    * the quality scorer's integer features. Twin of
+    * [[qualityFeatureCtes]]. */
+  private def qualityFeatures(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .select(col("doc_id"),
+        size(col("tk")).cast("long").as("n_tokens"),
+        expr("CAST(size(array_distinct(tk)) AS BIGINT) * 1000000 DIV size(tk)")
+          .as("distinct_ppm"),
+        expr("aggregate(tk, 0L, (a, x) -> a + length(x)) * 1000000 DIV size(tk)")
+          .as("wlen_ppm"),
+        expr("CAST(size(filter(tk, x -> x IN ('a', 'the'))) AS BIGINT) * 1000000 DIV size(tk)")
+          .as("stop_ppm"))
+
   /** LEARNED QUALITY-CLASSIFIER INFERENCE — the model-based filter stage
     * every production corpus pipeline runs between the Gopher-style rules
     * (q_repetition_quality) and dedup: a linear scorer (the fastText /
@@ -820,14 +838,7 @@ object CurationQueries {
     val wArr = weights.mkString("array(", "L, ", "L)")
     Q(
       "q_quality_score",
-      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |         CAST(len(tk) AS BIGINT) AS n_tokens,
-        |         CAST(len(list_distinct(tk)) * 1000000 // len(tk) AS BIGINT) AS distinct_ppm,
-        |         CAST(list_sum(list_transform(tk, t -> len(t))) * 1000000 // len(tk) AS BIGINT) AS wlen_ppm,
-        |         CAST(len(list_filter(tk, t -> t IN ('a', 'the'))) * 1000000 // len(tk) AS BIGINT) AS stop_ppm
-        |  FROM tk),
+      s"""WITH $qualityFeatureCtes,
         |s AS (
         |  SELECT doc_id, n_tokens, distinct_ppm, wlen_ppm, stop_ppm,
         |         CAST(${weights(0)} * distinct_ppm + ${weights(1)} * LEAST(n_tokens, 80)
@@ -836,16 +847,7 @@ object CurationQueries {
         |SELECT doc_id, n_tokens, distinct_ppm, wlen_ppm, stop_ppm, score,
         |       CASE WHEN score >= 340000000 THEN 'keep' ELSE 'drop' END AS verdict
         |FROM s ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val f = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("tk"))
-        .select(col("doc_id"),
-          size(col("tk")).cast("long").as("n_tokens"),
-          expr("CAST(size(array_distinct(tk)) AS BIGINT) * 1000000 DIV size(tk)")
-            .as("distinct_ppm"),
-          expr("aggregate(tk, 0L, (a, x) -> a + length(x)) * 1000000 DIV size(tk)")
-            .as("wlen_ppm"),
-          expr("CAST(size(filter(tk, x -> x IN ('a', 'the'))) AS BIGINT) * 1000000 DIV size(tk)")
-            .as("stop_ppm"))
+      val f = qualityFeatures(s, dir)
       // the model: features zipped with the (broadcast-literal) weight
       // vector, folded in-row — integer dot product, no UDF, no shuffle
       val scored = f.withColumn("score",
@@ -968,14 +970,7 @@ object CurationQueries {
     * q_isotonic_calibration so the curve calibrated IS the curve
     * reported. */
   private[queries] val calibCtes =
-    """tk AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-      |f AS (
-      |  SELECT doc_id,
-      |         CAST(len(tk) AS BIGINT) AS n_tokens,
-      |         CAST(len(list_distinct(tk)) * 1000000 // len(tk) AS BIGINT) AS distinct_ppm,
-      |         CAST(list_sum(list_transform(tk, t -> len(t))) * 1000000 // len(tk) AS BIGINT) AS wlen_ppm,
-      |         CAST(len(list_filter(tk, t -> t IN ('a', 'the'))) * 1000000 // len(tk) AS BIGINT) AS stop_ppm
-      |  FROM tk),
+    s"""$qualityFeatureCtes,
       |s AS (
       |  SELECT doc_id, n_tokens,
       |         600 * distinct_ppm + 500000 * LEAST(n_tokens, 80)
@@ -1000,16 +995,7 @@ object CurationQueries {
     * (bin, n, pos_n, mean_pred_ppm, obs_rate_ppm). */
   private[queries] def calibBinned(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val b = t(s, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
-      .select(col("doc_id"),
-        size(col("tk")).cast("long").as("n_tokens"),
-        expr("CAST(size(array_distinct(tk)) AS BIGINT) * 1000000 DIV size(tk)")
-          .as("distinct_ppm"),
-        expr("aggregate(tk, 0L, (a, x) -> a + length(x)) * 1000000 DIV size(tk)")
-          .as("wlen_ppm"),
-        expr("CAST(size(filter(tk, x -> x IN ('a', 'the'))) AS BIGINT) * 1000000 DIV size(tk)")
-          .as("stop_ppm"))
+    val b = qualityFeatures(s, dir)
       .select(col("n_tokens"),
         expr("""600 * distinct_ppm + 500000 * LEAST(n_tokens, 80L)
                |  + 20 * wlen_ppm + (-900) * stop_ppm""".stripMargin).as("score"))

@@ -278,24 +278,10 @@ object EventQueries {
     * sketch replaces in production. */
   val hllDistinct: Q = {
     import graft.functions.Sketch
-    // rank of the 24 remaining hash bits: leading zeros + 1, as a pure
-    // integer CASE ladder (identical text in both engines)
-    val caseSql = (23 to 0 by -1)
-      .map(b => s"WHEN w >= ${1L << b} THEN ${24 - b}")
-      .mkString("CASE ", " ", " ELSE 25 END")
-    // 2^-m via a literal lookup table of EXACT finite-decimal dyadics —
-    // power(2.0, -m) is a libm call with no cross-engine bit guarantee;
-    // each element ::DOUBLE because a bare decimal list literal types as
-    // DECIMAL in DuckDB and rounds the deep dyadic terms
-    val invSql = Sketch.HllInvStrings.map(_ + "::DOUBLE").mkString("[", ", ", "]")
-    // m*ln(m/V) small-range table, same exact-decimal treatment (ln is
-    // libm-dependent; the finite V domain makes it enumerable instead)
-    val linSql = Sketch.HllLinearStrings.map(_ + "::DOUBLE").mkString("[", ", ", "]")
-    // alpha_256 * m^2 pre-multiplied in Scala so BOTH engines see ONE
-    // identical double literal (DuckDB parses bare decimal literals as
-    // DECIMAL and overflows multiplying them; an explicit DOUBLE cast of
-    // the single constant sidesteps decimal arithmetic entirely)
-    val AlphaM2 = Sketch.HllAlphaM2
+    // the rank ladder, the 2^-m and m*ln(m/V) tables and alpha_256 * m^2
+    // are Sketch's exact SQL literals, so no libm call (power, ln) enters
+    // either engine; alpha_256 * m^2 is cast DOUBLE because DuckDB parses
+    // a bare decimal literal as DECIMAL and overflows multiplying it
     Q(
       "q_hll_distinct",
       s"""WITH h AS (
@@ -305,22 +291,22 @@ object EventQueries {
         |rho AS (
         |  SELECT hv % 256 AS bucket, hv // 256 AS w FROM h),
         |ranked AS (
-        |  SELECT bucket, $caseSql AS r FROM rho),
+        |  SELECT bucket, ${Sketch.HllRankSql} AS r FROM rho),
         |regs AS (SELECT bucket, MAX(r) AS m FROM ranked GROUP BY bucket),
         |folded AS (
         |  SELECT COUNT(*) AS n_buckets,
-        |         SUM(($invSql)[m]) AS s,
+        |         SUM((${Sketch.HllInvSql})[m]) AS s,
         |         SUM(CASE WHEN m >= 25 THEN 1 ELSE 0 END) AS saturated
         |  FROM regs),
         |exact AS (SELECT COUNT(DISTINCT user_id) AS exact_distinct FROM events),
         |raw AS (
         |  SELECT f.n_buckets, 256 - f.n_buckets AS zb, f.saturated,
         |         f.s + (256 - f.n_buckets) AS hs,
-        |         CAST($AlphaM2 AS DOUBLE) / (f.s + (256 - f.n_buckets)) AS est
+        |         CAST(${Sketch.HllAlphaM2} AS DOUBLE) / (f.s + (256 - f.n_buckets)) AS est
         |  FROM folded f),
         |corrected AS (
         |  SELECT r.*, CASE WHEN r.zb > 0 AND r.est <= CAST(640.0 AS DOUBLE)
-        |                   THEN ($linSql)[CAST(r.zb AS INTEGER)]
+        |                   THEN (${Sketch.HllLinearSql})[CAST(r.zb AS INTEGER)]
         |                   ELSE r.est END AS cest
         |  FROM raw r)
         |SELECT CAST(c.n_buckets AS BIGINT) AS n_buckets,
@@ -381,12 +367,6 @@ object EventQueries {
     * per-group distinct is computed only to GRADE the sketch. */
   val hllByGroup: Q = {
     import graft.functions.Sketch
-    val caseSql = (23 to 0 by -1)
-      .map(b => s"WHEN w >= ${1L << b} THEN ${24 - b}")
-      .mkString("CASE ", " ", " ELSE 25 END")
-    val invSql = Sketch.HllInvStrings.map(_ + "::DOUBLE").mkString("[", ", ", "]")
-    val linSql = Sketch.HllLinearStrings.map(_ + "::DOUBLE").mkString("[", ", ", "]")
-    val AlphaM2 = Sketch.HllAlphaM2
     Q(
       "q_hll_by_group",
       s"""WITH h AS (
@@ -396,24 +376,24 @@ object EventQueries {
         |rho AS (
         |  SELECT event_type, hv % 256 AS bucket, hv // 256 AS w FROM h),
         |ranked AS (
-        |  SELECT event_type, bucket, $caseSql AS r FROM rho),
+        |  SELECT event_type, bucket, ${Sketch.HllRankSql} AS r FROM rho),
         |regs AS (
         |  SELECT event_type, bucket, MAX(r) AS m FROM ranked
         |  GROUP BY event_type, bucket),
         |folded AS (
         |  SELECT event_type, COUNT(*) AS n_buckets,
-        |         SUM(($invSql)[m]) AS s
+        |         SUM((${Sketch.HllInvSql})[m]) AS s
         |  FROM regs GROUP BY event_type),
         |exact AS (
         |  SELECT event_type, COUNT(DISTINCT user_id) AS exact_distinct
         |  FROM events GROUP BY event_type),
         |raw AS (
         |  SELECT f.event_type, f.n_buckets, 256 - f.n_buckets AS zb,
-        |         CAST($AlphaM2 AS DOUBLE) / (f.s + (256 - f.n_buckets)) AS est
+        |         CAST(${Sketch.HllAlphaM2} AS DOUBLE) / (f.s + (256 - f.n_buckets)) AS est
         |  FROM folded f),
         |corrected AS (
         |  SELECT r.*, CASE WHEN r.zb > 0 AND r.est <= CAST(640.0 AS DOUBLE)
-        |                   THEN ($linSql)[CAST(r.zb AS INTEGER)]
+        |                   THEN (${Sketch.HllLinearSql})[CAST(r.zb AS INTEGER)]
         |                   ELSE r.est END AS cest
         |  FROM raw r)
         |SELECT c.event_type,

@@ -108,6 +108,52 @@ object GraphQueries {
       |  GROUP BY b1.pk, b2.pk)""".stripMargin
   private val edgeCte = "edge AS (SELECT p1, p2 FROM pair WHERE nij >= 2)"
 
+  /** `nb`, `item` and `r`: the supported pairs with both item counts and
+    * the basket count. Twin of [[ruleCandidates]]. */
+  private val ruleCtes =
+    """nb AS (SELECT COUNT(DISTINCT ok) AS n_baskets FROM b),
+      |item AS (SELECT pk, COUNT(*) AS ni FROM b GROUP BY pk),
+      |r AS (SELECT p.p1, p.p2, p.nij, i1.ni AS n1, i2.ni AS n2, nb.n_baskets
+      |      FROM pair p JOIN item i1 ON i1.pk = p.p1
+      |                  JOIN item i2 ON i2.pk = p.p2, nb
+      |      WHERE p.nij >= 2)""".stripMargin
+
+  /** `sym`: each rule of `r` in both directions with its lift. Twin of
+    * [[liftSym]]. */
+  private val liftSymCte =
+    """sym AS (SELECT p1 AS src, p2 AS rec, nij,
+      |               nij * n_baskets * 1000000 // (n1 * n2) AS lift_ppm FROM r
+      |        UNION ALL
+      |        SELECT p2, p1, nij,
+      |               nij * n_baskets * 1000000 // (n1 * n2) FROM r)""".stripMargin
+
+  /** The supported pairs (nij >= 2) of the basket arrays `g`, joined to
+    * both item counts (`i1.ni`, `i2.ni`) and the basket count
+    * `n_baskets`. Twin of [[ruleCtes]]. */
+  private def ruleCandidates(g: DataFrame): DataFrame = {
+    val nb = g.agg(count(lit(1)).as("n_baskets"))
+    val item = g.select(explode(col("ps")).as("pk"))
+      .groupBy(col("pk")).agg(count(lit(1)).as("ni"))
+    pairsFromGrouped(g).filter(col("nij") >= 2)
+      .join(broadcast(item.as("i1")), col("p1") === col("i1.pk"))
+      .join(broadcast(item.as("i2")), col("p2") === col("i2.pk"))
+      .crossJoin(nb) // 1-row aggregate side
+  }
+
+  /** (src, rec, nij, lift_ppm): every rule of [[ruleCandidates]] in both
+    * directions. Twin of [[liftSymCte]]. */
+  private def liftSym(s: SparkSession, dir: String): DataFrame = {
+    // both union branches read r — cut once so the basket self-join
+    // doesn't run twice
+    val r = ruleCandidates(basketsGrouped(s, dir))
+      .select(col("p1"), col("p2"), col("nij"),
+        expr("nij * n_baskets * 1000000 DIV (i1.ni * i2.ni)").as("lift_ppm"))
+      .localCheckpoint(false)
+    r.select(col("p1").as("src"), col("p2").as("rec"), col("nij"), col("lift_ppm"))
+      .unionAll(r.select(col("p2").as("src"), col("p1").as("rec"),
+        col("nij"), col("lift_ppm")))
+  }
+
   /** MARKET-BASKET ASSOCIATION RULES — pair support / confidence / lift,
     * the classic co-occurrence mining primitive (Agrawal-Srikant Apriori
     * at its 2-itemset level, the level that matters for recommendation
@@ -130,26 +176,14 @@ object GraphQueries {
     "q_basket_rules",
     s"""WITH $basketsCte,
       |$pairCte,
-      |nb AS (SELECT COUNT(DISTINCT ok) AS n_baskets FROM b),
-      |item AS (SELECT pk, COUNT(*) AS ni FROM b GROUP BY pk),
-      |r AS (SELECT p.p1, p.p2, p.nij, i1.ni AS n1, i2.ni AS n2, nb.n_baskets
-      |      FROM pair p JOIN item i1 ON i1.pk = p.p1
-      |                  JOIN item i2 ON i2.pk = p.p2, nb
-      |      WHERE p.nij >= 2)
+      |$ruleCtes
       |SELECT p1, p2, nij, n1, n2,
       |       nij * 1000000 // n_baskets AS support_ppm,
       |       nij * 1000000 // n1 AS conf_1to2_ppm,
       |       nij * 1000000 // n2 AS conf_2to1_ppm,
       |       nij * n_baskets * 1000000 // (n1 * n2) AS lift_ppm
       |FROM r ORDER BY nij DESC, p1, p2 LIMIT 100""".stripMargin) { (s, dir) =>
-    val g = basketsGrouped(s, dir)
-    val nb = g.agg(count(lit(1)).as("n_baskets"))
-    val item = g.select(explode(col("ps")).as("pk"))
-      .groupBy(col("pk")).agg(count(lit(1)).as("ni"))
-    pairsFromGrouped(g).filter(col("nij") >= 2)
-      .join(broadcast(item.as("i1")), col("p1") === col("i1.pk"))
-      .join(broadcast(item.as("i2")), col("p2") === col("i2.pk"))
-      .crossJoin(nb) // 1-row aggregate side
+    ruleCandidates(basketsGrouped(s, dir))
       .select(col("p1"), col("p2"), col("nij"),
         col("i1.ni").as("n1"), col("i2.ni").as("n2"), col("n_baskets"))
       .select(col("p1"), col("p2"), col("nij"), col("n1"), col("n2"),
@@ -448,39 +482,14 @@ object GraphQueries {
     "q_recommend_topk",
     s"""WITH $basketsCte,
       |$pairCte,
-      |nb AS (SELECT COUNT(DISTINCT ok) AS n_baskets FROM b),
-      |item AS (SELECT pk, COUNT(*) AS ni FROM b GROUP BY pk),
-      |r AS (SELECT p.p1, p.p2, p.nij, i1.ni AS n1, i2.ni AS n2, nb.n_baskets
-      |      FROM pair p JOIN item i1 ON i1.pk = p.p1
-      |                  JOIN item i2 ON i2.pk = p.p2, nb
-      |      WHERE p.nij >= 2),
-      |sym AS (SELECT p1 AS src, p2 AS rec, nij,
-      |               nij * n_baskets * 1000000 // (n1 * n2) AS lift_ppm FROM r
-      |        UNION ALL
-      |        SELECT p2, p1, nij,
-      |               nij * n_baskets * 1000000 // (n1 * n2) FROM r),
+      |$ruleCtes,
+      |$liftSymCte,
       |rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY src
       |                 ORDER BY lift_ppm DESC, rec) AS rnk FROM sym)
       |SELECT src, rec, nij, lift_ppm, rnk
       |FROM rk WHERE rnk <= 3 ORDER BY src, rnk""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val g = basketsGrouped(s, dir)
-    val nb = g.agg(count(lit(1)).as("n_baskets"))
-    val item = g.select(explode(col("ps")).as("pk"))
-      .groupBy(col("pk")).agg(count(lit(1)).as("ni"))
-    // both union branches read r — cut once so the basket self-join
-    // doesn't run twice
-    val r = pairsFromGrouped(g).filter(col("nij") >= 2)
-      .join(broadcast(item.as("i1")), col("p1") === col("i1.pk"))
-      .join(broadcast(item.as("i2")), col("p2") === col("i2.pk"))
-      .crossJoin(nb)
-      .select(col("p1"), col("p2"), col("nij"),
-        expr("nij * n_baskets * 1000000 DIV (i1.ni * i2.ni)").as("lift_ppm"))
-      .localCheckpoint(false)
-    val sym = r.select(col("p1").as("src"), col("p2").as("rec"),
-        col("nij"), col("lift_ppm"))
-      .unionAll(r.select(col("p2").as("src"), col("p1").as("rec"),
-        col("nij"), col("lift_ppm")))
+    val sym = liftSym(s, dir)
     val w = Window.partitionBy("src").orderBy(col("lift_ppm").desc, col("rec"))
     sym.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 3)
@@ -549,17 +558,8 @@ object GraphQueries {
     "q_mutual_best_match",
     s"""WITH $basketsCte,
       |$pairCte,
-      |nb AS (SELECT COUNT(DISTINCT ok) AS n_baskets FROM b),
-      |item AS (SELECT pk, COUNT(*) AS ni FROM b GROUP BY pk),
-      |r AS (SELECT p.p1, p.p2, p.nij, i1.ni AS n1, i2.ni AS n2, nb.n_baskets
-      |      FROM pair p JOIN item i1 ON i1.pk = p.p1
-      |                  JOIN item i2 ON i2.pk = p.p2, nb
-      |      WHERE p.nij >= 2),
-      |sym AS (SELECT p1 AS src, p2 AS rec, nij,
-      |               nij * n_baskets * 1000000 // (n1 * n2) AS lift_ppm FROM r
-      |        UNION ALL
-      |        SELECT p2, p1, nij,
-      |               nij * n_baskets * 1000000 // (n1 * n2) FROM r),
+      |$ruleCtes,
+      |$liftSymCte,
       |best AS (SELECT src, rec, nij, lift_ppm FROM (
       |           SELECT *, ROW_NUMBER() OVER (PARTITION BY src
       |                     ORDER BY lift_ppm DESC, rec) AS rnk FROM sym)
@@ -570,21 +570,7 @@ object GraphQueries {
       |WHERE a.src < a.rec
       |ORDER BY p1""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val g = basketsGrouped(s, dir)
-    val nb = g.agg(count(lit(1)).as("n_baskets"))
-    val item = g.select(explode(col("ps")).as("pk"))
-      .groupBy(col("pk")).agg(count(lit(1)).as("ni"))
-    val r = pairsFromGrouped(g).filter(col("nij") >= 2)
-      .join(broadcast(item.as("i1")), col("p1") === col("i1.pk"))
-      .join(broadcast(item.as("i2")), col("p2") === col("i2.pk"))
-      .crossJoin(nb)
-      .select(col("p1"), col("p2"), col("nij"),
-        expr("nij * n_baskets * 1000000 DIV (i1.ni * i2.ni)").as("lift_ppm"))
-      .localCheckpoint(false)
-    val sym = r.select(col("p1").as("src"), col("p2").as("rec"),
-        col("nij"), col("lift_ppm"))
-      .unionAll(r.select(col("p2").as("src"), col("p1").as("rec"),
-        col("nij"), col("lift_ppm")))
+    val sym = liftSym(s, dir)
     val w = Window.partitionBy("src").orderBy(col("lift_ppm").desc, col("rec"))
     val best = sym.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") === 1).drop("rnk")

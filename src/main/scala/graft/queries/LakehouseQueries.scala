@@ -179,12 +179,6 @@ object LakehouseQueries {
     * key's 3 bit-checks with one narrow aggregation. Nothing in the
     * composition shuffles build-against-probe. */
   val adaptiveBloom: Q = {
-    val rankCase = (23 to 0 by -1)
-      .map(b => s"WHEN w >= ${1L << b} THEN ${24 - b}")
-      .mkString("CASE ", " ", " ELSE 25 END")
-    val invSql = Sketch.HllInvStrings.map(_ + "::DOUBLE").mkString("[", ", ", "]")
-    val linSql = Sketch.HllLinearStrings.map(_ + "::DOUBLE").mkString("[", ", ", "]")
-    val AlphaM2 = Sketch.HllAlphaM2
     // est <= 2^(j-4)  ->  m = 2^j  (16 bits per estimated key), j in 10..20
     val ladderSql = (10 to 20)
       .map(j => s"WHEN est <= ${1L << (j - 4)} THEN ${1L << j}")
@@ -204,18 +198,18 @@ object LakehouseQueries {
         |  SELECT CAST(('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) AS hv
         |  FROM members),
         |ranked AS (
-        |  SELECT bucket, $rankCase AS r
+        |  SELECT bucket, ${Sketch.HllRankSql} AS r
         |  FROM (SELECT hv % 256 AS bucket, hv // 256 AS w FROM h)),
         |regs AS (SELECT bucket, MAX(r) AS mr FROM ranked GROUP BY bucket),
         |folded AS (
-        |  SELECT COUNT(*) AS nb, SUM(($invSql)[mr]) AS s FROM regs),
+        |  SELECT COUNT(*) AS nb, SUM((${Sketch.HllInvSql})[mr]) AS s FROM regs),
         |raw AS (
         |  SELECT 256 - nb AS zb,
-        |         CAST($AlphaM2 AS DOUBLE) / (s + (256 - nb)) AS est0
+        |         CAST(${Sketch.HllAlphaM2} AS DOUBLE) / (s + (256 - nb)) AS est0
         |  FROM folded),
         |cfg0 AS (
         |  SELECT CASE WHEN zb > 0 AND est0 <= CAST(640.0 AS DOUBLE)
-        |              THEN ($linSql)[CAST(zb AS INTEGER)]
+        |              THEN (${Sketch.HllLinearSql})[CAST(zb AS INTEGER)]
         |              ELSE est0 END AS est
         |  FROM raw),
         |cfg AS (SELECT est, $ladderSql AS m_bits FROM cfg0),

@@ -716,8 +716,10 @@ object ProfileQueries {
     * LEAST 255 — negative values would otherwise hit the floor-vs-truncate
     * divergence between DuckDB `//` and Spark `DIV`), and the CDF divisors
     * are `GREATEST(n, 1)` so a type whose rows all fall in one epoch
-    * yields an explicit ks_ppm (vs the other epoch's empty CDF) with an
-    * infinite threshold → drifted=false, never a silent NULL verdict.
+    * yields an explicit ks_ppm (vs the other epoch's empty CDF); its
+    * threshold divides by zero, so thresh_ppm and drifted read NULL in
+    * both engines. The fold is [[graft.streaming.Streams.ksFold]], shared
+    * with the streamed registers.
     *
     * Shape at 100 TB: two map-side-combined aggregations ((type, bucket,
     * epoch) counts, per-type totals broadcast back), then a per-type
@@ -756,7 +758,6 @@ object ProfileQueries {
       |                        / (CAST(MIN(n1) AS DOUBLE) * CAST(MIN(n2) AS DOUBLE)))
       |         AS drifted
       |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val ev = t(s, dir, "events")
     val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
       max(unix_micros(col("ts"))).as("hi"))
@@ -766,26 +767,9 @@ object ProfileQueries {
           lit(255L)).as("bucket"),
         when(unix_micros(col("ts")) * 2 < col("lo") + col("hi"), 0L)
           .otherwise(1L).as("epoch"))
-    val c = v.groupBy(col("event_type"), col("bucket"))
+    graft.streaming.Streams.ksFold(v.groupBy(col("event_type"), col("bucket"))
       .agg(sum(when(col("epoch") === 0, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("epoch") === 1, 1L).otherwise(0L)).as("c2"))
-    val n = c.groupBy(col("event_type").as("ntype"))
-      .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-    val w = Window.partitionBy("event_type").orderBy("bucket")
-    val gaps = c.join(broadcast(n), col("event_type") === col("ntype"))
-      .withColumn("cum1", sum(col("c1")).over(w))
-      .withColumn("cum2", sum(col("c2")).over(w))
-      .select(col("event_type"), col("n1"), col("n2"),
-        abs(expr("cum1 * 1000000 DIV GREATEST(n1, 1)") -
-            expr("cum2 * 1000000 DIV GREATEST(n2, 1)")).as("gap_ppm"))
-    val thresh = lit(1358000.0) *
-      sqrt((min(col("n1")) + min(col("n2"))).cast("double") /
-        (min(col("n1")).cast("double") * min(col("n2")).cast("double")))
-    gaps.groupBy(col("event_type"))
-      .agg(min(col("n1")).as("n1"), min(col("n2")).as("n2"),
-        max(col("gap_ppm")).cast("long").as("ks_ppm"),
-        thresh.as("thresh_ppm"),
-        (max(col("gap_ppm")).cast("double") > thresh).as("drifted"))
+        sum(when(col("epoch") === 1, 1L).otherwise(0L)).as("c2")))
   }
 
   /** GINI CONCENTRATION of per-user spend within each event type — the

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Det.{davg, dsum, ts}
 import graft.engine.Tables.t
@@ -271,10 +271,18 @@ object RelationalQueries {
         col("sum_qty"))
   }
 
+  /** The grand-total grouping set `()` of `df` as a global aggregate: one
+    * row of `aggs` with every key NULL, even on empty input, as SQL
+    * yields it (the `()` set of Spark's Expand-based grouping sets yields
+    * no row there). */
+  private def grandTotal(df: DataFrame, keys: Seq[String], aggs: Seq[Column]): DataFrame =
+    df.agg(aggs.head, aggs.tail: _*)
+      .select(keys.map(k => lit(null).cast(df.schema(k).dataType).as(k)) :+ col("*"): _*)
+
   /** Explicit GROUPING SETS — the general form rollup/cube specialize: a
-    * caller-chosen set list ((flag, status), (status), ()) in ONE pass
-    * (Spark plans one Expand + one hash aggregation, same as rollup/cube).
-    * Per-column GROUPING flags disambiguate a real NULL from a rolled-up
+    * caller-chosen set list ((flag, status), (status), ()) — the first two
+    * in one Expand + hash aggregation, the grand total `()` as a global
+    * aggregate ([[grandTotal]]). Per-column GROUPING flags disambiguate a real NULL from a rolled-up
     * level — emitted as separate 0/1 columns rather than a combined
     * grouping_id, whose bit order is an engine convention the oracle
     * should not depend on. */
@@ -289,23 +297,26 @@ object RelationalQueries {
       |FROM lineitem
       |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus), ())
       |ORDER BY g_flag, g_status, returnflag, linestatus""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem")
-      .groupingSets(
-        Seq(Seq(col("l_returnflag"), col("l_linestatus")),
-          Seq(col("l_linestatus")), Seq.empty),
+    val li = t(s, dir, "lineitem")
+    val sums = Seq(count(lit(1)).as("n_rows"), dsum(col("l_quantity")).as("sum_qty"))
+    li.groupingSets(
+        Seq(Seq(col("l_returnflag"), col("l_linestatus")), Seq(col("l_linestatus"))),
         col("l_returnflag"), col("l_linestatus"))
       // grouping() is an aggregate-context function in Spark — it must be
       // computed HERE, inside the GroupingSets aggregate, not downstream
       .agg(grouping(col("l_returnflag")).cast("long").as("g_flag"),
-        grouping(col("l_linestatus")).cast("long").as("g_status"),
-        count(lit(1)).as("n_rows"), dsum(col("l_quantity")).as("sum_qty"))
+        grouping(col("l_linestatus")).cast("long").as("g_status") +: sums: _*)
+      .unionAll(grandTotal(li, Seq("l_returnflag", "l_linestatus"),
+        lit(1L).as("g_flag") +: lit(1L).as("g_status") +: sums))
       .select(
         coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
         coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
         col("g_flag"), col("g_status"), col("n_rows"), col("sum_qty"))
   }
 
-  /** CUBE grouping-sets aggregation (SURVEY §2.4 extension). */
+  /** CUBE grouping-sets aggregation (SURVEY §2.4 extension): the three
+    * keyed sets in one Expand + hash aggregation, the grand total as a
+    * global aggregate ([[grandTotal]]). */
   val cubeAgg: Q = Q(
     "q_cube",
     """SELECT COALESCE(o_orderstatus, 'ALL') AS orderstatus,
@@ -315,9 +326,12 @@ object RelationalQueries {
       |FROM orders
       |GROUP BY CUBE (o_orderstatus, o_orderpriority)
       |ORDER BY orderstatus, orderpriority""".stripMargin) { (s, dir) =>
-    t(s, dir, "orders")
-      .cube("o_orderstatus", "o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
+    val o = t(s, dir, "orders")
+    val (st, pr) = (col("o_orderstatus"), col("o_orderpriority"))
+    val aggs = Seq(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
+    o.groupingSets(Seq(Seq(st, pr), Seq(st), Seq(pr)), st, pr)
+      .agg(aggs.head, aggs.tail: _*)
+      .unionAll(grandTotal(o, Seq("o_orderstatus", "o_orderpriority"), aggs))
       .select(
         coalesce(col("o_orderstatus"), lit("ALL")).as("orderstatus"),
         coalesce(col("o_orderpriority"), lit("ALL")).as("orderpriority"),

@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{Dedup, Ivf, Pairs, Similarity, Tables}
+import graft.engine.{CosineTopK, Dedup, Ivf, Pairs, Similarity, Tables}
 import graft.engine.Tables.t
-import graft.queries.SubPlans.closureCtes
+import graft.queries.SubPlans.{CosineSql, closureCtes, cosineTopKSql}
 import graft.functions.Vectors
 
 /** LLM-data-pipeline batch 2: similarity search over the `embeddings` table.
@@ -27,14 +27,6 @@ import graft.functions.Vectors
   */
 object SimilarityQueries {
 
-  /** Sequential-fold cosine between `q.qv` and `e.v` — shared with the
-    * classifier-eval batch (ClassifyQueries) so every consumer mirrors the
-    * same IEEE evaluation tree. */
-  private[queries] val CosineSql =
-    """list_reduce(list_transform(list_zip(q.qv, e.v), p -> p[1] * p[2]), (x, y) -> x + y)
-      |    / (sqrt(list_reduce(list_transform(q.qv, x -> x * x), (x, y) -> x + y))
-      |     * sqrt(list_reduce(list_transform(e.v, x -> x * x), (x, y) -> x + y)))""".stripMargin
-
   /** Brute-force cosine TOP-K — the exact ground-truth yardstick the ANN
     * paths approximate (and q_ann_recall grades against): broadcast query
     * batch (vec_id % 50), projected norms, one rank window per query.
@@ -46,33 +38,16 @@ object SimilarityQueries {
       |  SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
       |  FROM embeddings WHERE vec_id % 50 = 0),
       |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |scored AS (
-      |  SELECT q.qid, e.vec_id,
-      |    $CosineSql AS cos
-      |  FROM q, e WHERE e.vec_id <> q.qid),
-      |ranked AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rk
-      |  FROM scored)
-      |SELECT qid, vec_id, cos, rk FROM ranked
-      |WHERE rk <= 5
-      |ORDER BY qid, rk""".stripMargin) { (s, dir) =>
+      |${cosineTopKSql("q, e WHERE", 5)}""".stripMargin) { (s, dir) =>
     val emb = t(s, dir, "embeddings")
     // norms are projected per VECTOR before the join (one evaluation each),
     // not per scored pair; the division tree matches the oracle's, so the
     // doubles are bit-identical
-    val q = emb.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), Vectors.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", Vectors.normNative(col("qv")))
-    val e = emb.select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v"))
-      .withColumn("vn", Vectors.normNative(col("v")))
-    val scored = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn")).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .orderBy("qid", "rk")
+    val q = CosineTopK.withQueryNorm(emb.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("qid"), Vectors.asDouble(col("embedding")).as("qv")))
+    val e = CosineTopK.withNorm(
+      emb.select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v")))
+    CosineTopK(e.crossJoin(broadcast(q)), 5).orderBy("qid", "rk")
   }
 
   /** IVF-style ANN with LABEL cells: candidates come from an equi-join on
@@ -86,32 +61,14 @@ object SimilarityQueries {
       |  SELECT vec_id AS qid, label, embedding::DOUBLE[] AS qv
       |  FROM embeddings WHERE vec_id % 50 = 0),
       |e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-      |scored AS (
-      |  SELECT q.qid, e.vec_id,
-      |    $CosineSql AS cos
-      |  FROM q JOIN e ON q.label = e.label AND e.vec_id <> q.qid),
-      |ranked AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rk
-      |  FROM scored)
-      |SELECT qid, vec_id, cos, rk FROM ranked
-      |WHERE rk <= 3
-      |ORDER BY qid, rk""".stripMargin) { (s, dir) =>
+      |${cosineTopKSql("q JOIN e ON q.label = e.label AND", 3)}""".stripMargin) { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    val q = emb.filter(col("vec_id") % 50 === 0)
+    val q = CosineTopK.withQueryNorm(emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("label"),
-        Vectors.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", Vectors.normNative(col("qv")))
-    val e = emb.select(col("vec_id"), col("label"),
-      Vectors.asDouble(col("embedding")).as("v"))
-      .withColumn("vn", Vectors.normNative(col("v")))
-    val scored = e.join(broadcast(q), "label")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn")).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .orderBy("qid", "rk")
+        Vectors.asDouble(col("embedding")).as("qv")))
+    val e = CosineTopK.withNorm(emb.select(col("vec_id"), col("label"),
+      Vectors.asDouble(col("embedding")).as("v")))
+    CosineTopK(e.join(broadcast(q), "label"), 3).orderBy("qid", "rk")
   }
 
   /** LSH-bucketed ANN: 4 hyperplanes -> 16 buckets; queries meet candidates
@@ -121,13 +78,7 @@ object SimilarityQueries {
     * and therefore the whole query — is fully oracle-checked. Twin and
     * recall behavior additionally covered in SimilaritySpec. */
   val annLsh: Q = {
-    val signs = Vectors.planeSigns(nPlanes = 4, dim = 64)
-    val bucketSql = signs.zipWithIndex.map { case (s, i) =>
-      val arr = s.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")
-      s"""(CASE WHEN list_reduce(list_transform(list_zip(v, [$arr]),
-         |        p -> p[1] * p[2]), (x, y) -> x + y) > 0
-         |      THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)""".stripMargin
-    }.mkString(" +\n      ")
+    val bucketSql = Vectors.planeBucketSql("v", nPlanes = 4, dim = 64)
     Q(
       "q_ann_lsh",
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -136,33 +87,15 @@ object SimilarityQueries {
         |      $bucketSql AS bucket
         |  FROM e0),
         |q AS (SELECT vec_id AS qid, bucket, v AS qv FROM b WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.qid, e.vec_id,
-        |    $CosineSql AS cos
-        |  FROM q JOIN b e ON e.bucket = q.bucket AND e.vec_id <> q.qid),
-        |ranked AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rk
-        |  FROM scored)
-        |SELECT qid, vec_id, cos, rk FROM ranked
-        |WHERE rk <= 3
-        |ORDER BY qid, rk""".stripMargin) { (s, dir) =>
+        |${cosineTopKSql("q JOIN b e ON e.bucket = q.bucket AND", 3)}""".stripMargin) { (s, dir) =>
       val emb = Similarity.lshIndex(
         Tables.t(s, dir, "embeddings"), "vec_id", "embedding", dim = 64, nPlanes = 4)
-      val q = emb.filter(col("vec_id") % 50 === 0)
+      val q = CosineTopK.withQueryNorm(emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("bucket"),
-          Vectors.asDouble(col("embedding")).as("qv"))
-        .withColumn("qn", Vectors.normNative(col("qv")))
-      val e = emb.select(col("vec_id"), col("bucket"),
-        Vectors.asDouble(col("embedding")).as("v"))
-        .withColumn("vn", Vectors.normNative(col("v")))
-      val scored = e.join(broadcast(q), "bucket")
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn")).as("cos"))
-      val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
-      scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .orderBy("qid", "rk")
+          Vectors.asDouble(col("embedding")).as("qv")))
+      val e = CosineTopK.withNorm(emb.select(col("vec_id"), col("bucket"),
+        Vectors.asDouble(col("embedding")).as("v")))
+      CosineTopK(e.join(broadcast(q), "bucket"), 3).orderBy("qid", "rk")
     }
   }
 
@@ -765,36 +698,18 @@ object SimilarityQueries {
       |           c -> CAST(c AS DOUBLE) * CAST(CAST(s_d AS FLOAT) AS DOUBLE)) AS v
       |  FROM sc),
       |q AS (SELECT vec_id AS qid, label, v0 AS qv FROM e0 WHERE vec_id % 50 = 0),
-      |scored AS (
-      |  SELECT q.qid, e.vec_id,
-      |    $CosineSql AS cos
-      |  FROM q JOIN dq e ON q.label = e.label AND e.vec_id <> q.qid),
-      |ranked AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rk
-      |  FROM scored)
-      |SELECT qid, vec_id, cos, rk FROM ranked
-      |WHERE rk <= 3
-      |ORDER BY qid, rk""".stripMargin) { (s, dir) =>
+      |${cosineTopKSql("q JOIN dq e ON q.label = e.label AND", 3)}""".stripMargin) { (s, dir) =>
     val e0 = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), Vectors.asDouble(col("embedding")).as("v0"))
-    val dq = e0
+    val dq = CosineTopK.withNorm(e0
       // scale hoisted (see q_quantize_roundtrip): one max-abs fold per row
       .withColumn("s_d", Vectors.maxAbsScale(col("v0")))
       .withColumn("q8", Vectors.quantizeInt8(col("v0"), col("s_d")))
       .select(col("vec_id"), col("label"),
-        Vectors.dequantizeInt8(col("q8")).as("v"))
-      .withColumn("vn", Vectors.normNative(col("v")))
-    val q = e0.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("label"), col("v0").as("qv"))
-      .withColumn("qn", Vectors.normNative(col("qv")))
-    val scored = dq.join(broadcast(q), "label")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn")).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .orderBy("qid", "rk")
+        Vectors.dequantizeInt8(col("q8")).as("v")))
+    val q = CosineTopK.withQueryNorm(e0.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("qid"), col("label"), col("v0").as("qv")))
+    CosineTopK(dq.join(broadcast(q), "label"), 3).orderBy("qid", "rk")
   }
 
   /** LEARNED-IVF ANN search (Ivf.learnedCellRanks): hyperplane-LSH init
@@ -809,13 +724,7 @@ object SimilarityQueries {
   val annIvfLearned: Q = {
     val nPlanes = 3
     val dim = 64
-    val signs = Vectors.planeSigns(nPlanes, dim, table = 1)
-    val cellSql = signs.zipWithIndex.map { case (s, i) =>
-      val arr = s.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")
-      s"""(CASE WHEN list_reduce(list_transform(list_zip(v, [$arr]),
-         |        p -> p[1] * p[2]), (x, y) -> x + y) > 0
-         |      THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)""".stripMargin
-    }.mkString(" +\n      ")
+    val cellSql = Vectors.planeBucketSql("v", nPlanes, dim, table = 1)
     Q(
       "q_ann_ivf_learned",
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -846,16 +755,7 @@ object SimilarityQueries {
         |asg AS (SELECT vec_id, cell, v FROM rkd WHERE rk = 1),
         |q AS (SELECT vec_id AS qid, cell, v AS qv FROM rkd
         |      WHERE vec_id % 50 = 0 AND rk <= 2),
-        |scored AS (
-        |  SELECT q.qid, e.vec_id,
-        |    $CosineSql AS cos
-        |  FROM q JOIN asg e ON q.cell = e.cell AND e.vec_id <> q.qid),
-        |ranked AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rk
-        |  FROM scored)
-        |SELECT qid, vec_id, cos, rk FROM ranked
-        |WHERE rk <= 3
-        |ORDER BY qid, rk""".stripMargin) { (s, dir) =>
+        |${cosineTopKSql("q JOIN asg e ON q.cell = e.cell AND", 3)}""".stripMargin) { (s, dir) =>
       // the learned fit (posexplode + two aggregations + centroid ranking)
       // feeds BOTH the assignment side and the probe side — checkpoint it
       // once so neither consumer re-executes the pipeline (the
@@ -863,20 +763,12 @@ object SimilarityQueries {
       val ranks = Ivf.learnedCellRanks(t(s, dir, "embeddings"), "vec_id",
         "embedding", dim = dim, nPlanes = nPlanes, table = 1)
         .localCheckpoint(eager = true)
-      val asg = ranks.filter(col("rk") === 1)
-        .select(col("vec_id"), col("cell"), col("v"))
-        .withColumn("vn", Vectors.normNative(col("v")))
-      val q = ranks.filter(col("vec_id") % 50 === 0 && col("rk") <= 2)
-        .select(col("vec_id").as("qid"), col("cell"), col("v").as("qv"))
-        .withColumn("qn", Vectors.normNative(col("qv")))
-      val scored = asg.join(broadcast(q), "cell")
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn")).as("cos"))
-      val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
-      scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .orderBy("qid", "rk")
+      val asg = CosineTopK.withNorm(ranks.filter(col("rk") === 1)
+        .select(col("vec_id"), col("cell"), col("v")))
+      val q = CosineTopK.withQueryNorm(
+        ranks.filter(col("vec_id") % 50 === 0 && col("rk") <= 2)
+          .select(col("vec_id").as("qid"), col("cell"), col("v").as("qv")))
+      CosineTopK(asg.join(broadcast(q), "cell"), 3).orderBy("qid", "rk")
     }
   }
 
@@ -886,6 +778,12 @@ object SimilarityQueries {
   private val PqM = 4
   private val PqSubDim = 16
   private val PqPlanes = 2
+
+  /** SQL mirror of [[pqPipeline]]'s per-subspace init cell of `sv`. */
+  private val pqCellCase = (0 until PqM)
+    .map(m => s"WHEN $m THEN (\n      " +
+      s"${Vectors.planeBucketSql("sv", PqPlanes, PqSubDim, table = 20 + m)})")
+    .mkString(s"CASE m\n      ", "\n      ", "\n      END")
 
   /** The q_ann_pq Spark pipeline with the QUERY-BATCH predicate
     * parametrized: the declared query self-searches (`vec_id % 50 = 0`,
@@ -1013,19 +911,7 @@ object SimilarityQueries {
     * bounded top-k join-back. Implementation: [[pqSearchTopK]] with the
     * self-search batch (`vec_id % 50 = 0`). */
   val annPq: Q = {
-    val M = PqM; val SubDim = PqSubDim; val Planes = PqPlanes
-    def cellSqlFor(m: Int): String = {
-      val signs = Vectors.planeSigns(Planes, SubDim, table = 20 + m)
-      signs.zipWithIndex.map { case (s, i) =>
-        val arr = s.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")
-        s"""(CASE WHEN list_reduce(list_transform(list_zip(sv, [$arr]),
-           |        p -> p[1] * p[2]), (x, y) -> x + y) > 0
-           |      THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)""".stripMargin
-      }.mkString(" +\n      ")
-    }
-    val cellCase = (0 until M)
-      .map(m => s"WHEN $m THEN (\n      ${cellSqlFor(m)})")
-      .mkString(s"CASE m\n      ", "\n      ", "\n      END")
+    val M = PqM; val SubDim = PqSubDim
     Q(
       "q_ann_pq",
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -1034,7 +920,7 @@ object SimilarityQueries {
         |  FROM e0 CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS m) ms),
         |b AS (
         |  SELECT vec_id, m, sv,
-        |    $cellCase AS cell0
+        |    $pqCellCase AS cell0
         |  FROM sub),
         |pos AS (
         |  SELECT m, cell0, unnest(sv) AS x, generate_subscripts(sv, 1) AS pos FROM b),
@@ -1107,19 +993,7 @@ object SimilarityQueries {
     * work is |cell|/64 bytes-equivalent of codes. Implementation:
     * [[ivfPqSearchTopK]] with the self-search batch. */
   val annIvfPq: Q = {
-    val M = PqM; val SubDim = PqSubDim; val Planes = PqPlanes
-    def cellSqlFor(m: Int): String = {
-      val signs = Vectors.planeSigns(Planes, SubDim, table = 20 + m)
-      signs.zipWithIndex.map { case (s, i) =>
-        val arr = s.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")
-        s"""(CASE WHEN list_reduce(list_transform(list_zip(sv, [$arr]),
-           |        p -> p[1] * p[2]), (x, y) -> x + y) > 0
-           |      THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)""".stripMargin
-      }.mkString(" +\n      ")
-    }
-    val cellCase = (0 until M)
-      .map(m => s"WHEN $m THEN (\n      ${cellSqlFor(m)})")
-      .mkString(s"CASE m\n      ", "\n      ", "\n      END")
+    val M = PqM; val SubDim = PqSubDim
     Q(
       "q_ann_ivfpq",
       s"""WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
@@ -1129,7 +1003,7 @@ object SimilarityQueries {
         |  FROM e0 CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS m) ms),
         |b AS (
         |  SELECT vec_id, label, m, sv,
-        |    $cellCase AS cell0
+        |    $pqCellCase AS cell0
         |  FROM sub),
         |pos AS (
         |  SELECT m, cell0, unnest(sv) AS x, generate_subscripts(sv, 1) AS pos FROM b),
@@ -1215,25 +1089,15 @@ object SimilarityQueries {
       |FROM q LEFT JOIN h ON h.qid = q.qid
       |ORDER BY q.qid""".stripMargin) { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    val q = emb.filter(col("vec_id") % 50 === 0)
+    val q = CosineTopK.withQueryNorm(emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        Vectors.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", Vectors.normNative(col("qv")))
-    val e = emb.select(col("vec_id"), col("label"),
-      Vectors.asDouble(col("embedding")).as("v"))
-      .withColumn("vn", Vectors.normNative(col("v")))
-    def top3(scored: DataFrame): DataFrame = {
-      val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
-      scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3).select("qid", "vec_id")
-    }
-    val cos = Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn"))
-    val bf = top3(e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), cos.as("cos")))
-    val iv = top3(e.join(broadcast(q), col("label") === col("qlabel"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), cos.as("cos")))
+        Vectors.asDouble(col("embedding")).as("qv")))
+    val e = CosineTopK.withNorm(emb.select(col("vec_id"), col("label"),
+      Vectors.asDouble(col("embedding")).as("v")))
+    def top3(cands: DataFrame): DataFrame =
+      CosineTopK(cands, 3).select("qid", "vec_id")
+    val bf = top3(e.crossJoin(broadcast(q)))
+    val iv = top3(e.join(broadcast(q), col("label") === col("qlabel")))
     val hits = bf.join(iv, Seq("qid", "vec_id")).groupBy("qid")
       .agg(count(lit(1)).as("hits"))
     q.select("qid").join(hits, Seq("qid"), "left")
@@ -1322,13 +1186,7 @@ object SimilarityQueries {
   val semDedup: Q = {
     val nPlanes = 3
     val dim = 64
-    val signs = Vectors.planeSigns(nPlanes, dim, table = 1)
-    val cellSql = signs.zipWithIndex.map { case (s, i) =>
-      val arr = s.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")
-      s"""(CASE WHEN list_reduce(list_transform(list_zip(v, [$arr]),
-         |        p -> p[1] * p[2]), (x, y) -> x + y) > 0
-         |      THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)""".stripMargin
-    }.mkString(" +\n      ")
+    val cellSql = Vectors.planeBucketSql("v", nPlanes, dim, table = 1)
     Q(
       "q_semdedup",
       s"""WITH planted AS (
@@ -1766,7 +1624,7 @@ object SimilarityQueries {
   }
 
   /** Sequential-fold cosine between two named array expressions — the
-    * [[CosineSql]] tree parametrized over its operands, for mirrors that
+    * [[SubPlans.CosineSql]] tree parametrized over its operands, for mirrors that
     * score pairs other than (q, e). */
   private def cosSqlOf(a: String, b: String): String =
     s"""list_reduce(list_transform(list_zip($a, $b), p -> p[1] * p[2]), (x, y) -> x + y)

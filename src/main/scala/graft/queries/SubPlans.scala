@@ -1,13 +1,17 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables.t
+import graft.functions.Text
 
 /** Sub-plans that several query families share, each with its DuckDB
-  * twin: the zero-filled daily calendar grid and the component closure.
-  * The pair expansion the basket, shingle and Gram queries share is
-  * [[graft.engine.Pairs]]. */
+  * twin: the zero-filled daily calendar grid, the component closure, the
+  * exact-cosine top-k tail, token-budget packing, the token-set overlap
+  * core and the document quality features. The pair expansion the basket,
+  * shingle and Gram queries share is [[graft.engine.Pairs]]; the cosine
+  * top-k operator itself is [[graft.engine.CosineTopK]]. */
 object SubPlans {
 
   /** Every day from the first to the last `d` of `daily`, for each distinct
@@ -76,4 +80,50 @@ object SubPlans {
       |  SELECT reach.id, sym.b FROM reach JOIN sym ON reach.r = sym.a),
       |comp AS (SELECT id, LEAST(id, MIN(r)) AS cluster FROM reach GROUP BY id)"""
       .stripMargin
+
+  /** Sequential-fold cosine between `q.qv` and `e.v`, the IEEE evaluation
+    * tree [[graft.functions.Vectors.cosineFromNorms]] mirrors. */
+  val CosineSql: String =
+    """list_reduce(list_transform(list_zip(q.qv, e.v), p -> p[1] * p[2]), (x, y) -> x + y)
+      |    / (sqrt(list_reduce(list_transform(q.qv, x -> x * x), (x, y) -> x + y))
+      |     * sqrt(list_reduce(list_transform(e.v, x -> x * x), (x, y) -> x + y)))""".stripMargin
+
+  /** `scored`: the `cols` of each candidate pair of `FROM $cands` other
+    * than the query itself, with its cosine; `ranked`: those rows ranked
+    * per query by (cos desc, vec_id) as `rk`. Twin of
+    * [[graft.engine.CosineTopK]]; `cands` ends in `WHERE` or `AND`. */
+  def rankedCtes(cands: String, cols: String = "q.qid, e.vec_id"): String =
+    s"""scored AS (
+      |  SELECT $cols,
+      |    $CosineSql AS cos
+      |  FROM $cands e.vec_id <> q.qid),
+      |ranked AS (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rk
+      |  FROM scored)""".stripMargin
+
+  /** [[rankedCtes]] and its top `k` per query, ordered. */
+  def cosineTopKSql(cands: String, k: Int): String =
+    s"""${rankedCtes(cands)}
+      |SELECT qid, vec_id, cos, rk FROM ranked
+      |WHERE rk <= $k
+      |ORDER BY qid, rk""".stripMargin
+
+  /** (doc_id, bucket, shard, toks, cum_tokens): each document of `docs`
+    * (doc_id, text) packed into its md5 bucket's token-budget shards, by
+    * the cumulative token count per bucket in doc_id order. */
+  def packShards(docs: DataFrame): DataFrame = {
+    val w = Window.partitionBy("bucket").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    docs.select(col("doc_id"),
+        Text.packBucket(col("doc_id")).as("bucket"),
+        Text.tokenCount(col("text")).cast("long").as("toks"))
+      .withColumn("cum_tokens", sum(col("toks")).over(w))
+      // `div` (not `/`): integer floor division on both engines — plain `/`
+      // is a double divide in Spark and its BIGINT cast would round in
+      // DuckDB, truncate in Spark
+      .withColumn("shard",
+        col("bucket") * Text.PackShardStride +
+          expr(s"(cum_tokens - toks) div ${Text.PackBudget}"))
+      .select(col("doc_id"), col("bucket"), col("shard"), col("toks"), col("cum_tokens"))
+  }
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Det.davg
@@ -127,13 +128,12 @@ object TextQueries {
     * (see SimilarityQueries). */
   private val JaccardMaxDf = 20
 
-  /** n-gram JACCARD near-dup detection: candidate pairs from a
-    * df-capped shared-token bucket join (fan-in bounded C(MaxDf, 2) per
-    * token — see [[JaccardMaxDf]]), then exact Jaccard over distinct
-    * token sets for the survivors; never an all-pairs compare. */
-  val jaccardNearDup: Q = Q(
-    "q_jaccard_neardup",
-    s"""WITH docs2 AS (
+  /** DuckDB chain documents → `kept` distinct (doc, lang, n_chars % 7
+    * bucket, token) rows with the df-cut applied → `sizes` (doc_id, nt) →
+    * `inter` (d1 < d2, it): shared tokens per document pair. Twin of
+    * [[tokenOverlap]]. */
+  private val tokenOverlapCtes =
+    s"""docs2 AS (
       |  SELECT doc_id, lang, n_chars % 7 AS lb, text FROM documents),
       |tok0 AS (
       |  SELECT doc_id, lang, lb, unnest(string_split(text, ' ')) AS tok
@@ -151,14 +151,13 @@ object TextQueries {
       |  FROM kept a JOIN kept b
       |    ON a.lang = b.lang AND a.lb = b.lb AND a.tok = b.tok
       |   AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT d1, d2,
-      |       CAST(it AS DOUBLE) / (sa.nt + sb.nt - it) AS jaccard
-      |FROM inter
-      |JOIN sizes sa ON sa.doc_id = d1
-      |JOIN sizes sb ON sb.doc_id = d2
-      |WHERE CAST(it AS DOUBLE) / (sa.nt + sb.nt - it) >= 0.8
-      |ORDER BY d1, d2""".stripMargin) { (s, dir) =>
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** (d2, d1, it, na, nb): document pairs d1 < d2 sharing `it` kept tokens,
+    * with each side's kept-token count. Tokens are distinct per document
+    * and keyed by (lang, n_chars % 7, token); keys in more than
+    * [[JaccardMaxDf]] documents are dropped. Twin of [[tokenOverlapCtes]]. */
+  private def tokenOverlap(s: SparkSession, dir: String): DataFrame = {
     val docs2 = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), (col("n_chars") % 7).as("lb"), col("text"))
     // the candidate join carries one 8-byte key instead of the
@@ -182,14 +181,30 @@ object TextQueries {
     val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("nt"))
     val a = kept.select(col("doc_id").as("d1"), col("k"))
     val b = kept.select(col("doc_id").as("d2"), col("k"))
-    val inter = a.join(b, Seq("k"))
+    a.join(b, Seq("k"))
       .filter(col("d1") < col("d2"))
       .groupBy("d1", "d2").agg(count(lit(1)).as("it"))
-    val jaccard = col("it").cast("double") /
-      (col("na") + col("nb") - col("it"))
-    inter
       .join(sizes.select(col("doc_id").as("d1"), col("nt").as("na")), "d1")
       .join(sizes.select(col("doc_id").as("d2"), col("nt").as("nb")), "d2")
+  }
+
+  /** n-gram JACCARD near-dup detection: candidate pairs from a
+    * df-capped shared-token bucket join (fan-in bounded C(MaxDf, 2) per
+    * token — see [[JaccardMaxDf]]), then exact Jaccard over distinct
+    * token sets for the survivors; never an all-pairs compare. */
+  val jaccardNearDup: Q = Q(
+    "q_jaccard_neardup",
+    s"""WITH $tokenOverlapCtes
+      |SELECT d1, d2,
+      |       CAST(it AS DOUBLE) / (sa.nt + sb.nt - it) AS jaccard
+      |FROM inter
+      |JOIN sizes sa ON sa.doc_id = d1
+      |JOIN sizes sb ON sb.doc_id = d2
+      |WHERE CAST(it AS DOUBLE) / (sa.nt + sb.nt - it) >= 0.8
+      |ORDER BY d1, d2""".stripMargin) { (s, dir) =>
+    val jaccard = col("it").cast("double") /
+      (col("na") + col("nb") - col("it"))
+    tokenOverlap(s, dir)
       .filter(jaccard >= 0.8)
       .select(col("d1"), col("d2"), jaccard.as("jaccard"))
       .orderBy("d1", "d2")
@@ -216,25 +231,7 @@ object TextQueries {
     val minKept = 5
     Q(
       "q_containment_neardup",
-      s"""WITH docs2 AS (
-        |  SELECT doc_id, lang, n_chars % 7 AS lb, text FROM documents),
-        |tok0 AS (
-        |  SELECT doc_id, lang, lb, unnest(string_split(text, ' ')) AS tok
-        |  FROM docs2),
-        |tok AS (
-        |  SELECT DISTINCT doc_id, lang, lb, tok FROM tok0
-        |  WHERE lang IS NOT NULL AND lb IS NOT NULL AND tok IS NOT NULL),
-        |kept AS (
-        |  SELECT doc_id, lang, lb, tok FROM (
-        |    SELECT *, COUNT(*) OVER (PARTITION BY lang, lb, tok) AS occ FROM tok)
-        |  WHERE occ <= $JaccardMaxDf),
-        |sizes AS (SELECT doc_id, COUNT(*) AS nt FROM kept GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS it
-        |  FROM kept a JOIN kept b
-        |    ON a.lang = b.lang AND a.lb = b.lb AND a.tok = b.tok
-        |   AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
+      s"""WITH $tokenOverlapCtes,
         |scored AS (
         |  SELECT d1, d2, sa.nt AS na, sb.nt AS nb, it,
         |         CAST(it AS DOUBLE) / least(sa.nt, sb.nt) AS containment,
@@ -251,32 +248,10 @@ object TextQueries {
         |FROM scored
         |WHERE containment >= 0.9
         |ORDER BY d1, d2""".stripMargin) { (s, dir) =>
-      val docs2 = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), (col("n_chars") % 7).as("lb"),
-          col("text"))
-      // same 8-byte candidate key + null-drop discipline as
-      // q_jaccard_neardup (see the comment there)
-      val keyed = docs2
-        .select(col("doc_id"), col("lang"), col("lb"),
-          explode(Text.tokens(col("text"))).as("tok"))
-        .distinct()
-        .filter(col("lang").isNotNull && col("lb").isNotNull &&
-          col("tok").isNotNull)
-        .select(col("doc_id"),
-          xxhash64(col("lang"), col("lb"), col("tok")).as("k"))
-      val kept = graft.engine.Similarity.dropHotKeys(keyed, Seq("k"), JaccardMaxDf)
-      val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("nt"))
-      val a = kept.select(col("doc_id").as("d1"), col("k"))
-      val b = kept.select(col("doc_id").as("d2"), col("k"))
-      val inter = a.join(b, Seq("k"))
-        .filter(col("d1") < col("d2"))
-        .groupBy("d1", "d2").agg(count(lit(1)).as("it"))
       val containment = col("it").cast("double") / least(col("na"), col("nb"))
       val jaccard = col("it").cast("double") /
         (col("na") + col("nb") - col("it"))
-      inter
-        .join(sizes.select(col("doc_id").as("d1"), col("nt").as("na")), "d1")
-        .join(sizes.select(col("doc_id").as("d2"), col("nt").as("nb")), "d2")
+      tokenOverlap(s, dir)
         .filter(least(col("na"), col("nb")) >= minKept &&
           containment >= 0.9)
         .select(col("d1"), col("d2"),
@@ -711,21 +686,7 @@ object TextQueries {
       |       toks, cum_tokens
       |FROM c
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val d = t(s, dir, "documents")
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        Text.packBucket(col("doc_id")).as("bucket"),
-        Text.tokenCount(col("text")).cast("long").as("toks"))
-    val w = Window.partitionBy("bucket").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    d.withColumn("cum_tokens", sum(col("toks")).over(w))
-      // `div` (not `/`): integer floor division on both engines — plain `/`
-      // is a double divide in Spark and its BIGINT cast would round in
-      // DuckDB, truncate in Spark
-      .withColumn("shard",
-        col("bucket") * Text.PackShardStride +
-          expr(s"(cum_tokens - toks) div ${Text.PackBudget}"))
-      .select(col("doc_id"), col("bucket"), col("shard"), col("toks"), col("cum_tokens"))
+    SubPlans.packShards(t(s, dir, "documents").filter(col("text").isNotNull))
       .orderBy("doc_id")
   }
 

@@ -874,15 +874,24 @@ object Streams {
           .as("epoch"))
       .groupBy("event_type", "bucket", "epoch").agg(count(lit(1)).as("cnt"))
 
-  /** Fold a (event_type, bucket, epoch, cnt) register table — streamed or
-    * batch — into q_ks_drift's output columns with the identical integer
-    * tree: ppm CDF gap max over a per-type window of <= 256 bucket rows,
-    * the classical 5% critical value, and the drift verdict. */
-  def ksOf(regs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = regs.groupBy(col("event_type"), col("bucket"))
+  /** Fold a (event_type, bucket, epoch, cnt) register table into
+    * q_ks_drift's output columns with [[ksFold]], the batch query's own
+    * fold. */
+  def ksOf(regs: DataFrame): DataFrame =
+    ksFold(regs.groupBy(col("event_type"), col("bucket"))
       .agg(sum(when(col("epoch") === 0, col("cnt")).otherwise(0L)).as("c1"),
-        sum(when(col("epoch") === 1, col("cnt")).otherwise(0L)).as("c2"))
+        sum(when(col("epoch") === 1, col("cnt")).otherwise(0L)).as("c2")))
+      .orderBy("event_type")
+
+  /** Fold per-(event_type, bucket) epoch counts `c1`, `c2` into
+    * q_ks_drift's output columns with one integer tree: ppm CDF gap max
+    * over a per-type window of <= 256 bucket rows, the classical 5%
+    * critical value, and the drift verdict. The CDF divisors are
+    * `GREATEST(n, 1)`, as in the oracle: a type with no rows in one epoch
+    * gets an explicit ks_ppm against that epoch's empty CDF (its
+    * threshold and verdict divide by zero and read NULL, in DuckDB too). */
+  def ksFold(c: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val n = c.groupBy(col("event_type").as("ntype"))
       .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
     val w = Window.partitionBy("event_type").orderBy("bucket")
@@ -890,8 +899,8 @@ object Streams {
       .withColumn("cum1", sum(col("c1")).over(w))
       .withColumn("cum2", sum(col("c2")).over(w))
       .select(col("event_type"), col("n1"), col("n2"),
-        abs(expr("cum1 * 1000000 DIV n1") - expr("cum2 * 1000000 DIV n2"))
-          .as("gap_ppm"))
+        abs(expr("cum1 * 1000000 DIV GREATEST(n1, 1)") -
+            expr("cum2 * 1000000 DIV GREATEST(n2, 1)")).as("gap_ppm"))
     val thresh = lit(1358000.0) *
       sqrt((min(col("n1")) + min(col("n2"))).cast("double") /
         (min(col("n1")).cast("double") * min(col("n2")).cast("double")))
@@ -900,7 +909,6 @@ object Streams {
         max(col("gap_ppm")).cast("long").as("ks_ppm"),
         thresh.as("thresh_ppm"),
         (max(col("gap_ppm")).cast("double") > thresh).as("drifted"))
-      .orderBy("event_type")
   }
 
   /** Streaming Bloom-filter word maintenance — the incremental build side

@@ -553,6 +553,17 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("grid cluster on an empty embeddings table yields only its empty noise row") {
+    val d = java.nio.file.Files.createTempDirectory("graft-grid-empty").toString
+    spark.read.parquet(s"$sf/embeddings.parquet").limit(0)
+      .write.parquet(s"$d/embeddings.parquet")
+    // no cluster rows, and the noise row (cluster -1) counts 0 cells and 0
+    // points, as the DuckDB oracle reads on the same empty table
+    val r = graft.queries.SimilarityQueries.gridCluster.build(spark, d).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
+    assert(r == Seq((-1L, 0L, 0L)), r.mkString(", "))
+  }
+
   test("grid cluster: matches an in-memory grid-DBSCAN recomputation") {
     val got = graft.queries.SimilarityQueries.gridCluster.build(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq

@@ -37,6 +37,14 @@ class SpectralSpec extends SparkSpec {
     assert(r.map(_.getAs[Long]("lambda")).toSet == Set(11550L))
   }
 
+  test("pca power on an empty embeddings table returns no row") {
+    val d = Files.createTempDirectory("graft-pca-empty").toString
+    spark.read.parquet(s"$sf/embeddings.parquet").limit(0)
+      .write.parquet(s"$d/embeddings.parquet")
+    val r = SpectralQueries.pcaPower.build(spark, d).collect()
+    assert(r.isEmpty, r.mkString(", "))
+  }
+
   test("markov stationary: matches a BigInt replay of the ppm recurrence") {
     val d = Files.createTempDirectory("graft-spec-mk").toString
     val schema = StructType(Seq(

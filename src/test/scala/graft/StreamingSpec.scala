@@ -339,6 +339,36 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("ksRegisters: an event type with no rows in one epoch reads the same streamed and batch") {
+    implicit val ctx = spark.sqlContext
+    import org.apache.spark.sql.functions.{col, max, min, unix_micros}
+    val all = graft.engine.Tables.t(spark, sf, "events")
+    val mm0 = all.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
+    // drop every click of the second epoch: clicks then have n2 = 0
+    val d = java.nio.file.Files.createTempDirectory("graft-ks-empty-epoch").toString
+    all.filter(!(col("event_type") === "click" &&
+        unix_micros(col("ts")) * 2 >= mm0.getLong(0) + mm0.getLong(1)))
+      .write.parquet(s"$d/events.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    val batch = rows(graft.queries.ProfileQueries.ksDrift.build(spark, d))
+    assert(batch.exists(r => r.head == "click" && r(2) == 0L), s"$batch")
+    val ev = graft.engine.Tables.t(spark, d, "events")
+    val mm = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
+    val in = MemoryStream[(String, Double, java.sql.Timestamp)]
+    val q = Streams.ksRegisters(in.toDF().toDF("event_type", "value", "ts"),
+        mm.getLong(0) + mm.getLong(1))
+      .writeStream.format("memory").queryName("ksregs_empty_epoch")
+      .outputMode(OutputMode.Complete()).start()
+    try {
+      in.addData(ev.select(col("event_type"), col("value"), col("ts"))
+        .as[(String, Double, java.sql.Timestamp)].collect().toIndexedSeq)
+      q.processAllAvailable()
+      val streamed = rows(Streams.ksOf(spark.table("ksregs_empty_epoch")))
+      assert(streamed == batch, s"streamed KS $streamed != batch $batch")
+    } finally q.stop()
+  }
+
   test("bitmapRegisters: streamed audience words bit-match the batch build") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions.{col, expr, bit_or}
