@@ -282,10 +282,10 @@ object RelationalQueries {
   /** Explicit GROUPING SETS — the general form rollup/cube specialize: a
     * caller-chosen set list ((flag, status), (status), ()) — the first two
     * in one Expand + hash aggregation, the grand total `()` as a global
-    * aggregate ([[grandTotal]]). Per-column GROUPING flags disambiguate a real NULL from a rolled-up
-    * level — emitted as separate 0/1 columns rather than a combined
-    * grouping_id, whose bit order is an engine convention the oracle
-    * should not depend on. */
+    * aggregate ([[grandTotal]]). Per-column GROUPING flags disambiguate a
+    * real NULL from a rolled-up level — emitted as separate 0/1 columns
+    * rather than a combined grouping_id, whose bit order is an engine
+    * convention the oracle should not depend on. */
   val groupingSetsAgg: Q = Q(
     "q_grouping_sets",
     """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,

@@ -911,12 +911,11 @@ object SimilarityQueries {
     * bounded top-k join-back. Implementation: [[pqSearchTopK]] with the
     * self-search batch (`vec_id % 50 = 0`). */
   val annPq: Q = {
-    val M = PqM; val SubDim = PqSubDim
     Q(
       "q_ann_pq",
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |sub AS (
-        |  SELECT vec_id, m, list_slice(v, m * $SubDim + 1, m * $SubDim + $SubDim) AS sv
+        |  SELECT vec_id, m, list_slice(v, m * $PqSubDim + 1, m * $PqSubDim + $PqSubDim) AS sv
         |  FROM e0 CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS m) ms),
         |b AS (
         |  SELECT vec_id, m, sv,
@@ -993,13 +992,12 @@ object SimilarityQueries {
     * work is |cell|/64 bytes-equivalent of codes. Implementation:
     * [[ivfPqSearchTopK]] with the self-search batch. */
   val annIvfPq: Q = {
-    val M = PqM; val SubDim = PqSubDim
     Q(
       "q_ann_ivfpq",
       s"""WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |sub AS (
         |  SELECT vec_id, label, m,
-        |         list_slice(v, m * $SubDim + 1, m * $SubDim + $SubDim) AS sv
+        |         list_slice(v, m * $PqSubDim + 1, m * $PqSubDim + $PqSubDim) AS sv
         |  FROM e0 CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS m) ms),
         |b AS (
         |  SELECT vec_id, label, m, sv,
