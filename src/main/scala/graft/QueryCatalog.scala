@@ -45,15 +45,14 @@ object QueryCatalog {
     files.flatMap { p =>
       val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toVector
       // a registration is the quoted name passed as Q.apply's first
-      // argument — the `Q(` / `Q.noOracle(` call is on the same line or
-      // the line directly above; queries are all named q_*
+      // argument — the `Q(` call is on the same line or the line directly
+      // above; queries are all named q_*
       val reg = "\"(q_[a-z0-9_]+)\"".r
       val valDecl = "^\\s*(?:private\\s+)?val (\\w+): Q =".r
       lines.zipWithIndex.flatMap { case (l, i) =>
         reg.findFirstMatchIn(l).flatMap { m =>
-          val isReg = l.contains("Q(") || l.contains("noOracle(") ||
-            (i > 0 && (lines(i - 1).trim.endsWith("Q(") ||
-              lines(i - 1).trim.endsWith("noOracle(")))
+          val isReg = l.contains("Q(") ||
+            (i > 0 && lines(i - 1).trim.endsWith("Q("))
           // the enclosing declaration is the nearest `val ...: Q =` above
           // (possibly far above, when the val body is a block computing
           // shared constants before the Q call)

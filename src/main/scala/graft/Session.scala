@@ -18,7 +18,8 @@ object Session {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // quirk Q9: pandas float semantics (x/0 -> inf, 0/0 -> NaN), not ANSI errors
+      // ANSI off: x/0 is NULL, not a DIVIDE_BY_ZERO error; quirk Q9's
+      // pandas semantics (x/0 -> inf, 0/0 -> NaN) come only from Det.pdiv
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       // transformWithState requires RocksDB; the other stateful operators run on it too

@@ -1,79 +1,13 @@
 package graft.engine
 
-import java.security.MessageDigest
-
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** One media item: an opaque binary payload plus typed metadata. The engine
-  * treats image/audio/video as `binary` columns — decode happens at the edge
-  * of the plan, never in the storage/shuffle layer. */
-final case class MediaItem(
-    media_id: Long, kind: String, payload: Array[Byte],
-    width: Int, height: Int, sample_rate: Int, duration_ms: Long)
-
-/** Fixed-shape feature row produced by the (stubbed) decoder. */
-final case class MediaFeatures(
-    media_id: Long, kind: String, n_bytes: Int, feature: Array[Float])
-
-/** Per-frame feature row from video frame sampling. */
-final case class FrameFeatures(
-    media_id: Long, frame_idx: Int, feature: Array[Float])
-
-/** Multimodal-column support (north-star extension): schema, partition-wise
-  * batch plumbing, and feature extraction for opaque binary media columns.
-  *
-  * Decode is REAL for the two pure-JVM formats ([[Codecs]]): binary PPM
-  * rasters produce grid-pooled grayscale luma features and PCM16 WAV audio
-  * produces frame RMS energies; payloads neither codec accepts (e.g. the
-  * synthetic documents-derived table's opaque text bytes, or any format
-  * this container has no codec for) fall back to the clearly-marked
-  * deterministic [[decodeStub]]. Everything around decode is the 100-TB
-  * shape:
-  *
-  *   - media stays an opaque `binary` column with typed metadata columns —
-  *     scans prune to metadata unless features are actually needed;
-  *   - decode runs via `Dataset.mapPartitions`: one JVM-side iterator per
-  *     partition (the Scala analogue of arrow-batched decode UDFs), so any
-  *     per-partition init (a real codec context) amortizes across rows;
-  *   - outputs are fixed-shape `Array[Float]` columns that feed directly
-  *     into the Vectors/Similarity operators (cosine top-k over image
-  *     features works today).
-  */
+/** Multimodal-column support: media as an opaque `binary` payload column
+  * with typed metadata columns, so scans prune to metadata unless a query
+  * actually reads the bytes (q_media_meta and q_frame_sample plan from
+  * this table). */
 object Multimodal {
-
-  /** Real-decode dispatch: PPM raster -> [[Codecs.grayFeatures]] on the
-    * floor(sqrt(dim)) grid (zero-padded up to `dim` when dim is not a
-    * square); WAV PCM16 -> [[Codecs.rmsFeatures]] over `dim` windows;
-    * anything else -> [[decodeStub]]. Total: never throws on junk bytes. */
-  private[engine] def decode(payload: Array[Byte], dim: Int): Array[Float] =
-    Codecs.decodePpm(payload) match {
-      case Some(r) =>
-        val grid = math.max(1, math.sqrt(dim.toDouble).toInt)
-        java.util.Arrays.copyOf(Codecs.grayFeatures(r, grid), dim)
-      case None =>
-        Codecs.decodeWavPcm16(payload) match {
-          case Some(p) => Codecs.rmsFeatures(p.samples, dim)
-          case None => decodeStub(payload, dim)
-        }
-    }
-
-  /** Deterministic fallback "decode" for payloads no codec accepts:
-    * md5-expanded bytes scaled to [-0.5, 0.5). Keeps the pipeline total
-    * and deterministic on arbitrary bytes; real formats take the
-    * [[decode]] codec paths instead. */
-  private[engine] def decodeStub(payload: Array[Byte], dim: Int): Array[Float] = {
-    val md = MessageDigest.getInstance("MD5")
-    val out = new Array[Float](dim)
-    var block = md.digest(payload)
-    var i = 0
-    while (i < dim) {
-      if (i % 16 == 0 && i > 0) block = md.digest(block)
-      out(i) = ((block(i % 16) & 0xff) / 255.0f) - 0.5f
-      i += 1
-    }
-    out
-  }
 
   /** Synthesize a deterministic media table from `documents` (payload =
     * UTF-8 text bytes; kind and metadata derived from doc_id) — the
@@ -88,132 +22,4 @@ object Multimodal {
       (col("n_chars") % 480 + 24).cast("int").as("height"),
       (lit(16000)).as("sample_rate"),
       (col("n_chars") * 10).as("duration_ms"))
-
-  /** Feature extraction over the typed Dataset boundary: per-partition
-    * iterator (batch shape), real PPM/WAV decode per item with the stub
-    * fallback for undecodable payloads. */
-  def extractFeatures(media: Dataset[MediaItem], dim: Int): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      // heavier codecs would init their context here, once per partition
-      it.map(m => MediaFeatures(m.media_id, m.kind, m.payload.length,
-        decode(m.payload, dim)))
-    }
-  }
-
-  /** Image resize: a decodable PPM payload is ACTUALLY resampled
-    * (nearest-neighbor, [[Codecs.resizeRaster]]) and re-encoded; payloads
-    * with no raster codec keep the proportional-truncation stand-in so the
-    * plumbing contract — (item, targetW, targetH) -> new metadata + new
-    * payload — stays total over arbitrary bytes. */
-  def resize(media: Dataset[MediaItem], targetW: Int, targetH: Int, dim: Int): Dataset[MediaItem] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { m =>
-        Codecs.decodePpm(m.payload) match {
-          case Some(r) =>
-            val resized = Codecs.resizeRaster(r, targetW, targetH)
-            m.copy(payload = Codecs.encodePpm(resized),
-              width = targetW, height = targetH)
-          case None =>
-            // cap on the Long BEFORE narrowing: the row-count product can
-            // exceed Int range and would wrap negative through .toInt
-            val keep = math.max(1L,
-              (m.payload.length.toLong * (targetW.toLong * targetH) /
-                math.max(1L, m.width.toLong * m.height))
-                .min(m.payload.length.toLong)).toInt
-            m.copy(payload = m.payload.take(keep), width = targetW, height = targetH)
-        }
-      }
-    }
-  }
-
-  /** Video transcode: every frame of a concatenated-P6 container resampled
-    * to (targetW, targetH) and re-encoded into a new container — the
-    * per-item batch shape of a real transcode stage (decode context, frame
-    * loop, re-encode, all inside the partition iterator). Payloads that are
-    * not P6 containers pass through UNCHANGED, metadata included — the
-    * operator must not claim dimensions it did not produce. */
-  def transcodeVideo(media: Dataset[MediaItem], targetW: Int,
-      targetH: Int): Dataset[MediaItem] = {
-    require(targetW > 0 && targetH > 0,
-      s"target dims must be positive (got $targetW, $targetH)")
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { m =>
-        val frames = Codecs.decodePpmFrames(m.payload)
-        if (frames.nonEmpty)
-          m.copy(
-            payload = Codecs.encodePpmFrames(
-              frames.map(Codecs.resizeRaster(_, targetW, targetH))),
-            width = targetW, height = targetH)
-        else m
-      }
-    }
-  }
-
-  /** PLAN-DRIVEN decode: the composition of the two halves the engine
-    * proves separately — q_frame_sample (TextQueries) computes WHICH frames
-    * and byte ranges to touch from metadata alone, and this decodes exactly
-    * those ranges and nothing else. `plan` must carry
-    * (media_id, frame_idx, byte_offset); each planned row becomes one
-    * decoded [[FrameFeatures]] from the `frameBytes` window at its offset
-    * (real codec when the window is a complete PPM, documented stub
-    * otherwise — same dispatch as [[decode]]).
-    *
-    * Shape at 100 TB: the plan is tiny next to the payload column (≤8 rows
-    * per item) and joins back by media_id equi-join; only planned (item,
-    * frame) pairs ever reach the decoder, and on a byte-range-capable
-    * store only those windows would be fetched at all. */
-  def decodePlanned(media: Dataset[MediaItem], plan: DataFrame,
-      frameBytes: Int, dim: Int): Dataset[FrameFeatures] = {
-    require(frameBytes > 0, s"frameBytes must be positive (got $frameBytes)")
-    import media.sparkSession.implicits._
-    media.toDF().select(col("media_id"), col("payload"))
-      .join(plan.select(col("media_id"), col("frame_idx").cast("int"),
-        col("byte_offset").cast("int")), "media_id")
-      .select(col("media_id"), col("frame_idx"), col("byte_offset"),
-        col("payload"))
-      .as[(Long, Int, Int, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, idx, off, payload) =>
-          val start = math.min(math.max(off, 0), payload.length)
-          val end = math.min(payload.length.toLong, start.toLong + frameBytes).toInt
-          FrameFeatures(id, idx,
-            decode(java.util.Arrays.copyOfRange(payload, start, end), dim))
-        }
-      }
-  }
-
-  /** Frame sampling for "video". A payload that parses as a
-    * concatenated-P6 container ([[Codecs.decodePpmFrames]]) is decoded
-    * frame by frame: keep every `stride`-th DECODED frame, grid-pooled
-    * luma features per kept frame — the real video path. Payloads that are
-    * not P6 containers keep the byte-chunk fallback (fixed `frameBytes`
-    * windows through [[decode]], which still real-decodes a chunk that is
-    * itself a complete PPM), so the operator stays total over arbitrary
-    * bytes. The explode happens inside the partition iterator — no driver
-    * round-trip, output rows stream. */
-  def sampleFrames(media: Dataset[MediaItem], frameBytes: Int, stride: Int,
-      dim: Int): Dataset[FrameFeatures] = {
-    require(frameBytes > 0 && stride > 0,
-      s"frameBytes and stride must be positive (got $frameBytes, $stride)")
-    import media.sparkSession.implicits._
-    media.filter(col("kind") === "video").as[MediaItem].mapPartitions { it =>
-      val grid = math.max(1, math.sqrt(dim.toDouble).toInt)
-      it.flatMap { m =>
-        // skipped frames are advanced over header-only — no raster copy —
-        // so stride-30 sampling of a long container does ~1/30 of the work
-        val kept = Codecs.decodePpmFramesSampled(m.payload, stride)
-        if (kept.nonEmpty)
-          kept.iterator.map { case (idx, r) =>
-            FrameFeatures(m.media_id, idx,
-              java.util.Arrays.copyOf(Codecs.grayFeatures(r, grid), dim)) }
-        else
-          m.payload.grouped(frameBytes).zipWithIndex
-            .collect { case (chunk, idx) if idx % stride == 0 =>
-              FrameFeatures(m.media_id, idx, decode(chunk, dim)) }
-      }
-    }
-  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{Text, Vectors}
 
 /** Near-duplicate detection machinery for the LLM-data-pipeline surface:
-  * MinHash+LSH banding, 16-bit SimHash, and hyperplane-LSH ANN over
+  * MinHash+LSH banding, banded SimHash, and hyperplane-LSH ANN over
   * embeddings. All hash-bucketed — candidate pairs always come from an
   * equi-join on a bucket key, never a crossJoin, so the pair space is
   * bounded by bucket occupancy at any corpus size.
@@ -16,48 +16,20 @@ import graft.functions.{Text, Vectors}
   */
 object Similarity {
 
-  /** n-token shingles (w-shingling): MinHash must run over shingles, not
-    * bag-of-words tokens — with a small vocabulary most documents contain
-    * most words, token-level signatures collapse to a handful of values, and
-    * LSH buckets go quadratic (measured: 77s vs ~2s at sf0.1). Shingles keep
-    * word ORDER, so only genuinely overlapping passages collide. Documents
-    * shorter than n become one whole-text shingle. */
-  def shingles(text: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
-    shinglesOfTokens(Text.tokens(text), n)
-
-  /** Shingles over an ALREADY-MATERIALIZED token-array column. Callers must
-    * project the tokenization into a column first (`.select(split(...))`):
-    * passing `split(text)` directly here makes every `element_at` reference
-    * re-split the text — ~3 x shingle-count array materializations per row,
-    * measured at ~4x the cost of the whole signature aggregation. */
+  /** n-token shingles (w-shingling) over an ALREADY-MATERIALIZED
+    * token-array column; documents shorter than n become one whole-text
+    * shingle. MinHash must run over shingles, not bag-of-words tokens: with
+    * a small vocabulary token-level signatures collapse to a handful of
+    * values and LSH buckets go quadratic (measured: 77s vs ~2s at sf0.1).
+    * Callers must project the tokenization into a column first
+    * (`.select(split(...))`): passing `split(text)` directly here makes
+    * every `element_at` reference re-split the text — ~3 x shingle-count
+    * array materializations per row, measured at ~4x the cost of the whole
+    * signature aggregation. */
   def shinglesOfTokens(tok: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
     when(size(tok) < n, array(concat_ws(" ", tok)))
       .otherwise(transform(sequence(lit(0), size(tok) - n),
         i => concat_ws(" ", (0 until n).map(j => element_at(tok, i + j + 1)): _*)))
-
-  /** MinHash signatures: k permutation-hashes approximated by
-    * min(xxhash64(i, h(shingle))) over the document's 3-shingles. One
-    * explode + one groupBy — the signature computation is a single
-    * aggregation pass regardless of k. Each shingle string is hashed to a
-    * long ONCE and the k slot hashes re-hash that long (8 bytes, not the
-    * string k times). No distinct: duplicate shingles cannot change a min,
-    * and skipping it lets partial aggregation collapse the exploded rows
-    * map-side — the shuffle carries one k-column row per (doc, partition)
-    * instead of every distinct shingle string.
-    * Returns (idCol, mh_0..mh_{k-1}). */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleLen: Int = 3): DataFrame = {
-    val tok = docs
-      // drop null text explicitly: with ANSI off size(null) is -1 (legacy
-      // sizeOfNull), so shinglesOfTokens would emit one "" shingle for a
-      // null doc instead of dropping it like the oracle's unnest(NULL)
-      .filter(col(textCol).isNotNull)
-      .select(col(idCol), Text.tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), explode(shinglesOfTokens(col("__toks"), shingleLen)).as("tok"))
-      .select(col(idCol), xxhash64(col("tok")).as("h"))
-    val mh = (0 until k).map(i => min(xxhash64(lit(i), col("h"))).as(s"mh_$i"))
-    tok.groupBy(idCol).agg(mh.head, mh.tail: _*)
-  }
 
   /** Mirrorable MinHash signatures: the k slot values are 4-char hex windows
     * of md5 digests (k/8 digests per shingle, 8 windows each), kept AS
@@ -73,15 +45,15 @@ object Similarity {
     * r-row band key over 16-bit slots carries 16r bits, so with r = 2
     * expect ~n^2/2^33 spurious same-key doc pairs per band — negligible to
     * ~10^7-10^8 docs per LSH partition, a real verification-cost tax at
-    * 10^9+. Corpora that big use [[minhashSignatures]] (64-bit xxhash64
-    * slots), the documented scale default; this md5 form exists for
-    * oracle-checkability. Same single-pass shape as [[minhashSignatures]];
-    * md5 still costs more per shingle than xxhash64. */
+    * 10^9+, where wider (64-bit xxhash64) slots would pay; this md5 form
+    * exists for oracle-checkability. */
   def minhashSignaturesMd5(docs: DataFrame, idCol: String, textCol: String,
       k: Int, shingleLen: Int = 3): DataFrame = {
     require(k % 8 == 0, "k must be a multiple of 8 (8 hex windows per md5)")
     val tok = docs
-      // null text dropped (see minhashSignatures — legacy size(null) = -1)
+      // drop null text explicitly: with ANSI off size(null) is -1 (legacy
+      // sizeOfNull), so shinglesOfTokens would emit one "" shingle for a
+      // null doc instead of dropping it like the oracle's unnest(NULL)
       .filter(col(textCol).isNotNull)
       .select(col(idCol), Text.tokens(col(textCol)).as("__toks"))
       .select(col(idCol), explode(shinglesOfTokens(col("__toks"), shingleLen)).as("tok"))
@@ -146,31 +118,14 @@ object Similarity {
     }
   }
 
-  /** One (id, band, bk) row per signature row per band — THE band layout
-    * shared by every banding consumer (batch self-join candidates, the
-    * streaming stream-static join): deriving it in one place guarantees a
-    * streamed doc's band keys match a batch-built index slot-for-slot.
-    * `bandKey` folds a band's slot columns into the join key — xxhash64 by
-    * default, or a mirrorable concat for oracle-checked variants. */
-  def bandKeyed(sig: DataFrame, idCol: String, k: Int, bands: Int,
-      bandKey: Seq[org.apache.spark.sql.Column] => org.apache.spark.sql.Column =
-        cols => xxhash64(cols: _*)): DataFrame = {
-    require(bands > 0 && k % bands == 0, "bands must divide k")
-    val r = k / bands
-    val bandCols = (0 until bands).map { b =>
-      val cols = (b * r until (b + 1) * r).map(i => col(s"mh_$i"))
-      struct(lit(b).as("band"), bandKey(cols).as("bk"))
-    }
-    sig.select(col(idCol), explode(array(bandCols: _*)).as("e"))
-      .select(col(idCol), col("e.band").as("band"), col("e.bk").as("bk"))
-  }
-
   /** LSH banding over minhash signatures: split the k signature slots into
     * `bands` bands of k/bands rows each; docs agreeing on ALL rows of any
     * band become a candidate pair — the classic sub-quadratic shape: two
-    * docs with Jaccard j collide with probability 1-(1-j^r)^b. Band keys
-    * come from [[bandKeyed]]. */
-  /** `maxBucket` guards against degenerate "hot" buckets (a band value
+    * docs with Jaccard j collide with probability 1-(1-j^r)^b. `bandKey`
+    * folds a band's slot columns into the join key — xxhash64 by default,
+    * or a mirrorable concat for oracle-checked variants.
+    *
+    * `maxBucket` guards against degenerate "hot" buckets (a band value
     * shared by more docs than that means the band carries no signal —
     * boilerplate or, as in the synthetic corpus, a tiny vocabulary); such
     * buckets are skipped rather than joined quadratically, standard LSH
@@ -179,12 +134,18 @@ object Similarity {
       maxBucket: Int = 200,
       bandKey: Seq[org.apache.spark.sql.Column] => org.apache.spark.sql.Column =
         cols => xxhash64(cols: _*)): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
+    require(bands > 0 && k % bands == 0, "bands must divide k")
     // One (band, band_key) row per doc per band via a single explode — then
     // ONE hot-bucket filter and ONE self-join keyed on (band, band_key),
     // instead of a join pipeline per band (8x fewer shuffles; the band id
     // rides inside the join key so bands never mix).
-    val keyed = bandKeyed(sig, idCol, k, bands, bandKey)
+    val r = k / bands
+    val bandCols = (0 until bands).map { b =>
+      val cols = (b * r until (b + 1) * r).map(i => col(s"mh_$i"))
+      struct(lit(b).as("band"), bandKey(cols).as("bk"))
+    }
+    val keyed = sig.select(col(idCol), explode(array(bandCols: _*)).as("e"))
+      .select(col(idCol), col("e.band").as("band"), col("e.bk").as("bk"))
     val kept = dropHotKeys(keyed, Seq("band", "bk"), maxBucket)
     kept.select(col(idCol).as("d1"), col("band"), col("bk"))
       .join(kept.select(col(idCol).as("d2"), col("band"), col("bk")),
@@ -196,7 +157,7 @@ object Similarity {
 
   /** SimHash: per distinct token a hash contributes +1/-1 to each of `bits`
     * bit positions; the sign of each positional sum becomes a fingerprint
-    * bit. Near-dups differ in few bits (compare with [[hamming16]]).
+    * bit. Near-dups differ in few bits.
     * One explode + one groupBy, `bits` aggregate columns. `tokenHash` must
     * supply at least `bits` hash bits. PRECONDITION: one row per document
     * (`idCol` unique) — per-doc token dedup happens in-row
@@ -224,10 +185,6 @@ object Similarity {
       .reduce(_ + _)
     sums.select(col(idCol), packed.as("simhash"))
   }
-
-  /** 16-bit SimHash over xxhash64 token hashes. */
-  def simhash16(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhashSignature(docs, idCol, textCol, 16, xxhash64(_))
 
   /** Banded SimHash near-dup pairs: split the `bits`-bit fingerprint into
     * `bands` equal bit-ranges; by pigeonhole, any pair within Hamming
@@ -294,10 +251,6 @@ object Similarity {
     cached.join(broadcast(hot), cond, "left_anti")
   }
 
-  /** Hamming distance between two packed simhash values. */
-  def hamming16 = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-    bit_count(a.bitwiseXOR(b))
-
   /** Hyperplane-LSH ANN index: assigns each vector a bucket; queries search
     * only their own bucket (optionally multiple independent tables for
     * recall — pass different `table` seeds and union). The planted-twin
@@ -306,22 +259,6 @@ object Similarity {
       nPlanes: Int, table: Int = 0): DataFrame =
     emb.withColumn("bucket",
       Vectors.lshBucket(Vectors.asDouble(col(vecCol)), dim, nPlanes, table))
-
-  /** Multi-table LSH ANN: `tables` independent hyperplane sets; a query
-    * meets a candidate if they share a bucket in ANY table (recall
-    * 1-(1-p)^tables for per-table collision probability p). One row per
-    * (vector, table) — candidate generation stays an equi-join on
-    * (table, bucket). */
-  def lshIndexMulti(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
-      nPlanes: Int, tables: Int): DataFrame = {
-    val v = Vectors.asDouble(col(vecCol))
-    val entries = (0 until tables).map(t =>
-      struct(lit(t).as("tbl"), Vectors.lshBucket(v, dim, nPlanes, t).as("bucket")))
-    emb.select(col("*"), explode(array(entries: _*)).as("e"))
-      .withColumn("tbl", col("e.tbl"))
-      .withColumn("bucket", col("e.bucket"))
-      .drop("e")
-  }
 
   /** Scored (corpus vector x benchmark vector) cosine rows for
     * embedding-space decontamination: corpus (`vec_id`, `v` double[])
@@ -333,14 +270,12 @@ object Similarity {
     * division tree matches [[graft.functions.Vectors.cosineFromNorms]]'s
     * SQL mirror. Cost is O(|bench| * N) over ONE corpus scan: the bench
     * side is broadcast, so nothing about the corpus shuffles here. */
-  def benchCosineScores(corpus: DataFrame, bench: DataFrame): DataFrame = {
-    val c = corpus.withColumn("vn", Vectors.normNative(col("v")))
-    val b = bench.withColumn("qn", Vectors.normNative(col("qv")))
-    c.crossJoin(broadcast(b))
+  def benchCosineScores(corpus: DataFrame, bench: DataFrame): DataFrame =
+    CosineTopK.withNorm(corpus)
+      .crossJoin(broadcast(CosineTopK.withQueryNorm(bench)))
       .select(col("vec_id"), col("bid"),
         Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn"))
           .as("cos"))
-  }
 
   /** Winnowing window width (shingle positions per window). Guarantee
     * (Schleimer et al. 2003, "Winnowing: local algorithms for document

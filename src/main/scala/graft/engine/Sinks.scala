@@ -6,12 +6,6 @@ import org.apache.spark.sql.functions.col
 /** Sink helpers (SURVEY.md §2.1 S6 extensions) for the file-layout concerns
   * that only matter at scale:
   *
-  *  - **File sizing**: a 100-TB write that lets every reduce task emit one
-  *    file produces either a small-files explosion (metadata pressure,
-  *    per-file open cost on every future scan) or multi-GB files (no read
-  *    parallelism). `writeSized` bounds rows per file with Spark's own
-  *    maxRecordsPerFile split — tasks roll over to a new file at the cap,
-  *    no extra shuffle.
   *  - **Partition layout**: `writePartitionedBy` lays data out hive-style so
   *    future reads with a filter on the partition column scan only matching
   *    directories (partition pruning — the `PartitionFilters` line in
@@ -55,39 +49,6 @@ object Sinks {
       .bucketBy(nBuckets, keys.head, keys.tail: _*)
       .sortBy(sorts.head, sorts.tail: _*)
     path.fold(w0)(p => w0.option("path", p)).saveAsTable(table)
-  }
-
-  /** SMALL-FILE COMPACTION — the OPTIMIZE primitive every lakehouse table
-    * layer runs: rewrite a directory that has accreted many small files
-    * (streaming sinks, frequent small appends) into the minimum number of
-    * row-bounded files, then atomically swap it in. At 100 TB the
-    * motivation is metadata pressure and per-file open cost on every
-    * future scan; the rewrite itself is one repartition-to-target job.
-    *
-    * The swap here is a filesystem delete+rename (correct on a quiesced
-    * table; a production TABLE FORMAT would instead commit the rewrite as
-    * a metadata swap so readers never observe the gap — this is the
-    * file-level primitive underneath that commit). Returns the number of
-    * files written. */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxRecordsPerFile: Long): Int = {
-    require(maxRecordsPerFile > 0, "maxRecordsPerFile must be positive")
-    val df = spark.read.parquet(path)
-    val n = df.count()
-    val nFiles = math.max(1L, (n + maxRecordsPerFile - 1) / maxRecordsPerFile).toInt
-    val tmp = path.stripSuffix("/") + ".compacting"
-    df.repartition(nFiles)
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val target = new org.apache.hadoop.fs.Path(path)
-    val staged = new org.apache.hadoop.fs.Path(tmp)
-    val fs = target.getFileSystem(conf)
-    fs.delete(target, true)
-    if (!fs.rename(staged, target))
-      throw new java.io.IOException(s"compact: rename $tmp -> $path failed")
-    nFiles
   }
 
   /** Range-partitioned, file-sorted parquet write: `nFiles` range splits
@@ -138,21 +99,8 @@ object Sinks {
       .write.mode(mode).parquet(path)
   }
 
-  /** Parquet write with an upper bound on rows per file. */
-  def writeSized(df: DataFrame, path: String, maxRecordsPerFile: Long,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write
-      .mode(mode)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
-
-  /** Hive-layout parquet write partitioned by the given columns; combine
-    * with [[writeSized]]'s cap via the same option. */
+  /** Hive-layout parquet write partitioned by the given columns. */
   def writePartitionedBy(df: DataFrame, path: String, cols: Seq[String],
-      maxRecordsPerFile: Long = 0L,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val w = df.write.mode(mode).partitionBy(cols: _*)
-    (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
-     else w).parquet(path)
-  }
+      mode: SaveMode = SaveMode.Overwrite): Unit =
+    df.write.mode(mode).partitionBy(cols: _*).parquet(path)
 }

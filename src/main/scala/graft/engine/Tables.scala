@@ -8,14 +8,11 @@ import org.apache.spark.sql.functions._
   *
   * The reference loads its tables by enumerating a SQLite catalog and
   * `SELECT *`-ing each table into a dict (reference main.py:225-233). Here the
-  * catalog is the parquet directory; `registerAll` is the Spark-native
-  * equivalent (temp views over lazy scans — nothing is materialized until a
-  * query runs, unlike the reference's eager full-table loads).
+  * catalog is the parquet directory and each query scans its tables lazily
+  * through [[t]] (nothing is materialized until a query runs, unlike the
+  * reference's eager full-table loads).
   */
 object Tables {
-  val testdataTables: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Lazy parquet scan for one table. Column pruning + predicate pushdown
     * reach the scan because this is a plain file-source relation.
@@ -55,10 +52,6 @@ object Tables {
             col("ts").cast(org.apache.spark.sql.types.TimestampType))
       }
     } else spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Register every testdata table as a temp view (S3/S4 analogue). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    testdataTables.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
 
   /** Spread a NARROW frame across the session's full parallelism before a
     * compute-dense per-row kernel (md5 MinHash signatures, shingle/gram

@@ -46,11 +46,6 @@ object TimeSeries {
     base.orderBy(order: _*)
   }
 
-  /** W1 — day-over-day delta: `x - lag(x, 1)`; first row per partition null
-    * (pandas `diff()` leading NaN, main.py:66). */
-  def lagDiff(c: Column, partCols: Seq[String], order: Seq[Column]): Column =
-    c - lag(c, 1).over(w(partCols, order))
-
   /** W2 — running total (pandas `cumsum`, main.py:260-262). Decimal-exact so
     * results are order-of-evaluation independent (oracle-comparable). */
   def cumSum(c: Column, partCols: Seq[String], order: Seq[Column]): Column =

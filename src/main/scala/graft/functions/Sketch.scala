@@ -118,7 +118,6 @@ object Sketch {
     * exponent and NEVER rounds — so both engines compute identical bucket
     * ids and bounds with no libm anywhere. */
   val HistExactMax = 256L
-  val HistSubBuckets = 16L
   val HistMaxExp = 52 // v < 2^53: every long in the domain is double-exact
 
   /** Octave bases 2^e for e in 8..52. */

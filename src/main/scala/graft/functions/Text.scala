@@ -73,17 +73,9 @@ object Text {
   def bpeishTokenCount(text: Column): Column =
     call_function("graft_bpeish_count", text)
 
-  /** Order-sensitive rolling fingerprint: left fold of token hashes,
-    * acc * 31 + xxhash64(token). Unlike the md5 content fingerprint this is
-    * incremental (a streaming tokenizer can maintain it) and distinguishes
-    * permutations of the same token multiset. xxhash64-based with wrapping
-    * long arithmetic, so no SQL oracle — pinned by spec; the scale
-    * default. */
-  def rollingFingerprint(text: Column): Column =
-    aggregate(tokens(text), lit(0L), (acc, t) => acc * 31 + xxhash64(t))
-
-  /** Oracle-able rolling fingerprint: the same left-fold shape with
-    * md5-derived 32-bit token hashes and mod-(1e9+7) arithmetic — every
+  /** Order-sensitive, oracle-able rolling fingerprint: a left fold of
+    * md5-derived 32-bit token hashes, acc * 131 + h32 in mod-(1e9+7)
+    * arithmetic, so permutations of the same token multiset differ. Every
     * intermediate stays below 2^63 (acc < 1e9+7, acc*131 + h32 < 1.4e11),
     * so engines that TRAP on BIGINT overflow (DuckDB) replay it exactly
     * instead of diverging on the wrap. Mirror:
@@ -145,8 +137,7 @@ object Text {
 
   /** Token n-grams of a projected token-array column as md5 keys,
     * deduplicated in-row — the unit of benchmark decontamination
-    * (q_decontaminate) and its streaming form (Streams.contaminationHits),
-    * single-sourced so batch and stream agree key-for-key. Guarded:
+    * (q_decontaminate). Guarded:
     * Spark's `sequence(1, m)` runs DESCENDING for m < 1 (DuckDB's `range`
     * is empty), so short docs must hit the empty branch explicitly.
     * Mirror: `list_distinct(list_transform(range(1, len(tk)-(n-2)),

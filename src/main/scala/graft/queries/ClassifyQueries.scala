@@ -120,7 +120,7 @@ object ClassifyQueries {
         s => s.getField("c")).as("cv"))
       .select(col("label").as("clabel"), col("cv"))
       .withColumn("cn", Vectors.normNative(col("cv")))
-    val scored = e.withColumn("vn", Vectors.normNative(col("v")))
+    val scored = CosineTopK.withNorm(e)
       .crossJoin(broadcast(cents))
       .select(col("vec_id"), col("label").as("true_label"), col("clabel"),
         Vectors.cosineFromNorms(col("v"), col("cv"), col("vn"), col("cn")).as("cos"))

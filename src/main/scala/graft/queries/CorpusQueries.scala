@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Similarity
+import graft.engine.{CosineTopK, Similarity}
 import graft.engine.Tables.t
 import graft.functions.{Text, Vectors}
 
@@ -1174,13 +1174,11 @@ object CorpusQueries {
           .select(col("doc_id"), col("lex_rk").cast("long").as("lex_rk"))
         // dense top-50: one corpus scan vs the broadcast 1-row query vector
         val emb = t(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .select(Vectors.asDouble(col("embedding")).as("qv"))
-          .withColumn("qn", Vectors.normNative(col("qv")))
-        val dense = emb.filter(col("vec_id") =!= 0)
+        val q = CosineTopK.withQueryNorm(emb.filter(col("vec_id") === 0)
+          .select(Vectors.asDouble(col("embedding")).as("qv")))
+        val dense = CosineTopK.withNorm(emb.filter(col("vec_id") =!= 0)
           .select(col("vec_id").as("doc_id"),
-            Vectors.asDouble(col("embedding")).as("v"))
-          .withColumn("vn", Vectors.normNative(col("v")))
+            Vectors.asDouble(col("embedding")).as("v")))
           .crossJoin(broadcast(q))
           .select(col("doc_id"),
             Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn"))

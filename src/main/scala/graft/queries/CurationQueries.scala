@@ -485,10 +485,11 @@ object CurationQueries {
     * removed, changed, or same by comparing content fingerprints across a
     * full-outer join on the id. At 100 TB this is how a corpus updates
     * without reprocessing: only `added`/`changed` flow into the cleaning
-    * pipeline. Snapshots are derived deterministically from the table so
-    * the oracle can replay them: the old snapshot drops `doc_id % 11 = 3`
-    * (later "added") and the new one rewrites text for `doc_id % 13 = 2`
-    * ("changed") and drops `doc_id % 17 = 5` ("removed").
+    * pipeline. Both snapshots are derived deterministically from the
+    * table so the oracle can replay them: the old snapshot drops
+    * `doc_id % 11 = 3` (later "added") and the new one rewrites text for
+    * `doc_id % 13 = 2` ("changed") and drops `doc_id % 17 = 5`
+    * ("removed").
     *
     * Shape: two filtered scans, per-row md5 fingerprints, ONE keyed
     * full-outer join, no aggregation at all before the presentation sort. */

@@ -455,8 +455,7 @@ object ProfileQueries {
     * rows-per-key, mean (x100, exact integer), and the share of rows held
     * by the top-10 keys in exact ppm. The diagnostic that decides whether
     * a key needs salting or AQE skew-join handling BEFORE the 100-TB
-    * shuffle runs — the operational companion of engine/Skew.scala's
-    * salted operators.
+    * shuffle runs.
     *
     * Shape: per key, one map-side-combined COUNT; per report row, one
     * bounded TakeOrdered(10) for the top-share — ties at the boundary sum
@@ -718,8 +717,9 @@ object ProfileQueries {
     * are `GREATEST(n, 1)` so a type whose rows all fall in one epoch
     * yields an explicit ks_ppm (vs the other epoch's empty CDF); its
     * threshold divides by zero, so thresh_ppm and drifted read NULL in
-    * both engines. The fold is [[graft.streaming.Streams.ksFold]], shared
-    * with the streamed registers.
+    * both engines. The bucket ([[graft.streaming.Streams.ksBucket]]) and
+    * the fold ([[graft.streaming.Streams.ksFold]]) are shared with the
+    * streamed registers.
     *
     * Shape at 100 TB: two map-side-combined aggregations ((type, bucket,
     * epoch) counts, per-type totals broadcast back), then a per-type
@@ -762,9 +762,7 @@ object ProfileQueries {
     val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
       max(unix_micros(col("ts"))).as("hi"))
     val v = ev.crossJoin(broadcast(b)) // 1-row epoch cut, the q_drift_chisq shape
-      .select(col("event_type"),
-        least(expr("GREATEST(CAST(ROUND(value * 100) AS BIGINT), 0) DIV 200"),
-          lit(255L)).as("bucket"),
+      .select(col("event_type"), graft.streaming.Streams.ksBucket.as("bucket"),
         when(unix_micros(col("ts")) * 2 < col("lo") + col("hi"), 0L)
           .otherwise(1L).as("epoch"))
     graft.streaming.Streams.ksFold(v.groupBy(col("event_type"), col("bucket"))

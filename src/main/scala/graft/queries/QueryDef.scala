@@ -20,8 +20,4 @@ object Q {
   def apply(name: String, oracle: String)(
       build: (SparkSession, String) => DataFrame): Q =
     Q(name, build, Some(oracle))
-
-  /** Non-SQL-expressible query → driver records a rows-only check. */
-  def noOracle(name: String)(build: (SparkSession, String) => DataFrame): Q =
-    Q(name, build, None)
 }

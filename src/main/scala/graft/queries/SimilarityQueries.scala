@@ -199,11 +199,10 @@ object SimilarityQueries {
     val planted = emb.select(col("vec_id"), col("label"), col("embedding"))
       .unionAll(emb.filter(col("vec_id") % 25 === 0)
         .select((col("vec_id") + 100000).as("vec_id"), col("label"), col("embedding")))
-    val e = planted.select(col("vec_id"), col("label"),
-      Vectors.asDouble(col("embedding")).as("v"))
-      .withColumn("n", Vectors.normNative(col("v")))
-    e.select(col("vec_id").as("d1"), col("label"), col("v").as("v1"), col("n").as("n1"))
-      .join(e.select(col("vec_id").as("d2"), col("label"), col("v").as("v2"), col("n").as("n2")),
+    val e = CosineTopK.withNorm(planted.select(col("vec_id"), col("label"),
+      Vectors.asDouble(col("embedding")).as("v")))
+    e.select(col("vec_id").as("d1"), col("label"), col("v").as("v1"), col("vn").as("n1"))
+      .join(e.select(col("vec_id").as("d2"), col("label"), col("v").as("v2"), col("vn").as("n2")),
         Seq("label"))
       .filter(col("d1") < col("d2"))
       .select(col("d1"), col("d2"),
@@ -369,8 +368,7 @@ object SimilarityQueries {
     * exist at every scale. Fully oracle-checked: slot hashes are 4-char hex
     * windows of md5 digests and the band join key is a plain concat, both
     * reproducible in DuckDB, so the signatures, banding, hot-bucket skip,
-    * and candidate pairs all hash-match. The xxhash64 fast path stays
-    * available as Similarity.minhashSignatures (SimilaritySpec). */
+    * and candidate pairs all hash-match. */
   val minhashNearDup: Q = Q(
     "q_minhash_neardup",
     "WITH " + minhashPairCtes + "\nSELECT d1, d2 FROM pairs\nORDER BY d1, d2") {
@@ -1238,13 +1236,12 @@ object SimilarityQueries {
       val ranks = graft.engine.Ivf.learnedCellRanks(planted, "vec_id",
         "embedding", dim = dim, nPlanes = nPlanes, table = 1)
         .localCheckpoint(eager = true)
-      val asg = ranks.filter(col("rk") === 1)
-        .select(col("vec_id"), col("cell"), col("v"))
-        .withColumn("n", Vectors.normNative(col("v")))
+      val asg = CosineTopK.withNorm(ranks.filter(col("rk") === 1)
+        .select(col("vec_id"), col("cell"), col("v")))
       val a = asg.select(col("vec_id").as("d1"), col("cell"),
-        col("v").as("v1"), col("n").as("n1"))
+        col("v").as("v1"), col("vn").as("n1"))
       val b = asg.select(col("vec_id").as("d2"), col("cell"),
-        col("v").as("v2"), col("n").as("n2"))
+        col("v").as("v2"), col("vn").as("n2"))
       val rem = a.join(b, Seq("cell"))
         .filter(col("d1") < col("d2"))
         .select(col("d1"), col("d2"),
@@ -1678,12 +1675,10 @@ object SimilarityQueries {
       |  SELECT 3, vec_id, rel, pen, rel * 0.5 - pen * 0.5 FROM s3)
       |ORDER BY rank""".stripMargin) { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    val q = emb.filter(col("vec_id") === 0)
-      .select(Vectors.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", Vectors.normNative(col("qv")))
-    val cand = emb.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v"))
-      .withColumn("vn", Vectors.normNative(col("v")))
+    val q = CosineTopK.withQueryNorm(emb.filter(col("vec_id") === 0)
+      .select(Vectors.asDouble(col("embedding")).as("qv")))
+    val cand = CosineTopK.withNorm(emb.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v")))
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("v"), col("vn"),
         Vectors.cosineFromNorms(col("qv"), col("v"), col("qn"), col("vn"))

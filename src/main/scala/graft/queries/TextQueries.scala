@@ -265,8 +265,7 @@ object TextQueries {
 
   /** Multimodal plumbing check (graft.engine.Multimodal): media as opaque
     * binary payloads + typed metadata — the metadata aggregates here are the
-    * oracle-checkable face of the binary column (decode itself is the
-    * documented stub, covered by MultimodalSpec). */
+    * oracle-checkable face of the binary column. */
   val mediaMeta: Q = Q(
     "q_media_meta",
     """WITH media AS (
@@ -294,13 +293,10 @@ object TextQueries {
   /** FRAME-SAMPLE PLAN — for every video item, the evenly-spaced frame
     * indices (up to 8) and their byte offsets a frame extractor would
     * decode: the SAMPLING HALF of video feature extraction as engine
-    * data, oracle-checked, with the decode half in
-    * [[graft.engine.Multimodal.sampleFrames]] (mapPartitions, real codec
-    * or documented stub — MultimodalSpec). Keeping the plan queryable is
-    * the 100-TB posture: the planner decides WHICH bytes to touch from
-    * metadata alone (duration -> frame count at 30fps, payload length ->
-    * stride), so the binary column is never scanned to plan its own
-    * decode.
+    * data, oracle-checked. Keeping the plan queryable is the 100-TB
+    * posture: the planner decides WHICH bytes to touch from metadata
+    * alone (duration -> frame count at 30fps, payload length -> stride),
+    * so the binary column is never scanned to plan its own decode.
     *
     * Determinism: pure integer arithmetic end to end — frame count, slot
     * count, index striding (slot * n_frames DIV slots) and byte offsets
@@ -356,14 +352,11 @@ object TextQueries {
     * The testdata payloads are byte-luma stand-ins (UTF-8 text bytes, per
     * Multimodal.mediaFromDocuments), so the "luma" here is the character
     * code sequence — which makes the ENTIRE pipeline (pooling, hash,
-    * banding, Hamming verdicts) oracle-checkable in DuckDB. The real
-    * raster path is the same construction over 8x8 grid-pooled Rec.601
-    * luma ([[graft.engine.Codecs.aHash64]]) and is pinned by MultimodalSpec
-    * on crafted P6 frames (planted near-identical frames land within the
-    * same Hamming bound). Planted twins here: every 20th image doc gets an
-    * exact copy (+7500000, Hamming 0) and every 10th a one-character
-    * perturbation (+7000000, length-preserving so pooling windows align —
-    * a few bits flip), so near-dup pairs exist at every scale.
+    * banding, Hamming verdicts) oracle-checkable in DuckDB. Planted twins
+    * here: every 20th image doc gets an exact copy (+7500000, Hamming 0)
+    * and every 10th a one-character perturbation (+7000000,
+    * length-preserving so pooling windows align — a few bits flip), so
+    * near-dup pairs exist at every scale.
     *
     * Determinism: integer micro-unit cell means (sum*10^6 DIV window),
     * integer mean comparison (cell*64 > total — no division), integer band

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -537,9 +537,6 @@ private[streaming] class FunnelProcessor(steps: Seq[String])
   }
 }
 
-/** Running per-user aggregate carried across micro-batches. */
-final case class UserRunning(user_id: Long, n_events: Long, total: Double)
-
 /** Closed (or force-flushed) session emitted by the custom state machine. */
 final case class UserSession(user_id: Long, start_ms: Long, end_ms: Long,
     n_events: Long, total: Double)
@@ -563,12 +560,12 @@ private final case class TrajState(start_us: Long, last_us: Long,
     items: Seq[(Long, Long, String)])
 
 /** Spark 4 `transformWithState` form of the session machine ([[Streams
-  * .sessionizeTws]]): same semantics as [[Streams.sessionize]], written
-  * against the CURRENT arbitrary-state API — state lives in a NAMED,
-  * individually-evolvable `ValueState` variable on the RocksDB state store
-  * (the API's requirement), rather than the single opaque GroupState blob.
-  * At scale this is the shape that unlocks per-variable TTL, state-schema
-  * evolution, and the state data source for inspection. */
+  * .sessionizeTws]], folding with [[Streams.foldSession]]): state lives in
+  * a NAMED, individually-evolvable `ValueState` variable on the RocksDB
+  * state store (the API's requirement), rather than a single opaque
+  * GroupState blob. At scale this is the shape that unlocks per-variable
+  * TTL, state-schema evolution, and the state data source for
+  * inspection. */
 private[streaming] class SessionProcessor(gapMs: Long)
     extends StatefulProcessor[Long, StreamEvent, UserSession] {
   @transient private var session: ValueState[SessionState] = _
@@ -703,18 +700,6 @@ object Streams {
     * different orders in different operators. */
   private[streaming] def micros(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
-  /** Watermarked tumbling-window totals per event type: the streaming form
-    * of q_window_tumbling. Append-mode emits each window once its watermark
-    * passes; state for closed windows is evicted. */
-  def windowedTotals(events: DataFrame, watermark: String = "30 minutes",
-      window_ : String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total"))
-      .select(col("w.start").as("wstart"), col("event_type"),
-        col("n_events"), col("total"))
 
   /** Streaming OHLC bars — the incremental twin of q_ohlc_bars: 15-minute
     * watermarked tumbling windows per event_type with open/close as
@@ -867,12 +852,18 @@ object Streams {
     * (StreamingSpec). */
   def ksRegisters(events: DataFrame, loPlusHiUs: Long): DataFrame =
     events
-      .select(col("event_type"),
-        least(expr("CAST(ROUND(value * 100) AS BIGINT) DIV 200"), lit(255L))
-          .as("bucket"),
+      .select(col("event_type"), ksBucket.as("bucket"),
         when(unix_micros(col("ts")) * 2 < lit(loPlusHiUs), 0L).otherwise(1L)
           .as("epoch"))
       .groupBy("event_type", "bucket", "epoch").agg(count(lit(1)).as("cnt"))
+
+  /** q_ks_drift's value bucket, shared with [[ksRegisters]]: 2.0-wide
+    * bins of the cent-rounded `value`, clamped on BOTH sides to [0, 255],
+    * so a value of -2.0 or less lands in bucket 0 streamed and batch
+    * alike. */
+  def ksBucket: Column =
+    least(expr("GREATEST(CAST(ROUND(value * 100) AS BIGINT), 0) DIV 200"),
+      lit(255L))
 
   /** Fold a (event_type, bucket, epoch, cnt) register table into
     * q_ks_drift's output columns with [[ksFold]], the batch query's own
@@ -973,64 +964,6 @@ object Streams {
       .groupBy("k").agg(min(col("cs")).as("cms_estimate"))
   }
 
-  /** Streaming exact dedup on a content fingerprint — the incremental form
-    * of q_dedup_exact for a continuously-arriving corpus. State holds one
-    * entry per fingerprint seen; `dropDuplicatesWithinWatermark` bounds it
-    * by the event-time watermark (a duplicate arriving later than the
-    * watermark interval is not suppressed — the documented trade that keeps
-    * state finite on an unbounded stream; exact global dedup stays a batch
-    * op). */
-  def dedupByFingerprint(docs: DataFrame, watermark: String = "30 minutes"): DataFrame =
-    docs
-      .withWatermark("ts", watermark)
-      .withColumn("fp", graft.functions.Text.fingerprint(col("text")))
-      .dropDuplicatesWithinWatermark("fp")
-
-  /** Incremental near-dup candidates: each arriving doc is banded against a
-    * STATIC MinHash signature index (built batch-side with
-    * Similarity.minhashSignaturesMd5 + the same band layout). The streaming
-    * side's signature is a stateless per-row projection
-    * (Similarity.withMinhashSignature — no aggregation, so no watermark or
-    * state store involved) and the band join is a stream-static equi-join.
-    * Emits (doc_id, candidate_doc_id) pairs at-least-once — a pair agreeing
-    * on several bands is emitted once per band (a stateless operator cannot
-    * dedupe across bands without unbounded state; the downstream exact
-    * verify is idempotent per pair). */
-  def nearDupCandidates(docs: DataFrame, index: DataFrame, k: Int,
-      bands: Int): DataFrame = {
-    import graft.engine.Similarity
-    // both sides go through Similarity.bandKeyed so the streamed band
-    // layout matches the batch-built index slot-for-slot by construction
-    val key = (cols: Seq[org.apache.spark.sql.Column]) => concat_ws(",", cols: _*)
-    val streamKeyed = Similarity.bandKeyed(
-      Similarity.withMinhashSignature(docs, "text", k), "doc_id", k, bands, key)
-    val indexKeyed = Similarity
-      .bandKeyed(index.withColumnRenamed("doc_id", "candidate_doc_id"),
-        "candidate_doc_id", k, bands, key)
-    streamKeyed.join(indexKeyed, Seq("band", "bk"))
-      .filter(col("doc_id") =!= col("candidate_doc_id"))
-      .select("doc_id", "candidate_doc_id")
-  }
-
-  /** Incremental benchmark DECONTAMINATION: each arriving doc's md5 token
-    * n-gram keys ([[graft.functions.Text.ngramMd5Keys]] — the SAME keys as
-    * batch q_decontaminate, single-sourced) joined stream-static against the
-    * bounded benchmark key set (broadcast). Stateless per-row projection +
-    * stateless join — no watermark or state store — so it emits (doc_id,
-    * matched key) HIT rows; the per-doc ratio/verdict is a downstream
-    * aggregation (foreachBatch or the batch operator over the sink), which
-    * is where it belongs: a streaming group-by doc_id would hold unbounded
-    * state for a count that is final as soon as the doc's single row has
-    * passed. */
-  def contaminationHits(docs: DataFrame, benchKeys: DataFrame,
-      n: Int = 8): DataFrame =
-    docs
-      .select(col("doc_id"),
-        explode(graft.functions.Text.ngramMd5Keys(split(col("text"), " "), n))
-          .as("k"))
-      .join(broadcast(benchKeys.select(col("k"))), Seq("k"))
-      .select("doc_id", "k")
-
   /** Incremental SEMANTIC (embedding-space) decontamination: each arriving
     * vector (`vec_id`, `v` double[]) scored against the bounded benchmark
     * embedding set (`bid`, `qv` double[], broadcast) through the SAME
@@ -1039,10 +972,9 @@ object Streams {
     * stream and batch produce bit-identical cosines); emits (vec_id, bid,
     * cos) HIT rows for cos >= threshold. Stateless stream-static join — no
     * watermark or state store — and the per-vector argmax/verdict is a
-    * downstream aggregation, exactly where [[contaminationHits]] leaves the
-    * per-doc ratio: a streaming group-by vec_id would hold unbounded state
-    * for a max that is final as soon as the vector's |bench| rows have
-    * passed. */
+    * downstream aggregation: a streaming group-by vec_id would hold
+    * unbounded state for a max that is final as soon as the vector's
+    * |bench| rows have passed. */
   def semanticHits(vecs: DataFrame, bench: DataFrame,
       threshold: Double = 0.9): DataFrame =
     graft.engine.Similarity.benchCosineScores(vecs, bench)
@@ -1053,9 +985,7 @@ object Streams {
     * [[graft.functions.Text.curationGate]], so stream and batch verdicts
     * agree bit-for-bit) applied to each arriving document. Stateless
     * per-row projection — no watermark, no state store — because every
-    * gate is decidable from the document's own row; the one cross-corpus
-    * gate (benchmark contamination) is [[contaminationHits]]'s
-    * stream-static join, composed downstream exactly as in batch. */
+    * gate is decidable from the document's own row. */
   def curationGate(docs: DataFrame,
       blocklist: Seq[String] = graft.queries.CurationQueries.Blocklist): DataFrame = {
     val tk = split(col("text"), " ")
@@ -1108,32 +1038,16 @@ object Streams {
   def winnowFingerprints(docs: DataFrame): DataFrame =
     graft.engine.Similarity.winnowFingerprints(docs, "doc_id", "text")
 
-  /** Cross-batch running totals per user via mapGroupsWithState: minimal
-    * custom-state shape (the KeyValueGroupedDataset API the reference's
-    * per-country accumulations would need incrementally). */
-  def runningTotals(events: Dataset[StreamEvent]): Dataset[UserRunning] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[UserRunning, UserRunning](GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[StreamEvent], state: GroupState[UserRunning]) =>
-          val prev = state.getOption.getOrElse(UserRunning(user, 0L, 0.0))
-          val next = batch.foldLeft(prev)((acc, e) =>
-            acc.copy(n_events = acc.n_events + 1, total = acc.total + e.value))
-          state.update(next)
-          next
-      }
-  }
-
-  /** THE session state machine, single-sourced so the GroupState and
-    * StatefulProcessor forms cannot drift: applies a batch of events to the
-    * (possibly null) open session, returning the new open session (null =
-    * none) and the sessions closed along the way. A session closes when a
-    * later event arrives >= `gapMs` after the last one. The fold sorts at
-    * MICROSECOND precision ([[micros]]) — the same key FunnelProcessor
-    * uses — so same-millisecond events order identically across every
-    * stateful operator; the session fields themselves stay millisecond
-    * (the gap comparison is ms and the aggregates are commutative, so the
-    * finer sort can only pin, never change, a result). */
+  /** THE session state machine of [[SessionProcessor]]: applies a batch of
+    * events to the (possibly null) open session, returning the new open
+    * session (null = none) and the sessions closed along the way. A
+    * session closes when a later event arrives >= `gapMs` after the last
+    * one. The fold sorts at MICROSECOND precision ([[micros]]) — the same
+    * key FunnelProcessor uses — so same-millisecond events order
+    * identically across every stateful operator; the session fields
+    * themselves stay millisecond (the gap comparison is ms and the
+    * aggregates are commutative, so the finer sort can only pin, never
+    * change, a result). */
   private[streaming] def foldSession(user: Long, gapMs: Long,
       prev: SessionState, batch: Iterator[StreamEvent]): (SessionState, Seq[UserSession]) = {
     val sorted = batch.toSeq.sortBy(e => micros(e.ts))
@@ -1210,23 +1124,6 @@ object Streams {
         GroupStateTimeout.NoTimeout) {
         (user: Long, batch: Iterator[TrajEvent], state: GroupState[TrajState]) =>
           val (cur, closed) = foldTrajectory(user, gapMs, state.getOption.orNull, batch)
-          if (cur != null) state.update(cur) else state.remove()
-          closed.iterator
-      }
-  }
-
-  /** Custom sessionization via flatMapGroupsWithState: [[foldSession]] with
-    * the open session carried in GroupState — the stateful twin of
-    * q_window_session's batch gaps-and-islands. The still-open session
-    * stays in state across batches. */
-  def sessionize(events: Dataset[StreamEvent], gapMs: Long): Dataset[UserSession] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, UserSession](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[StreamEvent], state: GroupState[SessionState]) =>
-          val (cur, closed) = foldSession(user, gapMs, state.getOption.orNull, batch)
           if (cur != null) state.update(cur) else state.remove()
           closed.iterator
       }
@@ -1362,9 +1259,11 @@ object Streams {
         TimeMode.None(), OutputMode.Append())
   }
 
-  /** [[sessionize]] on the Spark 4 `transformWithState` API (see
-    * [[SessionProcessor]]). Requires the RocksDB state store provider,
-    * which [[graft.Session]] sets. */
+  /** Custom sessionization, the stateful twin of q_window_session's batch
+    * gaps-and-islands, on the Spark 4 `transformWithState` API (see
+    * [[SessionProcessor]]): the still-open session stays in state across
+    * batches. Requires the RocksDB state store provider, which
+    * [[graft.Session]] sets. */
   def sessionizeTws(events: Dataset[StreamEvent], gapMs: Long): Dataset[UserSession] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.{Bucketing, Tables}
+import graft.engine.{Sinks, Tables}
 
 /** Co-located join via bucketed tables: same key, same bucket count on both
   * sides -> the join plans with no shuffle exchange and produces the same
@@ -13,8 +13,10 @@ class BucketSpec extends SparkSpec {
     try {
       val orders = Tables.t(spark, sf, "orders")
       val customer = Tables.t(spark, sf, "customer")
-      Bucketing.writeBucketed(orders, "orders_b", "o_custkey", 8)
-      Bucketing.writeBucketed(customer, "customer_b", "c_custkey", 8)
+      Sinks.writeBucketed(orders, "orders_b", 8, Seq("o_custkey"))
+      Sinks.writeBucketed(customer, "customer_b", 8, Seq("c_custkey"))
+      def isShuffleFree(df: org.apache.spark.sql.DataFrame) =
+        !df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 
       val plainJoin = orders
         .join(customer, col("o_custkey") === col("c_custkey"))
@@ -23,11 +25,11 @@ class BucketSpec extends SparkSpec {
         .join(spark.table("customer_b"), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
 
-      assert(!Bucketing.isShuffleFree(
+      assert(!isShuffleFree(
         plainJoin.queryExecution.sparkSession.table("orders_b")
           .join(customer, col("o_custkey") === col("c_custkey"))),
         "half-bucketed join must still shuffle the plain side")
-      assert(Bucketing.isShuffleFree(
+      assert(isShuffleFree(
         spark.table("orders_b")
           .join(spark.table("customer_b"), col("o_custkey") === col("c_custkey"))),
         "bucketed-bucketed join must plan without exchanges")

@@ -1,200 +1,17 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.engine.{MediaItem, Multimodal, Tables}
+import graft.engine.{Multimodal, Tables}
 
-/** The decode is a documented stub; these tests pin the REAL parts — schema,
-  * determinism, batch plumbing, frame-sampling row algebra — so swapping in
-  * an actual codec only changes feature values, not shapes. */
+/** The media table's shape: an opaque binary payload next to typed
+  * metadata, the frame q_media_meta and q_frame_sample plan from. */
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val media = Multimodal
-    .mediaFromDocuments(Tables.t(spark, sf, "documents"))
-    .as[MediaItem]
-
   test("media schema: opaque binary payload + typed metadata") {
-    val df = media.toDF()
+    val df = Multimodal.mediaFromDocuments(Tables.t(spark, sf, "documents"))
     assert(df.schema("payload").dataType.typeName == "binary")
     assert(df.schema("kind").dataType.typeName == "string")
     val kinds = df.select("kind").distinct().as[String].collect().toSet
     assert(kinds == Set("image", "audio", "video"))
-  }
-
-  test("extractFeatures: fixed dim, deterministic, byte counts correct") {
-    val feats = Multimodal.extractFeatures(media, dim = 32).cache()
-    assert(feats.count() == media.count())
-    assert(feats.filter(size(col("feature")) =!= 32).isEmpty)
-    // deterministic: two runs agree exactly
-    val a = feats.orderBy("media_id").limit(5).collect()
-    val b = Multimodal.extractFeatures(media, dim = 32)
-      .orderBy("media_id").limit(5).collect()
-    a.lazyZip(b).foreach { (x, y) =>
-      assert(x.media_id == y.media_id && x.feature.sameElements(y.feature))
-    }
-    // n_bytes is the payload length (UTF-8 text here)
-    val doc = Tables.t(spark, sf, "documents")
-      .select(col("doc_id"), length(col("text")).as("len"))
-    val joined = feats.toDF().join(doc, col("media_id") === col("doc_id"))
-      .filter(col("n_bytes") =!= col("len"))
-    assert(joined.isEmpty)
-  }
-
-  test("resize rewrites metadata and shrinks payloads") {
-    val resized = Multimodal.resize(media.filter(col("kind") === "image").as[MediaItem],
-      targetW = 8, targetH = 8, dim = 16)
-    val rows = resized.collect()
-    assert(rows.nonEmpty)
-    assert(rows.forall(m => m.width == 8 && m.height == 8))
-    assert(rows.forall(_.payload.nonEmpty))
-  }
-
-  test("sampleFrames decodes a concatenated-P6 container frame by frame") {
-    import graft.engine.Codecs
-    import graft.engine.Codecs.Raster
-    // four 2x2 frames with distinct solid colors; stride 2 keeps frames 0, 2
-    def solid(r: Int, g: Int, b: Int) = Raster(2, 2,
-      Array.fill(4)(Array(r.toByte, g.toByte, b.toByte)).flatten)
-    val container = Codecs.encodePpmFrames(Seq(
-      solid(255, 0, 0), solid(0, 255, 0), solid(0, 0, 255), solid(255, 255, 255)))
-    val items = Seq(
-      MediaItem(1L, "video", container, 2, 2, 0, 0L),
-      // not a P6 container: must take the byte-chunk fallback, not vanish
-      MediaItem(2L, "video", "definitely not frames".getBytes, 0, 0, 0, 0L)).toDS()
-    val rows = Multimodal.sampleFrames(items, frameBytes = 8, stride = 2, dim = 4)
-      .collect().groupBy(_.media_id)
-    // container: decoded frames 0 and 2, real per-frame luma (solid red /
-    // solid blue on a 2x2 grid = 4 equal cells)
-    val byIdx = rows(1L).map(f => f.frame_idx -> f.feature).toMap
-    assert(byIdx.keySet == Set(0, 2))
-    byIdx(0).foreach(v => assert(math.abs(v - 0.299f) < 1e-6, s"red luma $v"))
-    byIdx(2).foreach(v => assert(math.abs(v - 0.114f) < 1e-6, s"blue luma $v"))
-    // fallback: 21 bytes / frameBytes=8 -> chunks 0,1,2, stride 2 -> 0 and 2
-    assert(rows(2L).map(_.frame_idx).sorted.sameElements(Array(0, 2)))
-  }
-
-  test("transcodeVideo resamples every container frame; junk passes through") {
-    import graft.engine.Codecs
-    import graft.engine.Codecs.Raster
-    def solid(r: Int, g: Int, b: Int) = Raster(2, 2,
-      Array.fill(4)(Array(r.toByte, g.toByte, b.toByte)).flatten)
-    val container = Codecs.encodePpmFrames(Seq(solid(255, 0, 0), solid(0, 0, 255)))
-    val junk = "not a container".getBytes
-    val items = Seq(
-      MediaItem(1L, "video", container, 2, 2, 0, 0L),
-      MediaItem(2L, "video", junk, 7, 9, 0, 0L)).toDS()
-    val out = Multimodal.transcodeVideo(items, targetW = 1, targetH = 1)
-      .collect().map(m => m.media_id -> m).toMap
-    val frames = Codecs.decodePpmFrames(out(1L).payload)
-    assert(out(1L).width == 1 && out(1L).height == 1)
-    assert(frames.size == 2)
-    assert(frames(0).rgb.sameElements(Array[Byte](255.toByte, 0, 0)))
-    assert(frames(1).rgb.sameElements(Array[Byte](0, 0, 255.toByte)))
-    // non-container: payload AND metadata untouched
-    assert(out(2L).payload.sameElements(junk) && out(2L).width == 7 && out(2L).height == 9)
-  }
-
-  test("q_frame_sample plan drives decodePlanned end to end on testdata") {
-    // the PLAN half: q_frame_sample's declared query — frame indices and
-    // byte offsets computed from metadata alone
-    val plan = graft.queries.TextQueries.frameSample.build(spark, sf).cache()
-    val planRows = plan.count()
-    assert(planRows > 0)
-    // the DECODE half touches exactly the planned (item, frame) pairs
-    val decoded = Multimodal.decodePlanned(media, plan, frameBytes = 256,
-      dim = 16).cache()
-    assert(decoded.count() == planRows,
-      "decoder must emit one row per planned frame, nothing more")
-    val unmatched = decoded.toDF().select(col("media_id"), col("frame_idx"))
-      .exceptAll(plan.select(col("media_id"), col("frame_idx").cast("int")))
-    assert(unmatched.isEmpty, "decoded a frame the plan never asked for")
-    assert(decoded.filter(size(col("feature")) =!= 16).isEmpty)
-    // deterministic across runs
-    val a = decoded.orderBy("media_id", "frame_idx").limit(5).collect()
-    val b = Multimodal.decodePlanned(media, plan, frameBytes = 256, dim = 16)
-      .orderBy("media_id", "frame_idx").limit(5).collect()
-    a.lazyZip(b).foreach { (x, y) =>
-      assert(x.media_id == y.media_id && x.frame_idx == y.frame_idx &&
-        x.feature.sameElements(y.feature))
-    }
-  }
-
-  test("decodePlanned at q_frame_sample offsets recovers the true P6 frames") {
-    import graft.engine.Codecs
-    import graft.engine.Codecs.Raster
-    // ten fixed-size 4x4 frames, each a distinct gray level -> every frame
-    // is exactly 59 bytes ("P6\n4 4\n255\n" header + 48 rgb bytes)
-    def gray(v: Int) = Raster(4, 4, Array.fill(48)(v.toByte))
-    val frames = (0 until 10).map(i => gray(20 * i + 15))
-    val container = Codecs.encodePpmFrames(frames)
-    val frameSize = Codecs.encodePpm(frames.head).length
-    assert(container.length == 10 * frameSize)
-    // q_frame_sample's integer arithmetic for this item: n_frames = 10
-    // (duration_ms = 334 -> 334*30 DIV 1000), n_bytes DIV n_frames = the
-    // exact per-frame size, 8 slots over 10 frames
-    val nFrames = 334L * 30 / 1000
-    assert(nFrames == 10)
-    val planned = (0 until 8).map { slot =>
-      val idx = slot * 10 / 8
-      (1L, idx, idx * (container.length / 10))
-    }
-    val plan = planned.toDF("media_id", "frame_idx", "byte_offset")
-    val items = Seq(MediaItem(1L, "video", container, 4, 4, 0, 334L)).toDS()
-    val got = Multimodal.decodePlanned(items, plan, frameBytes = frameSize,
-        dim = 16).collect().map(f => f.frame_idx -> f.feature).toMap
-    assert(got.keySet == planned.map(_._2).toSet)
-    // the planned byte windows land on true frame boundaries, so the
-    // decoder's output IS the real per-frame luma grid
-    for ((idx, feat) <- got) {
-      val want = java.util.Arrays.copyOf(
-        Codecs.grayFeatures(frames(idx), 4), 16)
-      assert(feat.sameElements(want), s"frame $idx decoded off-plan")
-    }
-  }
-
-  test("sampleFrames: every stride-th fixed-size chunk becomes a row") {
-    val frames = Multimodal.sampleFrames(media, frameBytes = 64, stride = 2, dim = 8)
-      .cache()
-    val counts = frames.groupBy("media_id").count()
-    val expected = media.filter(col("kind") === "video")
-      .select(col("media_id"),
-        ceil(ceil(length(col("payload")).cast("double") / 64) / 2).as("want"))
-    val bad = counts.join(expected, "media_id")
-      .filter(col("count") =!= col("want"))
-    assert(bad.isEmpty, s"frame counts off: ${bad.collect().mkString(",")}")
-    assert(frames.filter(size(col("feature")) =!= 8).isEmpty)
-  }
-
-  test("aHash64: planted near-identical P6 frames land within the Hamming bound") {
-    import graft.engine.Codecs
-    import graft.engine.Codecs.Raster
-    def gray(w: Int, h: Int)(f: (Int, Int) => Int): Raster = {
-      val rgb = new Array[Byte](w * h * 3)
-      for (y <- 0 until h; x <- 0 until w) {
-        val v = (f(x, y) & 0xff).toByte
-        val s = (y * w + x) * 3
-        rgb(s) = v; rgb(s + 1) = v; rgb(s + 2) = v
-      }
-      Raster(w, h, rgb)
-    }
-    // a "video": frame 1 = gradient scene, frame 2 = the SAME scene one
-    // tick later (a small local change — consecutive-frame near-dup),
-    // frame 3 = an unrelated scene (reversed gradient)
-    val base = gray(32, 32)((x, _) => x * 8)
-    val near = gray(32, 32)((x, y) => if (x < 4 && y < 4) x * 8 + 60 else x * 8)
-    val far = gray(32, 32)((x, _) => 248 - x * 8)
-    val container = Codecs.encodePpmFrames(Seq(base, near, far))
-    val frames = Codecs.decodePpmFrames(container)
-    assert(frames.size == 3)
-    val h = frames.map(Codecs.aHash64)
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    // determinism: re-decode hashes identically
-    assert(Codecs.decodePpmFrames(container).map(Codecs.aHash64) == h)
-    assert(ham(h(0), h(1)) <= 6,
-      s"near-identical frames must land within Hamming 6 (got ${ham(h(0), h(1))})")
-    assert(ham(h(0), h(2)) >= 20,
-      s"unrelated frames must be far (got ${ham(h(0), h(2))})")
-    // exact copy: Hamming 0 by construction
-    assert(ham(h(0), Codecs.aHash64(base)) == 0)
   }
 }

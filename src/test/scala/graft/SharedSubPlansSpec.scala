@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Each shared sub-plan is written once under src/main: the exact-cosine
-  * rank window ([[graft.engine.CosineTopK]]), its DuckDB `ranked` tail
+  * rank window and the query- and corpus-vector norm projections
+  * ([[graft.engine.CosineTopK]]), its DuckDB `ranked` tail
   * ([[graft.queries.SubPlans.rankedCtes]]), the hyperplane sign-bit SQL
   * ([[graft.functions.Vectors.planeBucketSql]]), the HLL rank ladder
   * ([[graft.functions.Sketch.HllRankSql]]) and the token-budget shard id
@@ -30,7 +31,11 @@ class SharedSubPlansSpec extends AnyFunSuite {
           "ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id)"),
       "the sign-bit list_zip template" -> """list_zip\([^,()]+, \[\$arr\]\)""",
       "the HLL rank ladder" -> java.util.regex.Pattern.quote("WHEN w >= "),
-      "the shard id" -> java.util.regex.Pattern.quote("PackShardStride +")))
+      "the shard id" -> java.util.regex.Pattern.quote("PackShardStride +"),
+      "the query-vector norm" ->
+        java.util.regex.Pattern.quote("""normNative(col("qv"))"""),
+      "the corpus-vector norm" ->
+        java.util.regex.Pattern.quote("""normNative(col("v"))""")))
     test(s"$what occurs once under src/main") {
       assert(occurrences(pattern) == 1)
     }

@@ -44,7 +44,7 @@ class SimilaritySpec extends SparkSpec {
       (2L, "spark shuffle partition join agg window scan filter"), // exact twin of 1
       (3L, "spark shuffle partition join agg window scan filters"), // near twin (1 token differs)
       (4L, "entirely different vocabulary nothing shared here at all")).toDF("doc_id", "text")
-    val sig = Similarity.minhashSignatures(docs, "doc_id", "text", k = 16)
+    val sig = Similarity.minhashSignaturesMd5(docs, "doc_id", "text", k = 16)
     assert(sig.columns.length == 17)
     val pairs = Similarity.lshCandidatePairs(sig, "doc_id", k = 16, bands = 8)
       .as[(Long, Long)].collect().toSet
@@ -53,26 +53,6 @@ class SimilaritySpec extends SparkSpec {
       "near-twin collisions must be consistent for identical docs")
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L),
       s"disjoint doc must never be a candidate: $pairs")
-  }
-
-  test("simhash16: identical -> distance 0; near twin close; disjoint far") {
-    val docs = Seq(
-      (1L, "spark shuffle partition join agg window scan filter stage task"),
-      (2L, "spark shuffle partition join agg window scan filter stage task"),
-      (3L, "spark shuffle partition join agg window scan filter stage tasks"),
-      (4L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10")).toDF("doc_id", "text")
-    val sh = Similarity.simhash16(docs, "doc_id", "text")
-    val m = sh.as[(Long, Long)].collect().toMap
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(m(a) ^ m(b))
-    assert(ham(1, 2) == 0)
-    assert(ham(1, 3) <= 6, s"near twin too far: ${ham(1, 3)}")
-    assert(ham(1, 4) > ham(1, 3), "disjoint doc should be farther than near twin")
-    // the column-level hamming matches the driver-side computation
-    val pairHam = sh.as("x").join(sh.as("y"),
-        col("x.doc_id") === 1 && col("y.doc_id") === 3)
-      .select(Similarity.hamming16(col("x.simhash"), col("y.simhash")))
-      .as[Int].head()
-    assert(pairHam == ham(1, 3))
   }
 
   test("hyperplane LSH: planted twin shares the bucket and is found top-1") {
@@ -177,28 +157,6 @@ class SimilaritySpec extends SparkSpec {
       assert(pairs.contains((1L, other)), s"missing ham<=3 pair (1,$other)")
     assert(!pairs.contains((1L, 5L)), "ham-4 pair must be filtered")
     assert(!pairs.contains((1L, 6L)), "ham-32 pair must be filtered")
-  }
-
-  test("multi-table LSH: tables are independent; twins collide in every table") {
-    val emb = graft.engine.Tables.t(spark, sf, "embeddings").limit(50)
-    val twin = emb.filter(col("vec_id") === 0)
-      .select(lit(9999L).as("vec_id"), col("embedding"), col("label"))
-    val multi = Similarity.lshIndexMulti(
-      emb.select("vec_id", "embedding", "label").unionAll(twin),
-      "vec_id", "embedding", dim = 64, nPlanes = 4, tables = 3)
-    // one row per (vector, table)
-    assert(multi.filter(col("vec_id") === 0L).count() == 3)
-    // identical vectors share the bucket in EVERY table
-    val perTable = multi.filter(col("vec_id").isin(0L, 9999L))
-      .groupBy("tbl").agg(countDistinct("bucket").as("nb"))
-      .select("nb").as[Long].collect()
-    assert(perTable.length == 3 && perTable.forall(_ == 1L))
-    // different tables use different hyperplanes: bucket assignments differ
-    // for at least one vector across tables (overwhelmingly likely at n=50)
-    val distinctAssignments = multi
-      .groupBy("vec_id").agg(countDistinct("bucket").as("nb"))
-      .filter(col("nb") > 1).count()
-    assert(distinctAssignments > 0, "tables must not be identical")
   }
 
   test("dropHotKeys equals the occupancy-window filter on skewed data") {

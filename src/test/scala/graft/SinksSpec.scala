@@ -5,27 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.engine.{Sinks, Tables}
 
-/** File-layout sink checks: row-bounded files and hive-partitioned layout
-  * with partition pruning on read-back. */
+/** File-layout sink checks: enforced-schema jsonl read-back and
+  * hive-partitioned layout with partition pruning on read-back. */
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
     Files.createTempDirectory("graft_sinks").toString
-
-  test("writeSized bounds rows per file and round-trips") {
-    val docs = Tables.t(spark, sf, "documents").select("doc_id", "lang")
-    val n = docs.count()
-    val dir = tmp()
-    Sinks.writeSized(docs, dir, maxRecordsPerFile = 17)
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(files.length >= (n / 17).toInt,
-      s"expected >= ${n / 17} files, got ${files.length}")
-    for (f <- files)
-      assert(spark.read.parquet(f.getPath).count() <= 17, s"${f.getName} too big")
-    assert(spark.read.parquet(dir).count() == n)
-  }
 
   test("jsonl round-trip with enforced schema; corrupt rows FAILFAST") {
     val docs = Tables.t(spark, sf, "documents")

@@ -14,101 +14,6 @@ class StreamingSpec extends SparkSpec {
 
   private def ev(user: Long, minute: Int, tpe: String = "click", v: Double = 1.0) =
     StreamEvent(user, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"), tpe, v)
-  private def evAt(user: Long, hhmm: String, v: Double) =
-    StreamEvent(user, Timestamp.valueOf(s"2024-01-01 $hhmm:00"), "click", v)
-
-  test("windowedTotals: append emits a window only after the watermark passes") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[StreamEvent]
-    val q = Streams.windowedTotals(in.toDF(), watermark = "30 minutes")
-      .writeStream.format("memory").queryName("wt").outputMode("append").start()
-    try {
-      in.addData(evAt(1, "10:05", 2.0), evAt(1, "10:20", 3.0))
-      q.processAllAvailable()
-      assert(spark.table("wt").count() == 0, "window must stay open before watermark")
-      // event at 12:00 pushes the watermark to 11:30 > [10:00,11:00) close
-      in.addData(evAt(1, "12:00", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("wt")
-        .select("wstart", "n_events", "total").as[(Timestamp, Long, Double)]
-        .collect().toSet
-      assert(rows == Set((Timestamp.valueOf("2024-01-01 10:00:00"), 2L, 5.0)), s"$rows")
-    } finally q.stop()
-  }
-
-  test("dedupByFingerprint: duplicates suppressed across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, String)]
-    val docs = in.toDF().toDF("doc_id", "ts", "text")
-    val q = Streams.dedupByFingerprint(docs, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try {
-      in.addData(
-        (1L, Timestamp.valueOf("2024-01-01 10:00:00"), "alpha beta"),
-        (2L, Timestamp.valueOf("2024-01-01 10:01:00"), "ALPHA BETA"), // dup (case-folded fp)
-        (3L, Timestamp.valueOf("2024-01-01 10:02:00"), "gamma"))
-      q.processAllAvailable()
-      // a duplicate arriving in a LATER batch, still inside the watermark
-      in.addData((4L, Timestamp.valueOf("2024-01-01 10:03:00"), "gamma"))
-      q.processAllAvailable()
-      val ids = spark.table("dedup").select("doc_id").as[Long].collect().toSet
-      assert(ids == Set(1L, 3L), s"got $ids")
-    } finally q.stop()
-  }
-
-  test("nearDupCandidates: streamed twin matched against the static index") {
-    implicit val ctx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    // deterministic sample (a bare limit() gives no guarantee WHICH rows,
-    // nor that separate evaluations pick the same ones)
-    val corpus = graft.engine.Tables.t(spark, sf, "documents")
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 50)
-    val index = graft.engine.Similarity
-      .minhashSignaturesMd5(corpus, "doc_id", "text", k = 16)
-    val twinText = corpus.filter(col("doc_id") === 1)
-      .select("text").as[String].head()
-    val in = MemoryStream[(Long, String)]
-    val q = Streams.nearDupCandidates(
-        in.toDF().toDF("doc_id", "text"), index, k = 16, bands = 8)
-      .writeStream.format("memory").queryName("neardup").outputMode("append").start()
-    try {
-      in.addData((5001L, twinText + " twinmarker"), (5002L, "zzz qqq xxx"))
-      q.processAllAvailable()
-      val got = spark.table("neardup")
-        .select("doc_id", "candidate_doc_id").as[(Long, Long)].collect().toSet
-      assert(got.contains((5001L, 1L)), s"twin not matched: $got")
-    } finally q.stop()
-  }
-
-  test("contaminationHits: streamed benchmark copy flags, splice partially, clean doc silent") {
-    implicit val ctx = spark.sqlContext
-    import org.apache.spark.sql.functions.{col, explode, split}
-    import graft.functions.Text
-    val bench = graft.engine.Tables.t(spark, sf, "documents")
-      .select(col("doc_id"), col("text")).filter(col("doc_id") === 0)
-    val benchKeys = bench
-      .select(explode(Text.ngramMd5Keys(split(col("text"), " "), 8)).as("k"))
-      .distinct()
-    val benchText = bench.select("text").as[String].head()
-    val nBenchKeys = benchKeys.count()
-    val in = MemoryStream[(Long, String)]
-    val q = Streams.contaminationHits(in.toDF().toDF("doc_id", "text"), benchKeys)
-      .writeStream.format("memory").queryName("decon").outputMode("append").start()
-    try {
-      in.addData(
-        (9001L, benchText),                                  // verbatim copy
-        (9002L, "p q r s t u v w x y z " + benchText),       // splice
-        (9003L, "aa bb cc dd ee ff gg hh ii jj kk ll"))      // disjoint
-      q.processAllAvailable()
-      val hits = spark.table("decon").select("doc_id", "k")
-        .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.length)
-      assert(hits.getOrElse(9001L, 0) == nBenchKeys,
-        "verbatim copy must hit every benchmark key exactly once")
-      assert(hits.getOrElse(9002L, 0) == nBenchKeys,
-        "a clean-prefix splice still contains every benchmark 8-gram")
-      assert(!hits.contains(9003L), "disjoint doc must emit no hits")
-    } finally q.stop()
-  }
 
   test("semanticHits: streamed copies flag against their bench source, clean vector silent") {
     implicit val ctx = spark.sqlContext
@@ -174,43 +79,6 @@ class StreamingSpec extends SparkSpec {
       assert(got(0) == ((1L, 1L, 0L, "mail me at [EMAIL]", "redacted")))
       assert(got(1) == ((2L, 0L, 1L, "call [PHONE] today", "redacted")))
       assert(got(2) == ((3L, 0L, 0L, "nothing sensitive", "clean")))
-    } finally q.stop()
-  }
-
-  test("runningTotals: state accumulates across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[StreamEvent]
-    val q = Streams.runningTotals(in.toDS())
-      .writeStream.format("memory").queryName("rt").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(ev(1, 1, v = 10.0), ev(1, 2, v = 5.0), ev(2, 1, v = 1.0))
-      q.processAllAvailable()
-      in.addData(ev(1, 3, v = 2.5))
-      q.processAllAvailable()
-      val last = spark.table("rt").as[(Long, Long, Double)].collect()
-        .groupBy(_._1).map { case (u, rows) => u -> rows.maxBy(_._2) }
-      assert(last(1L) == ((1L, 3L, 17.5)), s"${last(1L)}")
-      assert(last(2L) == ((2L, 1L, 1.0)))
-    } finally q.stop()
-  }
-
-  test("sessionize: a gap closes the session; open sessions survive batches") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[StreamEvent]
-    val gapMs = 10 * 60 * 1000L
-    val q = Streams.sessionize(in.toDS(), gapMs)
-      .writeStream.format("memory").queryName("sess").outputMode("append").start()
-    try {
-      in.addData(ev(7, 0, v = 1.0), ev(7, 5, v = 2.0)) // one open session
-      q.processAllAvailable()
-      assert(spark.table("sess").count() == 0, "open session must not emit")
-      in.addData(ev(7, 30, v = 4.0)) // 25-min gap closes the first session
-      q.processAllAvailable()
-      val rows = spark.table("sess")
-        .as[(Long, Long, Long, Long, Double)].collect().toSeq
-      val start = Timestamp.valueOf("2024-01-01 10:00:00").getTime
-      val lastT = Timestamp.valueOf("2024-01-01 10:05:00").getTime
-      assert(rows == Seq((7L, start, lastT + gapMs, 2L, 3.0)), s"$rows")
     } finally q.stop()
   }
 
@@ -365,6 +233,37 @@ class StreamingSpec extends SparkSpec {
         .as[(String, Double, java.sql.Timestamp)].collect().toIndexedSeq)
       q.processAllAvailable()
       val streamed = rows(Streams.ksOf(spark.table("ksregs_empty_epoch")))
+      assert(streamed == batch, s"streamed KS $streamed != batch $batch")
+    } finally q.stop()
+  }
+
+  test("ksRegisters: a value of -2.0 or less lands in bucket 0 streamed and batch alike") {
+    implicit val ctx = spark.sqlContext
+    import org.apache.spark.sql.functions.{col, max, min, unix_micros}
+    def at(day: Int, tpe: String, v: Double) =
+      (tpe, v, Timestamp.valueOf(f"2024-01-$day%02d 10:00:00"))
+    // click's first-epoch values are negative: clamped, they share bucket
+    // 0 with the second epoch's 0.5s, so the batch KS gap is 0
+    val d = java.nio.file.Files.createTempDirectory("graft-ks-negative").toString
+    Seq(at(1, "click", -2.5), at(2, "click", -2.0), at(8, "click", 0.5),
+      at(9, "click", 0.5), at(1, "view", 3.0), at(9, "view", 5.0))
+      .toDF("event_type", "value", "ts").write.parquet(s"$d/events.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    val batch = rows(graft.queries.ProfileQueries.ksDrift.build(spark, d))
+    assert(batch.exists(r => r.head == "click" && r(3) == 0L), s"$batch")
+    val ev = graft.engine.Tables.t(spark, d, "events")
+    val mm = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
+    val in = MemoryStream[(String, Double, java.sql.Timestamp)]
+    val q = Streams.ksRegisters(in.toDF().toDF("event_type", "value", "ts"),
+        mm.getLong(0) + mm.getLong(1))
+      .writeStream.format("memory").queryName("ksregs_negative")
+      .outputMode(OutputMode.Complete()).start()
+    try {
+      in.addData(ev.select(col("event_type"), col("value"), col("ts"))
+        .as[(String, Double, java.sql.Timestamp)].collect().toIndexedSeq)
+      q.processAllAvailable()
+      val streamed = rows(Streams.ksOf(spark.table("ksregs_negative")))
       assert(streamed == batch, s"streamed KS $streamed != batch $batch")
     } finally q.stop()
   }
@@ -566,8 +465,13 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.write(inDir.resolve(name),
         lines.mkString("\n").getBytes("UTF-8"))
     def runOnce(): Unit = {
+      import org.apache.spark.sql.functions.col
       val src = spark.readStream.schema(schema).json(inDir.toString)
-      val q = Streams.dedupByFingerprint(src)
+      // exact dedup on q_dedup_exact's content fingerprint, its state
+      // bounded by the watermark
+      val q = src.withWatermark("ts", "30 minutes")
+        .withColumn("fp", graft.functions.Text.fingerprint(col("text")))
+        .dropDuplicatesWithinWatermark("fp")
         .select("doc_id", "text", "fp")
         .writeStream.format("parquet")
         .option("path", outDir)
@@ -1097,13 +1001,17 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("the same transform runs in batch mode (unified API)") {
-    val batch = Seq(evAt(1, "10:05", 2.0), evAt(1, "10:20", 3.0), evAt(2, "11:05", 7.0))
-      .toDF()
-    val out = Streams.windowedTotals(batch)
-      .orderBy("wstart").as[(Timestamp, String, Long, Double)].collect().toSeq
+    val batch = Seq(
+      (1L, Timestamp.valueOf("2024-01-01 10:05:00"), "click", 2.0),
+      (2L, Timestamp.valueOf("2024-01-01 10:10:00"), "click", 3.0),
+      (3L, Timestamp.valueOf("2024-01-01 11:05:00"), "click", 7.0))
+      .toDF("event_id", "ts", "event_type", "value")
+    val out = Streams.ohlcBars(batch).orderBy("wstart")
+      .as[(Timestamp, String, Long, Double, Double, Double, Double)]
+      .collect().toSeq
     assert(out == Seq(
-      (Timestamp.valueOf("2024-01-01 10:00:00"), "click", 2L, 5.0),
-      (Timestamp.valueOf("2024-01-01 11:00:00"), "click", 1L, 7.0)))
+      (Timestamp.valueOf("2024-01-01 10:00:00"), "click", 2L, 2.0, 3.0, 2.0, 3.0),
+      (Timestamp.valueOf("2024-01-01 11:00:00"), "click", 1L, 7.0, 7.0, 7.0, 7.0)))
   }
 
   test("dailyMvState: streamed MV bit-matches q_incremental_agg at a mid-day split") {

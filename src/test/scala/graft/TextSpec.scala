@@ -85,13 +85,11 @@ class TextSpec extends SparkSpec {
   test("rolling fingerprint: deterministic, order-sensitive, content-sensitive") {
     val df = Seq(
       (1L, "a b c"), (2L, "a b c"), (3L, "c b a"), (4L, "a b d")).toDF("id", "text")
-    for (fn <- Seq(Text.rollingFingerprint(_), Text.rollingFingerprintMd5(_))) {
-      val fp = df.select(col("id"), fn(col("text")).as("fp"))
-        .as[(Long, Long)].collect().toMap
-      assert(fp(1L) == fp(2L), "same text, same fingerprint")
-      assert(fp(1L) != fp(3L), "permutation must change the fingerprint")
-      assert(fp(1L) != fp(4L), "content change must change the fingerprint")
-    }
+    val fp = df.select(col("id"), Text.rollingFingerprintMd5(col("text")).as("fp"))
+      .as[(Long, Long)].collect().toMap
+    assert(fp(1L) == fp(2L), "same text, same fingerprint")
+    assert(fp(1L) != fp(3L), "permutation must change the fingerprint")
+    assert(fp(1L) != fp(4L), "content change must change the fingerprint")
     // the mod-prime mirrorable form stays inside its modulus
     val md5Fps = df.select(Text.rollingFingerprintMd5(col("text")))
       .as[Long].collect()

@@ -183,13 +183,6 @@ class TimeSeriesSpec extends SparkSpec {
     assert(interp(clean) == clean.map(_.get))
   }
 
-  test("lagDiff: first row null, rest are deltas") {
-    val df = Seq((1, 10.0), (2, 13.0), (3, 11.5)).toDF("pos", "x")
-    val out = df.withColumn("d", TimeSeries.lagDiff(col("x"), Seq.empty, Seq(col("pos"))))
-      .orderBy("pos").select("d").collect().map(r => Option(r.get(0)))
-    assert(out.toSeq == Seq(None, Some(3.0), Some(-1.5)))
-  }
-
   test("cumSum: exact running total (decimal-backed)") {
     val df = Seq((1, 1.1), (2, 2.2), (3, 3.3)).toDF("pos", "x")
     val out = df.withColumn("c", TimeSeries.cumSum(col("x"), Seq.empty, Seq(col("pos"))))
@@ -212,8 +205,5 @@ class TimeSeriesSpec extends SparkSpec {
     val out = TimeSeries.tailSlice(df, 3, Seq.empty, Seq(desc("pos")))
       .orderBy("pos").as[(Int, Double)].collect().toSeq
     assert(out == Seq((4, 4.0), (5, 5.0), (6, 6.0)))
-    val d = df.withColumn("d", TimeSeries.lagDiff(col("x"), Seq.empty, Seq(desc("pos"))))
-      .orderBy("pos").select("d").collect().map(r => Option(r.get(0)))
-    assert(d.toSeq == Seq(Some(-1.0), Some(-1.0), Some(-1.0), Some(-1.0), Some(-1.0), None))
   }
 }
