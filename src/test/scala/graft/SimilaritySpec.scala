@@ -159,6 +159,31 @@ class SimilaritySpec extends SparkSpec {
     assert(!pairs.contains((1L, 6L)), "ham-32 pair must be filtered")
   }
 
+  test("multi-table LSH: tables are independent; twins collide in every table") {
+    val emb = graft.engine.Tables.t(spark, sf, "embeddings").limit(50)
+    val twin = emb.filter(col("vec_id") === 0)
+      .select(lit(9999L).as("vec_id"), col("embedding"), col("label"))
+    val base = emb.select("vec_id", "embedding", "label").unionAll(twin)
+    // lshIndex's multi-table form: one `table` seed per table, unioned
+    val multi = (0 until 3).map(t =>
+        Similarity.lshIndex(base, "vec_id", "embedding", dim = 64, nPlanes = 4, table = t)
+          .withColumn("tbl", lit(t)))
+      .reduce(_ unionAll _)
+    // one row per (vector, table)
+    assert(multi.filter(col("vec_id") === 0L).count() == 3)
+    // identical vectors share the bucket in EVERY table
+    val perTable = multi.filter(col("vec_id").isin(0L, 9999L))
+      .groupBy("tbl").agg(countDistinct("bucket").as("nb"))
+      .select("nb").as[Long].collect()
+    assert(perTable.length == 3 && perTable.forall(_ == 1L))
+    // different tables use different hyperplanes: bucket assignments differ
+    // for at least one vector across tables (overwhelmingly likely at n=50)
+    val distinctAssignments = multi
+      .groupBy("vec_id").agg(countDistinct("bucket").as("nb"))
+      .filter(col("nb") > 1).count()
+    assert(distinctAssignments > 0, "tables must not be identical")
+  }
+
   test("dropHotKeys equals the occupancy-window filter on skewed data") {
     // the broadcast-anti-join guard must keep exactly the rows whose key
     // occurs <= maxOcc times — checked against the window form it replaced,

@@ -183,6 +183,15 @@ class TimeSeriesSpec extends SparkSpec {
     assert(interp(clean) == clean.map(_.get))
   }
 
+  test("lagDiff: first row null, rest are deltas") {
+    // W1 through lagDiffStitched: buckets pos DIV 2 = 0, 1, 1, so row 2 is
+    // its bucket's first row (stitched from bucket 0) and row 3 lags locally
+    val df = Seq((1, 10.0), (2, 13.0), (3, 11.5)).toDF("pos", "x")
+    val out = TimeSeries.lagDiffStitched(df, col("x"), expr("pos DIV 2"), col("pos"), "d")
+      .orderBy("pos").select("d").collect().map(r => Option(r.get(0)))
+    assert(out.toSeq == Seq(None, Some(3.0), Some(-1.5)))
+  }
+
   test("cumSum: exact running total (decimal-backed)") {
     val df = Seq((1, 1.1), (2, 2.2), (3, 3.3)).toDF("pos", "x")
     val out = df.withColumn("c", TimeSeries.cumSum(col("x"), Seq.empty, Seq(col("pos"))))
