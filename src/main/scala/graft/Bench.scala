@@ -1,11 +1,17 @@
 package graft
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.sfDir
+    // optional args = subset of query names to run (profiling loop); a
+    // subset run does NOT overwrite the BENCH.json artifact of record
+    val names = Harness.select(args.toSeq)
     val spark = Session(Session.cores)
+    // build the query map ONCE — Registry reconstructs every Q (SQL strings,
+    // md5 plane-sign tables) per access, which must not be timed per run
+    val queries = SparkEntry.queries
     // warm the JVM paths (parquet reader, codegen compiler, shuffle) once so
     // startup cost isn't attributed to whichever query happens to run first
-    try SparkEntry.queries.headOption.foreach(_._2(spark, sfDir).limit(1).count())
+    try queries.headOption.foreach(_._2(spark, sfDir).limit(1).count())
     catch { case _: Throwable => () }
     // noop sink materializes every row and column (count() would let
     // Catalyst prune projections and under-measure projection-heavy
@@ -20,47 +26,28 @@ object Bench {
     // (name -> error, all control characters stripped for JSON safety)
     // rather than silently timed on their failure path.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // build the query map ONCE — Registry reconstructs every Q (SQL strings,
-    // md5 plane-sign tables) per access, which must not be timed per run
-    val queries = SparkEntry.queries
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      } catch {
-        case t: Throwable =>
-          errors.getOrElseUpdate(name, t.getClass.getSimpleName + ": " +
-            String.valueOf(t.getMessage).replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(200))
-      }
-      (System.nanoTime() - t0) / 1e9
+    def once(name: String): Double = Harness.timed(queries(name)(spark, sfDir)) match {
+      case Right(s) => s
+      case Left(t) =>
+        errors.getOrElseUpdate(name, t.getClass.getSimpleName + ": " +
+          String.valueOf(t.getMessage).replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(200))
+        Double.NaN
     }
-    // optional args = subset of query names to run (profiling loop); a
-    // subset run does NOT overwrite the BENCH.json artifact of record
-    val names =
-      if (args.nonEmpty) {
-        val unknown = args.filterNot(queries.contains)
-        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-        args.toSeq
-      } else queries.keys.toSeq
     // per-query shuffle-WRITE bytes, measured once on the cold pass (bytes
     // are plan-determined and stable across runs, unlike wall time): the
     // scale-killer ledger — a query whose walls hide a regression on
     // local[32] still shows a >2x bytes jump between rounds
     // (BenchCoverageSpec flags it against the previous round's artifact).
-    // The tracker is read between shuffle-free sentinel jobs so async
-    // listener delivery can't bleed one query's stages into the next.
-    val tracker = new ScaleProbe.ShuffleTracker
-    spark.sparkContext.addSparkListener(tracker)
+    // Each cold run sits between two listener-bus drains, so no stage of
+    // one query is counted for the next.
+    val log = Harness.listen(spark)
     val shuffleBytes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val coldAll = names.map { n =>
-      ScaleProbe.sentinelJob(spark)
-      tracker.reset()
-      val t = once(n)
-      ScaleProbe.sentinelJob(spark)
-      shuffleBytes(n) = tracker.writeBytes
+      val (t, rec) = log.around(once(n))
+      shuffleBytes(n) = rec.shuffleWrite
       n -> t
     }.toMap
+    spark.sparkContext.removeSparkListener(log)
     val SteadyIters = 3
     val runs = (1 to SteadyIters).map(_ => names.map(n => n -> once(n)).toMap)
     def median(xs: Seq[Double]): Double = {

@@ -9,6 +9,7 @@ package graft
   * reuse can only remove work). */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
+    val names = Harness.select(args.toSeq)
     // 4 cores whatever the machine, so PLANS.md does not depend on it
     val spark = Session(4)
     // audit-only: with AQE on, the pre-execution plan is an unexpanded
@@ -17,7 +18,6 @@ object ExplainAudit {
     // conservative upper bound the audit wants.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val dir = "/root/testdata/sf0.01"
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     def audit(name: String): String = {
       val df = SparkEntry.queries(name)(spark, dir)
       val qe = df.queryExecution

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -370,38 +369,8 @@ object ScaleProbe {
     queries.SimilarityQueries.mrlRecallFor(spark, dir,
       col("vec_id") % 50 === 0 && col("vec_id") < Stride)
 
-  /** The listener-bus drain sentinel: a SHUFFLE-FREE job (single result
-    * stage over a 1-element RDD) whose stage-completed event marks the
-    * point where every event from preceding jobs has been delivered (the
-    * bus is FIFO). Shuffle-free matters: the sentinel's own stage adds
-    * ZERO bytes to a [[ShuffleTracker]], so drained stress counts are the
-    * measured query's alone — pinned by ScaleProbeSpec. */
-  private[graft] def sentinelJob(spark: SparkSession): Unit =
-    spark.sparkContext.parallelize(Seq(1), 1).foreach(_ => ())
-
-  /** Accumulates per-stage shuffle metrics for the stress block. Listener
-    * delivery is async — callers drain the bus through a sentinel job
-    * (see `drain` in main) before reading or resetting. */
-  private[graft] final class ShuffleTracker extends SparkListener {
-    @volatile var writeBytes = 0L
-    @volatile var readBytes = 0L
-    @volatile var maxStageWriteBytes = 0L
-    @volatile var stagesSeen = 0L
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        val w = m.shuffleWriteMetrics.bytesWritten
-        writeBytes += w
-        readBytes += m.shuffleReadMetrics.totalBytesRead
-        if (w > maxStageWriteBytes) maxStageWriteBytes = w
-      }
-      stagesSeen += 1
-    }
-    def reset(): Unit = { writeBytes = 0L; readBytes = 0L; maxStageWriteBytes = 0L }
-  }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.sfDir
     val runStress = sys.env.get("SPARK_GRAFT_STRESS")
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     val scaledDir = "target/scaleprobe"
@@ -419,19 +388,10 @@ object ScaleProbe {
     }
 
     val queries = SparkEntry.queries
+    def query(q: String)(dir: String): DataFrame = queries(q)(spark, dir)
     // a failing query must not abort the probe and discard the completed
     // measurements — it reports factor NaN and the run continues
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def timeOnce(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      catch {
-        case t: Throwable =>
-          if (failed.add(name))
-            System.err.println(s"[scale] $name FAILED on $dir: ${t.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
     // one discarded cold run (codegen/JIT), then the MIN of steady runs —
     // same protocol for base and scaled, so the FACTOR is load-robust.
     // Min, not median: the factor is a SHAPE measurement (how work grows
@@ -442,15 +402,19 @@ object ScaleProbe {
     // clean; Bench keeps median+spread for WALLS, where typical-case
     // latency is the quantity of interest.
     val SteadyIters = 3
-    def bench(name: String, dir: String): Double = {
-      timeOnce(name, dir)
-      (1 to SteadyIters).map(_ => timeOnce(name, dir)).min
-    }
+    def best(label: String, dir: String)(build: String => DataFrame): Double =
+      (0 to SteadyIters).map(_ => Harness.timed(build(dir)) match {
+        case Right(s) => s
+        case Left(t) =>
+          if (failed.add(label))
+            System.err.println(s"[scale] $label FAILED on $dir: ${t.getMessage}")
+          Double.NaN
+      }).tail.min
 
     val rows = (DocQueries ++ EmbQueries ++ EvQueries ++ StarQueries ++
       MultiQueries).map { q =>
-      val b = bench(q, sfDir)
-      val s = bench(q, scaledDir)
+      val b = best(q, sfDir)(query(q))
+      val s = best(q, scaledDir)(query(q))
       val factor = s / b
       System.err.println(f"[scale] $q%-24s base=$b%7.3fs x$Repl=$s%7.3fs factor=$factor%5.2f")
       (q, b, s, factor)
@@ -461,36 +425,21 @@ object ScaleProbe {
     }.mkString("\"queries\":{", ",", "}")
 
     // fixed-query-batch production shapes (see scaladoc): same protocol,
-    // same dirs, batch pinned to the base replica. A failure here must not
-    // abort the probe either — it lands in `failed` as fixed:<name> and
-    // the block simply omits that entry.
+    // same dirs, batch pinned to the base replica. A failure lands in
+    // `failed` as fixed:<name> and the block omits that entry.
     val fixedRows =
       Seq(("cosine_bruteforce", fixedBatchCosine _),
           ("ann_ivf_learned", fixedBatchIvf _),
           ("ann_pq", fixedBatchPq _),
           ("ann_ivfpq", fixedBatchIvfPq _),
           ("mrl_recall", fixedBatchMrl _)).flatMap { case (name, build) =>
-        try {
-          def benchFixed(dir: String): Double = {
-            def once(): Double = {
-              val t0 = System.nanoTime()
-              build(spark, dir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            }
-            once()
-            (1 to SteadyIters).map(_ => once()).min
-          }
-          val b = benchFixed(sfDir)
-          val s = benchFixed(scaledDir)
-          System.err.println(
-            f"[scale] fixed:$name%-18s base=$b%7.3fs x$Repl=$s%7.3fs factor=${s / b}%5.2f")
-          Some(f""""$name":{"base_s":$b%.3f,"x${Repl}_s":$s%.3f,"factor":${s / b}%.2f}""")
-        } catch {
-          case t: Throwable =>
-            failed.add(s"fixed:$name")
-            System.err.println(s"[scale] fixed:$name FAILED: ${t.getMessage}")
-            None
-        }
+        val label = s"fixed:$name"
+        val b = best(label, sfDir)(build(spark, _))
+        val s = best(label, scaledDir)(build(spark, _))
+        System.err.println(
+          f"[scale] $label%-24s base=$b%7.3fs x$Repl=$s%7.3fs factor=${s / b}%5.2f")
+        if (failed(label)) None
+        else Some(f""""$name":{"base_s":$b%.3f,"x${Repl}_s":$s%.3f,"factor":${s / b}%.2f}""")
       }
     val fixedJson = fixedRows.mkString(""","fixed_batch":{""", ",", "}")
 
@@ -498,68 +447,42 @@ object ScaleProbe {
       scaledDocuments(spark, sfDir, StressRepl)
         .write.mode("overwrite").parquet(s"$stressDir/documents.parquet")
       val nDocs = spark.read.parquet(s"$stressDir/documents.parquet").count()
-      val tracker = new ShuffleTracker
-      spark.sparkContext.addSparkListener(tracker)
-      // the listener bus is FIFO: once the sentinel job's stage-completed
-      // event lands in the tracker, every event from the preceding job has
-      // been delivered too — deterministic, unlike a fixed sleep. The
-      // sentinel is SHUFFLE-FREE (one result stage over a 1-element RDD),
-      // so draining adds ZERO bytes to the tracker and the recorded
-      // shuffle counts are the measured query's alone. Returns false —
-      // and says so on stderr — if the bus stalls past the 30s deadline,
-      // so under-counted metrics are distinguishable from real ones.
-      def drain(): Boolean = {
-        val before = tracker.stagesSeen
-        sentinelJob(spark)
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (tracker.stagesSeen == before && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        val ok = tracker.stagesSeen > before
-        if (!ok) System.err.println("[stress] WARN: listener-bus drain hit " +
-          "the 30s deadline without observing the sentinel stage — the " +
-          "adjacent entry's shuffle bytes may be under-reported")
-        ok
-      }
-      // stress failures get their own list and NO queries entry (timeOnce's
+      val log = Harness.listen(spark)
+      // stress failures get their own list and NO queries entry (the
       // shared `failed` set would retroactively disqualify the query's
       // 10x measurement above, which already completed fine)
       val stressFailed = scala.collection.mutable.LinkedHashSet.empty[String]
-      def noop(df: DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      // one stress entry: warm codegen/JIT on the base SF, drain + reset,
-      // run the stressed form once, drain, read the tracker. A drain
-      // timeout is recorded IN the entry (`drain_timed_out`) rather than
-      // silently folded into the numbers.
-      def measure(name: String, thunk: String => Unit): Option[String] =
-        try {
-          thunk(sfDir)
-          var timedOut = !drain()
-          tracker.reset()
-          val t0 = System.nanoTime()
-          thunk(stressDir)
-          val wall = (System.nanoTime() - t0) / 1e9
-          timedOut |= !drain()
-          System.err.println(f"[stress] $name%-20s wall=$wall%8.2fs " +
-            f"shufW=${tracker.writeBytes}%d maxStageW=${tracker.maxStageWriteBytes}%d" +
-            (if (timedOut) " DRAIN-TIMEOUT" else ""))
-          Some(f""""$name":{"wall_s":$wall%.2f,"shuffle_write_bytes":${tracker.writeBytes},""" +
-            f""""shuffle_read_bytes":${tracker.readBytes},""" +
-            f""""max_stage_shuffle_write_bytes":${tracker.maxStageWriteBytes}""" +
-            (if (timedOut) ""","drain_timed_out":true""" else "") + "}")
-        } catch {
-          case t: Throwable =>
+      // one stress entry: warm codegen/JIT on the base SF, then run the
+      // stressed form once between two listener-bus drains. The drain
+      // sentinel is shuffle-free, so the recorded shuffle counts are the
+      // measured query's alone; a drain timeout is recorded IN the entry
+      // (`drain_timed_out`) rather than silently folded into the numbers.
+      def measure(name: String, build: String => DataFrame): Option[String] = {
+        val warm = Harness.timed(build(sfDir))
+        val (run, rec) = log.around(warm.flatMap(_ => Harness.timed(build(stressDir))))
+        run match {
+          case Left(t) =>
             stressFailed.add(name)
             System.err.println(s"[stress] $name FAILED: ${t.getMessage}")
             None
+          case Right(wall) =>
+            val maxW = rec.stages.map(_.shuffleWrite).maxOption.getOrElse(0L)
+            System.err.println(f"[stress] $name%-20s wall=$wall%8.2fs " +
+              f"shufW=${rec.shuffleWrite}%d maxStageW=$maxW%d" +
+              (if (rec.drained) "" else " DRAIN-TIMEOUT"))
+            Some(f""""$name":{"wall_s":$wall%.2f,"shuffle_write_bytes":${rec.shuffleWrite},""" +
+              f""""shuffle_read_bytes":${rec.shuffleRead},""" +
+              f""""max_stage_shuffle_write_bytes":$maxW""" +
+              (if (rec.drained) "" else ""","drain_timed_out":true""") + "}")
         }
-      def runQ(q: String)(dir: String): Unit = noop(queries(q)(spark, dir))
-      val entries = StressQueries.flatMap(q => measure(q, runQ(q)))
+      }
+      val entries = StressQueries.flatMap(q => measure(q, query(q)))
       // events at the same 200x (20M rows): the per-user/per-window shapes
       // the 10x probe graded now measured at real volume too
       scaledEvents(spark, sfDir, StressRepl)
         .write.mode("overwrite").parquet(s"$stressDir/events.parquet")
       val nEvents = spark.read.parquet(s"$stressDir/events.parquet").count()
-      val evEntries = StressEvQueries.flatMap(q => measure(q, runQ(q)))
+      val evEntries = StressEvQueries.flatMap(q => measure(q, query(q)))
       // embeddings at 500x (1M vectors): the production ANN shapes — the
       // fixed-batch brute-force and learned-IVF forms (constant query
       // batch, cost linear in corpus size) plus q_ann_int8, whose growing
@@ -567,18 +490,18 @@ object ScaleProbe {
       scaledEmbeddings(spark, sfDir, StressEmbRepl)
         .write.mode("overwrite").parquet(s"$stressDir/embeddings.parquet")
       val nVectors = spark.read.parquet(s"$stressDir/embeddings.parquet").count()
-      val embEntries = Seq[(String, String => Unit)](
-        ("cosine_bruteforce", dir => noop(fixedBatchCosine(spark, dir))),
-        ("ann_ivf_learned", dir => noop(fixedBatchIvf(spark, dir))),
-        ("q_ann_int8", runQ("q_ann_int8")))
-        .flatMap { case (n, thunk) => measure(n, thunk) }
+      val embEntries = Seq[(String, String => DataFrame)](
+        ("cosine_bruteforce", fixedBatchCosine(spark, _)),
+        ("ann_ivf_learned", fixedBatchIvf(spark, _)),
+        ("q_ann_int8", query("q_ann_int8")))
+        .flatMap { case (n, build) => measure(n, build) }
       // star schema at 50x (~30M lineitem rows): the iterative graph
       // shapes and the keyed reconciliation join at real volume
       scaledStar(spark, sfDir, StressStarRepl).foreach { case (tbl, df) =>
         df.write.mode("overwrite").parquet(s"$stressDir/$tbl.parquet")
       }
       val nLineitem = spark.read.parquet(s"$stressDir/lineitem.parquet").count()
-      val starEntries = StressStarQueries.flatMap(q => measure(q, runQ(q)))
+      val starEntries = StressStarQueries.flatMap(q => measure(q, query(q)))
       s""","stress":{"replication":$StressRepl,"docs":$nDocs,""" +
         s""""events":$nEvents,"embeddings_replication":$StressEmbRepl,""" +
         s""""vectors":$nVectors,""" +

@@ -7,14 +7,13 @@ object Verify {
     // driver contract: (sfDir, outDir). Extra args = subset of query names
     // (builder-side iteration loop, same convention as Bench).
     val Array(sfDir, outDir) = args.take(2)
-    val subset = args.drop(2).toSet
+    val names = Harness.select(args.toSeq.drop(2))
     val spark = Session(Session.cores)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .foreach { case (name, fn) =>
+    val queries = SparkEntry.queries
+    for (name <- names) {
       System.err.println(s"[verify] running $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -32,9 +31,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => subset.isEmpty || subset(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val oracle = SparkEntry.oracleSql
+    val json = names.flatMap(k => oracle.get(k).map(v => s"${q(k)}: ${q(v)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -14,6 +14,16 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
+  /** The one session conf the testdata needs. Our entry points (Verify,
+    * Bench, test sessions) set it at session build; this fallback covers a
+    * driver-constructed session. Guarded so an already-configured session is
+    * never mutated mid-query (the value is a constant either way). */
+  def ensureNanosConf(spark: SparkSession): Unit =
+    if (!spark.conf.getOption(NanosKey).contains("true"))
+      spark.conf.set(NanosKey, "true")
+
+  val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** Lazy parquet scan for one table. Column pruning + predicate pushdown
     * reach the scan because this is a plain file-source relation.
     *
@@ -28,16 +38,6 @@ object Tables {
     * (session tz is UTC everywhere in this engine), so downstream queries
     * and `window()` see one type regardless of the file's vintage.
     */
-  /** The one session conf the testdata needs. Our entry points (Verify,
-    * Bench, test sessions) set it at session build; this fallback covers a
-    * driver-constructed session. Guarded so an already-configured session is
-    * never mutated mid-query (the value is a constant either way). */
-  def ensureNanosConf(spark: SparkSession): Unit =
-    if (!spark.conf.getOption(NanosKey).contains("true"))
-      spark.conf.set(NanosKey, "true")
-
-  val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       ensureNanosConf(spark)
@@ -77,12 +77,4 @@ object Tables {
     require(keys.nonEmpty, "spread needs deterministic hash keys")
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
   }
-
-  /** JSON-lines scan with an ENFORCED schema (pass an existing table's
-    * `.schema`): inferring it would cost a full extra pass over the data (a
-    * non-starter at scale) and can silently widen types between runs;
-    * FAILFAST surfaces corrupt rows instead of nulling them. */
-  def readJsonl(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).option("mode", "FAILFAST").json(path)
 }

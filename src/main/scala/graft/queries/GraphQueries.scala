@@ -292,12 +292,14 @@ object GraphQueries {
     * below 2^63; each DIV truncates at most 1 unit per edge per round,
     * a bounded, deterministic leak.
     *
-    * Shape at 100 TB: a fixed iteration count keeps this ONE Catalyst
-    * plan (no driver loop, no checkpoint barrier); each round is a
-    * shuffle on the destination key. For an open-ended iterate-to-
-    * convergence variant you would loop in the driver with
-    * localCheckpoint per round to cut lineage — documented, not needed
-    * for a fixed-depth rank. Every node in the edge set has degree >= 1
+    * Shape at 100 TB: a fixed iteration count keeps this free of a
+    * driver loop; each round is a shuffle on the destination key. The
+    * builder pins the symmetrized edge list `sym` and the degree table
+    * `deg` once (lazy localCheckpoint) because all three rounds read
+    * them; the ranks themselves are never pinned. For an open-ended
+    * iterate-to-convergence variant you would loop in the driver with
+    * localCheckpoint per round to cut lineage — not needed for a
+    * fixed-depth rank. Every node in the edge set has degree >= 1
     * by construction, so there are no dangling-mass corrections. */
   val pageRank: Q = Q(
     "q_pagerank",

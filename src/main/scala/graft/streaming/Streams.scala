@@ -706,12 +706,10 @@ object Streams {
     * min_by/max_by VALUE PICKS on the unique event_id (deterministic
     * whatever order micro-batches deliver rows in — the aggregate is
     * order-free, unlike a first/last-in-arrival-order bar). A closed
-    * window's row is bit-identical to the batch query's row for the same
-    * events (StreamingSpec proves it); state is one bar per open
-    * (window, type). The `total` column here is a plain double sum —
-    * streaming partial aggregation order is nondeterministic, so the
-    * batch query's Det decimal contract applies only where an oracle
-    * hash-compares; the OHLC fields themselves are exact picks. */
+    * window's row is bit-identical, on every column it emits, to the
+    * batch query's row for the same events (StreamingSpec proves it); the
+    * batch query's decimal `total` has no streaming twin. State is one
+    * bar per open (window, type). */
   def ohlcBars(events: DataFrame, watermark: String = "30 minutes"): DataFrame =
     events
       .withWatermark("ts", watermark)

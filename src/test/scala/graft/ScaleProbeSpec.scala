@@ -79,13 +79,14 @@ class ScaleProbeSpec extends SparkSpec {
   }
 
   test("drain sentinel is shuffle-free: zero bytes folded into drained counts") {
-    // the stress block's shuffle accounting is exact only because the
-    // drain sentinel's own stage writes nothing — guard the REAL sentinel
-    // (changing it back to e.g. range(1).count() adds a shuffle and
-    // silently re-introduces per-entry byte noise). Stages are filtered
-    // to the sentinel's callsite so concurrently-running suites on the
-    // shared session cannot pollute the assertion.
+    // the stress block's and Bench's shuffle accounting is exact only
+    // because the drain sentinel's own stage writes nothing — guard the
+    // REAL sentinel (changing it back to e.g. range(1).count() adds a
+    // shuffle). Stages are filtered to the sentinel's callsite in
+    // Harness.scala so other jobs on the shared session cannot pollute the
+    // assertion.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import scala.jdk.CollectionConverters._
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
     val l = new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
@@ -95,20 +96,20 @@ class ScaleProbeSpec extends SparkSpec {
       }
     }
     spark.sparkContext.addSparkListener(l)
+    // registered after `l` on the same bus queue, which hands each event to
+    // its listeners in registration order: once the drain has seen its
+    // sentinel stage, `l` has seen it too
+    val log = Harness.listen(spark)
     try {
-      ScaleProbe.sentinelJob(spark)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      def sentinelStages() = {
-        import scala.jdk.CollectionConverters._
-        seen.iterator.asScala.filter(_._1.contains("ScaleProbe.scala")).toSeq
-      }
-      while (sentinelStages().isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val stages = sentinelStages()
+      assert(log.drain(), "drain timed out")
+      val stages = seen.asScala.filter(_._1.startsWith("foreach at Harness.scala")).toSeq
       assert(stages.size == 1, s"expected the one sentinel stage, saw $stages")
       assert(stages.head._2 == 0 && stages.head._3 == 0,
         s"sentinel stage shuffled: $stages")
-    } finally spark.sparkContext.removeSparkListener(l)
+    } finally {
+      spark.sparkContext.removeSparkListener(log)
+      spark.sparkContext.removeSparkListener(l)
+    }
   }
 
   test("scaledEmbeddings refuses a base label space that would overlap replicas") {

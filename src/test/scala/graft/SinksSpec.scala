@@ -5,33 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.engine.{Sinks, Tables}
 
-/** File-layout sink checks: enforced-schema jsonl read-back and
-  * hive-partitioned layout with partition pruning on read-back. */
+/** File-layout sink check: hive-partitioned layout with partition pruning
+  * on read-back. */
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
     Files.createTempDirectory("graft_sinks").toString
-
-  test("jsonl round-trip with enforced schema; corrupt rows FAILFAST") {
-    val docs = Tables.t(spark, sf, "documents")
-      .select("doc_id", "lang", "n_chars")
-    val dir = tmp()
-    docs.write.mode("overwrite").json(dir)
-    val back = Tables.readJsonl(spark, dir, docs.schema)
-    assert(back.schema == docs.schema)
-    assert(back.count() == docs.count())
-    assert(back.agg(sum("n_chars")).head.getLong(0)
-      == docs.agg(sum("n_chars")).head.getLong(0))
-    // corrupt line -> FAILFAST surfaces it instead of nulling the row
-    val badDir = tmp()
-    Files.write(java.nio.file.Paths.get(badDir, "part-bad.json"),
-      "{\"doc_id\": \"not-a-number\", \"lang\": 3}\n".getBytes)
-    val ex = intercept[Exception] {
-      Tables.readJsonl(spark, badDir, docs.schema).collect()
-    }
-    assert(ex.getMessage != null)
-  }
 
   test("writePartitionedBy lays out hive partitions and prunes on read") {
     val docs = Tables.t(spark, sf, "documents").select("doc_id", "lang")

@@ -457,7 +457,7 @@ class StreamingSpec extends SparkSpec {
     val outDir = root.resolve("out").toString
     val cpDir = root.resolve("cp").toString
     java.nio.file.Files.createDirectories(inDir)
-    // same enforced-schema contract as Tables.readJsonl, incremental form
+    // enforced schema: no inference pass over the files, no widened types
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("ts", TimestampType),
       StructField("text", StringType)))

@@ -89,6 +89,9 @@ def main(sf_dir: str, out_dir: str) -> int:
             print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
+    if n_pass + n_fail == 0:
+        print(f"FAIL: {out_dir}/oracle_sql.json names no query; nothing was compared")
+        return 1
     return 1 if n_fail else 0
 
 
